@@ -4,32 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf: the default 100-entry codegen cache thrashes across
-      // a 60-query suite (several codegen units each), forcing janino
-      // recompiles on every timed rep
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE partition coalescing sizes post-shuffle partitions by
-      // COMPRESSED BYTES, but this engine's decomposition/window ops
-      // stack many CPU-heavy passes downstream of shuffles that
-      // compress to a few MB (two-long grid rows) — the coalescer
-      // collapsed those stages to 1-4 partitions and serialized them
-      // (ts_residual_cusum: 11.5 s coalesced vs 1.4 s not, round 16).
-      // At 32 shuffle partitions coalescing saves only sub-ms task
-      // scheduling, so it is off in every engine session; on a real
-      // cluster with TB-scale shuffles the byte model is accurate and
-      // the flag can be re-enabled.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // keep every job in the status store so per-query job counts
-      // (read via statusTracker job groups) never get evicted mid-run
-      .config("spark.ui.retainedJobs", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.QuietLogs.suppressWindowWarns()
+    val spark = Engine.session(cpus.toInt)
     // Force FULL evaluation of every output column: count() would let
     // Catalyst prune window/projection expressions that don't affect
     // cardinality, under-measuring expression-heavy queries. The noop
@@ -64,16 +39,26 @@ object Bench {
       }
       case None => 3
     }
+    // A rep that throws is never timed: a query that fails in 5 ms
+    // would read as a speedup. It records JSON null, its query is
+    // listed under "failed" and left out of the total, and the run
+    // exits 1 after printing its short stdout line.
+    def timed(label: String)(body: => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { body; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $label FAILED: $e"); None }
+    }
+    def json(t: Option[Double]): String = t.fold("null")(v => f"$v%.4f")
     val results = SparkEntry.queries.map { case (name, fn) =>
       val times = (1 to reps).map { rep =>
         if (rep == reps) spark.sparkContext.setJobGroup(s"bench:$name", name)
-        val t0 = System.nanoTime()
-        try { run(fn) } catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = timed(s"$name rep $rep")(run(fn))
         if (rep == reps) spark.sparkContext.clearJobGroup()
         dt
       }
-      name -> (times.min, jobsFor(s"bench:$name"))
+      val best = if (times.forall(_.isDefined)) Some(times.flatten.min) else None
+      name -> (best, jobsFor(s"bench:$name"))
     }
     // Noise index: 5 reps of one fixed, untouched control query AFTER
     // the whole basket, so every bench artifact carries its own
@@ -83,17 +68,10 @@ object Bench {
     // visible in-band). a1_totals_global: one scan + one tiny agg,
     // plan-stable since round 1.
     // A failed control run must NOT record its (fast) failure time as
-    // a noise sample — that reads as a suspiciously quiet box. Emit
-    // JSON null for the rep and log the exception instead.
+    // a noise sample — that reads as a suspiciously quiet box.
     val noiseControl = (1 to 5).map { rep =>
-      val t0 = System.nanoTime()
-      try {
-        run(SparkEntry.queries("a1_totals_global"))
-        f"${(System.nanoTime() - t0) / 1e9}%.4f"
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] noise_control rep $rep FAILED: $e")
-        "null"
-      }
+      json(timed(s"noise_control rep $rep")(
+        run(SparkEntry.queries("a1_totals_global"))))
     }
     val noiseJson = noiseControl.mkString("[", ",", "]")
     // Self-adjudication for one-rep baskets (the sf1 run): a heavy
@@ -102,32 +80,33 @@ object Bench {
     // doesn't. Re-run the N heaviest queries (by their basket time)
     // with 3 dedicated reps each AFTER the basket, so the artifact
     // carries its own interference measurement instead of needing a
-    // follow-up TimeOne session. Defaults: top-3 when reps == 1,
-    // off for multi-rep baskets (best-of-3 already absorbs it);
+    // follow-up `graft.Dev time` session. Defaults: top-3 when
+    // reps == 1, off for multi-rep baskets (best-of-3 already absorbs it);
     // SPARK_GRAFT_BENCH_RECHECK overrides the count (0 disables).
     val recheckN = sys.env.get("SPARK_GRAFT_BENCH_RECHECK")
       .flatMap(_.toIntOption).getOrElse(if (reps == 1) 3 else 0)
-    val recheckJson =
-      if (recheckN <= 0) "{}"
-      else results.toSeq.sortBy(-_._2._1).take(recheckN).map {
+    val recheck =
+      if (recheckN <= 0) Seq.empty
+      else results.toSeq.sortBy(-_._2._1.getOrElse(0.0)).take(recheckN).map {
         case (name, _) =>
-          val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            try { run(SparkEntry.queries(name)) }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] recheck $name FAILED: $e") }
-            (System.nanoTime() - t0) / 1e9
-          }
-          "\"" + name + "\":" + ts.map(t => f"$t%.4f")
-            .mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
+          name -> (1 to 3).map(rep =>
+            timed(s"recheck $name rep $rep")(run(SparkEntry.queries(name))))
+      }
+    val recheckJson = recheck.map { case (name, ts) =>
+      "\"" + name + "\":" + ts.map(json).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val failed = (results.toSeq.collect { case (k, (None, _)) => k } ++
+      recheck.collect { case (k, ts) if ts.exists(_.isEmpty) => k })
+      .distinct.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val qs = results.map { case (k, (v, _)) =>
+        s"\"" + k + "\":" + v.fold("null")(_.toString) }
       .mkString("{", ",", "}")
     val js = results.map { case (k, (_, j)) => s"\"" + k + "\":" + j }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val total = results.values.flatMap(_._1).sum
     val totalJobs = results.values.map(_._2).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"jobs":$js,"total_jobs":$totalJobs,"noise_control":$noiseJson,"recheck":$recheckJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"jobs":$js,"total_jobs":$totalJobs,"failed":$failedJson,"noise_control":$noiseJson,"recheck":$recheckJson,"sf":"$sfDir"}"""
     // the full per-query map lives ONLY in the file artifact: a
     // 76-query single-line JSON overflows captured-log tails, leaving
     // the driver-side artifact unparseable (round-7 BENCH_r07.json had
@@ -149,6 +128,7 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(stamped),
       (full + "\n").getBytes("UTF-8"))
     spark.stop()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"cpus":$cpus,"total_jobs":$totalJobs,"sf":"$sfDir","per_query":"$stamped"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"cpus":$cpus,"total_jobs":$totalJobs,"failed":$failedJson,"sf":"$sfDir","per_query":"$stamped"}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -304,8 +304,8 @@ object SparkEntry {
   }
 
   /** The t_prf_indexed fixture index, built once per sf dir and shared
-    * across bench warmup + timed reps (and TimeOne reps) in the same
-    * JVM — the queries-entry then times the bucket-pruned PROBE the
+    * across bench warmup + timed reps (and `graft.Dev time` reps) in the
+    * same JVM — the queries-entry then times the bucket-pruned PROBE the
     * operator demonstrates, not repeated index construction. Keyed by
     * the documents dir so different SFs never share an index. */
   private val prfIndexDirs =
@@ -1517,7 +1517,7 @@ object SparkEntry {
     // to demonstrate the ~0.5 s corpus-independent interactive probe,
     // and an in-query build made the bench row read 3.4-5.2 s of
     // fixture construction instead (round-15 verdict). Index-BUILD
-    // cost is priced separately by ScaleProbe's prf_index_build row.
+    // cost is not part of this row.
     "t_prf_indexed" -> ((s, dir) =>
       Retrieval.prfIndexTopK(s, prfIndexFor(s, dir), "doc_id",
         Seq("table", "hash"), k = 10)),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -24,18 +23,7 @@ object Verify {
     // semantics — see HazardsSpec's TZ-sweep pin). The driver gate
     // always runs the UTC default.
     val tz = sys.env.getOrElse("SPARK_GRAFT_TZ", "UTC")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // byte-proportional AQE coalescing serializes the engine\'s
-      // CPU-heavy stacked-window stages at bench data sizes (see
-      // Bench.scala for the measurement); off in every engine session
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", tz)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.QuietLogs.suppressWindowWarns()
+    val spark = Engine.session(cpus.toInt, tz)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

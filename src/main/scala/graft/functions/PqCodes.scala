@@ -66,10 +66,10 @@ object PqCodesKernel {
     val len = a.numElements()
     // quantize once; the subspace loops then read exact longs
     val q = new Array[Long](len)
-    val nn = new Array[Boolean](len)
+    val isNull = new Array[Boolean](len)
     var i = 0
     while (i < len) {
-      if (a.isNullAt(i)) nn(i) = true
+      if (a.isNullAt(i)) isNull(i) = true
       else q(i) = math.floor(a.getFloat(i).toDouble * 10000.0).toLong
       i += 1
     }
@@ -87,7 +87,7 @@ object PqCodesKernel {
         var dot = 0L
         var x = 0
         while (x < n) {
-          if (!nn(start + x)) dot += q(start + x) * c(x)
+          if (!isNull(start + x)) dot += q(start + x) * c(x)
           x += 1
         }
         val d = -2L * dot + norms(j)(k)

@@ -45,15 +45,4 @@ object VersionedState {
   def readLatest(s: SparkSession, root: String): Option[DataFrame] =
     versions(s, root).sorted.lastOption
       .map(v => s.read.parquet(s"$root/v=$v"))
-
-  /** Latest version strictly below `below` — the read a foreachBatch
-    * sink consuming its OWN state must use: on a crash replay the
-    * crashed attempt's `v=<batchId>` leftover may still exist, and
-    * reading it would hand the replay its own half-committed update as
-    * the base. (mergeCommit already merges from `< batchId`; this is
-    * the same bound for plain reads.) */
-  def readLatestBefore(s: SparkSession, root: String,
-                       below: Long): Option[DataFrame] =
-    versions(s, root).filter(_ < below).sorted.lastOption
-      .map(v => s.read.parquet(s"$root/v=$v"))
 }

@@ -927,8 +927,8 @@ object Embeddings {
     * the index listing skips unprobed directories deterministically.
     * DPP was measured falling back to a full-index scan on larger
     * inputs (AQE replaces the pruning subquery with `true` when its
-    * broadcast-reuse heuristic declines — ScaleProbe at 30× read the
-    * whole index under the pre-static-pruning build); a 100 TB index
+    * broadcast-reuse heuristic declines — a 30× multiplied corpus read
+    * the whole index under the pre-static-pruning build); a 100 TB index
     * cannot ride on that heuristic.
     * IvfIndexSpec pins files-read == probed cells' files. */
   def ivfTopKIndexed(model: IvfModel, spark: org.apache.spark.sql.SparkSession,

@@ -71,8 +71,7 @@ object FuzzyJoin {
       .otherwise(array().cast("array<string>"))
 
   /** Candidate pairs surviving the blocking filters, before the exact
-    * levenshtein verify — exposed so ScaleProbe can measure the
-    * candidate-to-naive ratio. Columns: a_id, b_id, a_s, b_s. */
+    * levenshtein verify. Columns: a_id, b_id, a_s, b_s. */
   private[graft] def candidates(df: DataFrame, idCol: String,
                                 strCol: String, maxDist: Int,
                                 q: Int): DataFrame = {
@@ -207,14 +206,10 @@ object FuzzyJoin {
     * to the unbounded form (spec-pinned).
     *
     * `q = 0` (the default) derives the gram width from the corpus via
-    * [[autoQ]]; pass q > 0 to pin it manually, or set
-    * `SPARK_GRAFT_FUZZY_Q` to override globally (probe harness). */
+    * [[autoQ]]; pass q > 0 to pin it manually. */
   def selfPairs(df: DataFrame, idCol: String, strCol: String,
                 maxDist: Int, q: Int = 0): DataFrame = {
-    val qq =
-      if (q > 0) q
-      else sys.env.get("SPARK_GRAFT_FUZZY_Q").map(_.trim.toInt)
-        .getOrElse(autoQ(df, strCol, maxDist))
+    val qq = if (q > 0) q else autoQ(df, strCol, maxDist)
     candidates(df, idCol, strCol, maxDist, qq)
       .withColumn("dist", levenshtein(col("a_s"), col("b_s"), maxDist))
       .filter(col("dist") >= 0)

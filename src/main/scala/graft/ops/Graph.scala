@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * graph with [[writeEdgeLayout]] (pre-degreed, src-bucketed) and
   * iterate with [[pageRankU6FromLayout]]: the per-iteration join then
   * reads the edge side exchange-free and only node-scale data ever
-  * shuffles (GraphSpec pins the plan; ScaleProbe measures it).
+  * shuffles (GraphSpec pins the plan).
   */
 object Graph {
 

@@ -78,19 +78,4 @@ object Synthetic {
           .otherwise(col(c).cast("long")))
     }
   }
-
-  /** Profile multiplier map (reference get_camera_profile semantics:
-    * EXTREME/HEAVY/ARTERIAL/RESIDENTIAL/DEFAULT classes scale the
-    * synthetic volume). */
-  val profileMultiplier: Map[String, Double] = Map(
-    "EXTREME" -> 2.0, "HEAVY" -> 1.5, "ARTERIAL" -> 1.2,
-    "RESIDENTIAL" -> 0.7, "DEFAULT" -> 1.0)
-
-  def withProfileScale(df: DataFrame, profileCol: String,
-                       valueCol: String): DataFrame = {
-    val m = typedlit(profileMultiplier)
-    df.withColumn(s"${valueCol}_scaled",
-      (col(valueCol).cast("double") *
-        coalesce(m(col(profileCol)), lit(1.0))).cast("long"))
-  }
 }

@@ -308,8 +308,8 @@ object TextDedup {
   }
 
   /** PPJoin candidate generation over an inverted index — exposed
-    * separately so ScaleProbe can audit the candidate count against
-    * the naive co-occurrence count. Emits distinct (a_id, b_id),
+    * separately so TextDedupSpec can audit the candidate count against
+    * the true pairs. Emits distinct (a_id, b_id),
     * a < b, superset of all pairs with jaccard >= minJ (prefix
     * lemma + length-ratio filter; see [[jaccardPairs]]). */
   private[graft] def prefixCandidates(sh: DataFrame, idCol: String,

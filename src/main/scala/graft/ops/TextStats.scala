@@ -78,18 +78,6 @@ object TextStats {
   def tokenCountWs(text: Column): Column =
     size(split(trim(text), "\\s+")).cast("long")
 
-  /** BPE-ish subword count: alphanumeric runs are split into 4-char
-    * subword units (ceil(len/4)) and each punctuation char is its own
-    * token — a cheap, deterministic proxy for a BPE tokenizer's token
-    * count (no vocab needed; useful for corpus size accounting). */
-  def tokenCountBpe(text: Column): Column = {
-    val words = TextDedup.tokens(text)
-    val sub = aggregate(words, lit(0L),
-      (acc, w) => acc + ceil(length(w).cast("double") / 4.0).cast("long"))
-    val punct = length(regexp_replace(text, "[a-zA-Z0-9\\s]+", "")).cast("long")
-    sub + punct
-  }
-
   /** Quality metrics: char count, token counts, mean token length,
     * punctuation ratio, stopword ratio, and a composite [0,1] score
     * (the reference has no text quality notion; this follows the usual

@@ -1893,7 +1893,7 @@ object Ingest {
     * `planesPerBand` is the COST dial (never a correctness one, since
     * every drop is exact-verified): it sets the band-key domain
     * (2^planesPerBand) and thus how fast buckets saturate. Measured
-    * (ScaleProbe `embsink`, 100 batches x 50 random unit vectors, all
+    * (round 11, 100 batches x 50 random unit vectors, all
     * admitted): at the default 8 the verify fan-out reaches 161 exact
     * cosines per new vector and per-batch wall time grows 1.9 -> 4.1 s;
     * at 15 (the max with bands=4 under the 60-bit signature) fan-out is

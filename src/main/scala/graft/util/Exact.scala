@@ -90,10 +90,6 @@ object Exact {
   def dsum6(c: Column): Column =
     (splitSum(units(c, 6)) * pow10Inv(6)).cast("double")
 
-  /** Exact average: exact sum / count, one double division (IEEE
-    * correctly rounded → engine-independent given identical inputs). */
-  def davg2(c: Column): Column = (dsum2(c) / count(c)).as("avg")
-
   /** Exact sum of a·b where both factors carry ≤2 decimals
     * (|a·b| ≤ ~9e8 per row for the 2^53 product bound — e.g. the
     * price·(1−discount) revenue kernel). */

@@ -39,21 +39,4 @@ object PlanMetrics {
     scanFilesRead(df).collect {
       case (loc, n) if loc.contains(pathPart) => n
     }.sum
-
-  /** Sum of the named SQL metric over every node of the EXECUTED plan
-    * (AQE-descended). Call after an action. Useful keys:
-    * "shuffleBytesWritten" (exchange write volume — what actually
-    * crossed a stage boundary), "dataSize" (broadcast/exchange payload
-    * size). Nodes without the metric contribute 0. */
-  def metricSum(df: DataFrame, metricName: String): Long = {
-    // a ReusedExchangeExec shares the original exchange node (and its
-    // SQLMetric objects) — dedup by node IDENTITY so a reused subtree
-    // counts its work once
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    allNodes(df.queryExecution.executedPlan)
-      .filter(seen.add)
-      .flatMap(_.metrics.get(metricName).map(_.value))
-      .sum
-  }
 }

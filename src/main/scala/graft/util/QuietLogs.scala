@@ -1,12 +1,13 @@
 package graft.util
 
-/** Shared log hygiene for the harness mains (Bench, Verify, AuditAll,
-  * ScaleProbe): every unpartitioned window in the library sits over a
-  * bounded post-aggregation frame (value-domain histogram, per-source
-  * rate table, per-type shares — each justified at its call site), so
-  * the per-task "No Partition Defined for Window operation" WARN is
-  * noise that floods gate logs and buries real warnings. Quieting it
-  * centrally keeps the correctness-gate output signal-only. */
+/** Shared log hygiene for every engine session (`graft.Engine.start`:
+  * Bench, Verify, Dev and the specs): every unpartitioned window in the
+  * library sits over a bounded post-aggregation frame (value-domain
+  * histogram, per-source rate table, per-type shares — each justified
+  * at its call site), so the per-task "No Partition Defined for Window
+  * operation" WARN is noise that floods gate logs and buries real
+  * warnings. Quieting it centrally keeps the correctness-gate output
+  * signal-only. */
 object QuietLogs {
   def suppressWindowWarns(): Unit =
     Seq("org.apache.spark.sql.execution.window.WindowExec",

@@ -1866,4 +1866,56 @@ class StreamingSpec extends SparkSpec {
       assert(s2 == e2, "after trigger 2")
     } finally q.stop()
   }
+
+  test("rebuilt line-dedup guard admits exactly a batch's unseen lines") {
+    // a pre-guard index of 1,000 admitted line hashes, migrated in place
+    val idx = java.nio.file.Files.createTempDirectory("graft_ldrb").toString + "/idx"
+    spark.range(1000L)
+      .select(unhex(md5(concat(lit("line"), col("id")))).as("_h"))
+      .write.parquet(s"$idx/b=0")
+    Ingest.rebuildLineDedupGuard(spark, idx,
+      expectedLines = 10000L, fpp = 0.01, prefixParts = 16)
+    assert(Ingest.readLineIndex(spark, idx).get.count() == 1000L)
+    // 200-line batch: half repeats of admitted lines, half fresh
+    val fib = spark.range(200L)
+      .select(col("id").as("doc_id"), lit(0).as("pos"),
+        when(col("id") < 100, concat(lit("line"), col("id")))
+          .otherwise(concat(lit("fresh"), col("id"))).as("line"))
+      .withColumn("_h", unhex(md5(col("line").cast("binary"))))
+      .withColumn("_h64", Ingest.h64FromMd5(col("_h")))
+      .withColumn("p", pmod(col("_h64"), lit(16)).cast("int"))
+    val bloom = Ingest.readLineBloom(spark, idx, below = 1L)
+    assert(bloom.isDefined, "rebuild must commit bloom state")
+    assert(Ingest.lineDedupAdmit(spark, idx, 1L, fib, bloom).count() == 100L)
+  }
+
+  test("rebuilt near-dup guard finds exactly the colliding docs of a batch") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ndrb").toString + "/idx"
+    def bandKeys(ids: org.apache.spark.sql.Column) =
+      ops.TextDedup.md5Hash60(concat(ids, lit("b"), col("band")))
+    spark.range(1000L)
+      .select(col("id"), explode(sequence(lit(0), lit(3))).as("band"))
+      .select(col("band"), bandKeys(col("id")).as("band_h"))
+      .write.parquet(s"$idx/b=0")
+    // 20-doc batch: ids 0-9 collide with the index, 10-19 are shifted out
+    val keys = spark.range(20L)
+      .select(col("id").as("doc_id"), explode(sequence(lit(0), lit(3))).as("band"))
+      .select(col("doc_id"), col("band"), bandKeys(
+        when(col("doc_id") < 10, col("doc_id"))
+          .otherwise(col("doc_id") + 900000000L)).as("band_h"))
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    val unguarded = hits(keys.join(graft.io.Batches.read(spark, idx).get
+      .select("band", "band_h"), Seq("band", "band_h"), "left_semi"))
+    Ingest.rebuildNearDupGuard(spark, idx,
+      expectedKeys = 8000L, fpp = 0.01, prefixParts = 16)
+    val bloom = graft.io.BloomState
+      .latestVersionBefore(spark, s"$idx/_bloom", 1L)
+      .map(v => graft.io.BloomState.read(spark, s"$idx/_bloom", v))
+    assert(bloom.isDefined, "rebuild must commit bloom state")
+    val guarded = hits(Ingest.nearDupPriorHits(spark, idx, 1L, keys,
+      "doc_id", bloom, 16))
+    assert(unguarded == (0L until 10L).toSet && guarded == unguarded,
+      s"unguarded $unguarded, guarded $guarded")
+  }
 }

@@ -432,6 +432,50 @@ class TextDedupSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("prefix candidates cover every true pair and prune the naive co-occurrence join") {
+    // 30 docs sharing a boilerplate head (its shingles are in every
+    // doc, the naive inverted-index join's hot keys), each with a
+    // one-word-appended twin: J = 22/23 and both containments >= 0.9
+    val base = (0 until 30).map { i =>
+      i.toLong -> ("cookie banner accept all " +
+        (0 until 20).map(k => s"w${(i * 7 + k * 3) % 97}").mkString(" "))
+    }
+    val d = docs(base ++ base.map { case (i, t) => (i + 100) -> (t + " edited") }: _*)
+    val sh = TextDedup.shingleHashes(d, "doc_id", "text", 3)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cand = pairs(TextDedup.prefixCandidates(sh, "doc_id", 0.8))
+    val truth = pairs(TextDedup.jaccardPairs(d, "doc_id", "text", 3, 0.8))
+    assert(truth.size >= 30 && truth.subsetOf(cand),
+      s"prefix lemma lost pairs: ${truth -- cand}")
+    val naive = sh.groupBy("sh_h").count()
+      .agg(sum(expr("(count * (count - 1)) div 2"))).first().getLong(0)
+    assert(cand.size * 4 <= naive,
+      s"prefix filtering ineffective: ${cand.size} candidates vs $naive naive")
+    val contCand = pairs(TextDedup.containmentCandidates(sh, "doc_id", 0.9))
+    val contTruth = pairs(TextDedup.containmentPairs(d, "doc_id", "text", 3, 0.9))
+    assert(contTruth.size >= 60 && contTruth.subsetOf(contCand),
+      s"one-sided prefix lemma lost pairs: ${contTruth -- contCand}")
+  }
+
+  test("bloom pre-filter passes the benchmark's shingles and prunes the rest") {
+    // assessed = benchmark docs verbatim + the same docs with every
+    // token salted, whose shingles are all outside the benchmark
+    val bench = docs((0 until 20).map(i =>
+      i.toLong -> (0 until 12).map(k => s"t${i * 13 + k}").mkString(" ")): _*)
+    val assessed = bench.union(bench.select((col("doc_id") + 1000L).as("doc_id"),
+      regexp_replace(col("text"), "(\\S+)", "$1q").as("text")))
+    val hashes = TextDedup.benchmarkHashSet(bench, "text", 3)
+    val bloom = hashes.stat.bloomFilter("sh_h", hashes.count(), 0.001)
+    val stream = TextDedup.shingleHashes(assessed, "doc_id", "text", 3)
+    val passed = stream.filter(graft.functions.BloomMightContainLong
+      .mightContain(col("sh_h"), spark.sparkContext.broadcast(bloom))).count()
+    // no false negatives: all 200 benchmark shingles pass; at fpp 0.001
+    // the 200 salted ones are (all but a handful) pruned
+    assert(stream.count() == 400L && passed >= 200L && passed < 210L,
+      s"$passed of 400 shingle rows passed the bloom")
+  }
+
   test("bloom-guarded contamination is row-identical to the exact path and pre-filters map-side") {
     // no-false-negatives: the bloom pre-filter may only ADD candidates
     // the exact semi-join then removes, so rows must match exactly —
