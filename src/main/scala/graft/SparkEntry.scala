@@ -303,6 +303,12 @@ object SparkEntry {
     p.toString
   }
 
+  /** The `mv_*` replay: commit `frame` as batches 0, 1 and 2, batch `b`
+    * holding the rows whose `split` is `b`. */
+  private def replay3(frame: DataFrame, split: org.apache.spark.sql.Column)(
+      commit: (DataFrame, Long) => Unit): Unit =
+    (0L to 2L).foreach(b => commit(frame.filter(split === b), b))
+
   /** The t_prf_indexed fixture index, built once per sf dir and shared
     * across bench warmup + timed reps (and `graft.Dev time` reps) in the
     * same JVM — the queries-entry then times the bucket-pruned PROBE the
@@ -2040,20 +2046,18 @@ object SparkEntry {
       graft.ml.SlotRegression.fitStatsU6(ev(s, dir), "user_id", "ts",
         "value")),
     // ---- §2.9 streaming MVs, ORACLE-GATED: each query folds a
-    // deterministic 3-way batch split through the sink's OWN per-batch
-    // commit function (graft.streaming.Ingest.commit*Batch — the exact
-    // foreachBatch body) into a fresh work dir, then serves from the
-    // sink's read function. The MV contract — served state ==
-    // batch op over the concatenated stream — thereby gets a DuckDB
-    // hash check, not just the StreamingSpec parity pin ----
+    // deterministic 3-way batch split (replay3) through the sink's OWN
+    // per-batch commit — a view's MergeableView.commit, or a `b=`
+    // sink's commit*Batch, the exact foreachBatch body — into a fresh
+    // work dir, then serves from the sink's read function. The MV
+    // contract — served state == batch op over the concatenated
+    // stream — thereby gets a DuckDB hash check, not just the
+    // StreamingSpec parity pin ----
     "mv_pattern" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitPatternBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", "value")
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.patternView("user_id", "ts", "value")
+          .commit(_, work, _))
       graft.streaming.Ingest.readPattern(s, work, "user_id").get
         .select(col("user_id"), col("dow").cast("long").as("dow"),
           col("hr").cast("long").as("hr"), col("predicted_volume"))
@@ -2065,12 +2069,9 @@ object SparkEntry {
     // fit bit-for-bit (shared exact-integer oracle)
     "mv_slot_lr" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitPatternBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", "value")
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.patternView("user_id", "ts", "value")
+          .commit(_, work, _))
       graft.streaming.Ingest.readSlotModel(s, work, "user_id").get
     }),
     // streaming SPECTRAL MV: exact Gram partials fold by decimal
@@ -2078,51 +2079,36 @@ object SparkEntry {
     // e_pca_var fit bit-for-bit (shared unrolled-CTE oracle)
     "mv_pca" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = Tables.embeddings(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitGramBatch(
-          e.filter(pmod(col("vec_id"), lit(3)) === b), work, b, "embedding")
-      }
+      replay3(Tables.embeddings(s, dir), pmod(col("vec_id"), lit(3)))(
+        graft.streaming.Ingest.gramView("embedding").commit(_, work, _))
       graft.streaming.Ingest.readPcaVariance(s, work, 64, 12).get
     }),
     "mv_thresholds" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitHourlyBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", "value")
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.hourlyView("user_id", "ts", "value")
+          .commit(_, work, _))
       graft.streaming.Ingest.readThresholds(s, work, "user_id").get
     }),
     "mv_quantiles" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitQuantileBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b, "value")
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.quantileView("value").commit(_, work, _))
       graft.streaming.Ingest.readQuantiles(s, work,
         Seq(0.5, 0.75, 0.9, 0.99)).get
     }),
     "mv_unigram" -> ((s, dir) => {
       val work = freshWorkDir()
-      val d = Tables.documents(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitUnigramBatch(
-          d.filter(pmod(col("doc_id"), lit(3)) === b), work, b, "text")
-      }
-      graft.streaming.Ingest.readUnigramCounts(s, work).get
-        .orderBy("term")
+      val view = graft.streaming.Ingest.unigramView("text")
+      replay3(Tables.documents(s, dir), pmod(col("doc_id"), lit(3)))(
+        view.commit(_, work, _))
+      view.latest(s, work).get.orderBy("term")
     }),
     "mv_bucket_grain" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitBucketGrainBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", "value", 3600L)
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.commitBucketGrainBatch(_, work, _,
+          "user_id", "ts", "value", 3600L))
       graft.streaming.Ingest.readBucketGrainAsEvents(s, work, "user_id")
         .get
         .select(col("user_id"), unix_timestamp(col("ts")).as("bucket_ts"),
@@ -2131,12 +2117,9 @@ object SparkEntry {
     }),
     "mv_retention" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitActivityBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", 604800L)
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.commitActivityBatch(_, work, _,
+          "user_id", "ts", 604800L))
       graft.streaming.Ingest.readRetention(s, work, "user_id").get
         .orderBy("cohort", "offset")
     }),
@@ -2147,12 +2130,9 @@ object SparkEntry {
     // one-shot batch aggregation bit-for-bit
     "mv_sessions" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitSessionBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b,
-          "user_id", "ts", "value", 1800L)
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.commitSessionBatch(_, work, _,
+          "user_id", "ts", "value", 1800L))
       graft.streaming.Ingest.readSessions(s, work, "user_id", 1800L).get
         .orderBy("user_id", "session_start")
     }),
@@ -2161,45 +2141,32 @@ object SparkEntry {
     // g_pagerank because the rank recursion sees only the edge multiset
     "mv_pagerank" -> ((s, dir) => {
       val work = freshWorkDir()
-      val edges = pageRankEdges(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitLinkGraphBatch(
-          edges.filter(pmod(col("src") + col("dst"), lit(3)) === b),
-          work, b, "src", "dst")
-      }
+      replay3(pageRankEdges(s, dir), pmod(col("src") + col("dst"), lit(3)))(
+        graft.streaming.Ingest.commitLinkGraphBatch(_, work, _,
+          "src", "dst"))
       graft.streaming.Ingest.readPageRank(s, work, iters = 8).get
     }),
     "mv_shingle_freq" -> ((s, dir) => {
       val work = freshWorkDir()
-      val d = Tables.documents(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitShingleFreqBatch(
-          d.filter(pmod(col("doc_id"), lit(3)) === b), work, b,
-          "doc_id", "text", 3)
-      }
-      graft.streaming.Ingest.readShingleFreq(s, work).get
-        .orderBy("sh_h")
+      val view = graft.streaming.Ingest.shingleFreqView("doc_id", "text", 3)
+      replay3(Tables.documents(s, dir), pmod(col("doc_id"), lit(3)))(
+        view.commit(_, work, _))
+      view.latest(s, work).get.orderBy("sh_h")
     }),
     "mv_bigram" -> ((s, dir) => {
       val work = freshWorkDir()
-      val d = Tables.documents(s, dir)
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitBigramBatch(
-          d.filter(pmod(col("doc_id"), lit(3)) === b), work, b, "text")
-      }
-      graft.streaming.Ingest.readBigramCounts(s, work).get
-        .orderBy("term")
+      val view = graft.streaming.Ingest.bigramView("text")
+      replay3(Tables.documents(s, dir), pmod(col("doc_id"), lit(3)))(
+        view.commit(_, work, _))
+      view.latest(s, work).get.orderBy("term")
     }),
     "mv_checks" -> ((s, dir) => {
       val work = freshWorkDir()
-      val e = ev(s, dir)
       val checks = Seq(Checks.notNull("user_id"),
         Checks.inRange("value", 0.0, 50.0),
         Checks.accepted("event_type", Seq("view", "click", "purchase")))
-      (0L to 2L).foreach { b =>
-        graft.streaming.Ingest.commitDataChecksBatch(
-          e.filter(pmod(col("event_id"), lit(3)) === b), work, b, checks)
-      }
+      replay3(ev(s, dir), pmod(col("event_id"), lit(3)))(
+        graft.streaming.Ingest.dataChecksView(checks).commit(_, work, _))
       graft.streaming.Ingest.readDataChecksReport(s, work, checks).get
         .orderBy("check", "target")
     }),

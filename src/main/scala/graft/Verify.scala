@@ -25,13 +25,18 @@ object Verify {
     val tz = sys.env.getOrElse("SPARK_GRAFT_TZ", "UTC")
     val spark = Engine.session(cpus.toInt, tz)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // a failed query is logged and skipped so every other dump (and
+    // oracle_sql.json) is still written; the run then exits 1
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,5 +55,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] failed query(s): ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -23,7 +23,7 @@ object Percentiles {
 
   /** The (key, hour_bucket) hourly-volume partials — the A5 grain, as
     * exact long units so partials from different batches merge by long
-    * addition (the streaming training MV, Ingest.startHourlySink). */
+    * addition (the streaming training MV, Ingest.hourlyView). */
   def hourlyPartials(df: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String): DataFrame =
     df.groupBy(col(keyCol), date_trunc("hour", col(tsCol)).as("hour_bucket"))

@@ -163,7 +163,7 @@ object Sampling {
   /** Single-corpus hashed-feature bucket counts (bucket, cnt) — the
     * additive exact-long partial BOTH [[dsirBuckets]] sides are built
     * from, and the per-batch partial of the streaming raw-count MV
-    * ([[graft.streaming.Ingest.startDsirRawCountSink]]). */
+    * ([[graft.streaming.Ingest.dsirRawCountView]]). */
   def dsirBucketCounts(d: DataFrame, textCol: String,
                        nBuckets: Int): DataFrame = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
@@ -343,7 +343,7 @@ object Sampling {
 
   /** The waterfill HALF of [[temperature]], factored so a caller with
     * an already-maintained source histogram — notably the streaming
-    * MV ([[graft.streaming.Ingest.startSourceCountSink]], whose state
+    * MV ([[graft.streaming.Ingest.sourceCountView]], whose state
     * is exact additive long counts) — can derive the CURRENT rate
     * table without rescanning the corpus. `hist` is one row per source
     * (`sourceCol`, `nCol` = long count); returns (`sourceCol`, `rate`).

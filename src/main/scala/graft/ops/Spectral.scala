@@ -62,7 +62,7 @@ object Spectral {
     // DECIMAL(38,0), exact at ANY corpus size.
     // ONE source scan (the first form aggregated g, s and n as three
     // branches over the same subtree — three full source reads per
-    // call, and per STREAMING TRIGGER in commitGramBatch), kept on
+    // call, and per STREAMING TRIGGER in Ingest.gramView), kept on
     // the codegen'd Generate path: append a SENTINEL 1 to each
     // quantized vector and run the same upper-triangle double
     // posexplode over the extended array — pairs with j at the

@@ -989,7 +989,7 @@ object TextDedup {
 
   /** [[removeDupSpans]] against a PRE-BUILT corpus doc-frequency table
     * (e.g. the streaming shingle-DF MV,
-    * [[graft.streaming.Ingest]].readShingleFreq) — the span-cutting
+    * [[graft.streaming.Ingest.shingleFreqView]]) — the span-cutting
     * sibling of [[dupSpanStatsAgainst]], with the same membership
     * semantics: when the slice's docs are inside the corpus the table
     * summarizes, `df > 1` means "occurs in another document", so the
@@ -1045,7 +1045,7 @@ object TextDedup {
     * [[shingleHashes]]). ADDITIVE across batches of an append-only
     * corpus — each doc arrives once, so summing partials equals the
     * doc frequency over everything ingested. The streaming-MV input
-    * (see `streaming.Ingest.startShingleFreqSink`). */
+    * (see `streaming.Ingest.shingleFreqView`). */
   def shingleFreqPartials(df: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame =
     shingleHashes(df, idCol, textCol, n)

@@ -330,7 +330,7 @@ object TextStats {
 
   /** Per-batch corpus term counts `(term, cnt)` — the additive partial
     * for the streaming unigram-stats MV
-    * ([[graft.streaming.Ingest.startUnigramSink]]). Long counts are
+    * ([[graft.streaming.Ingest.unigramView]]). Long counts are
     * exact and associative, so partials merged in any batch order equal
     * the full-corpus counts bit-for-bit. */
   def unigramPartials(df: DataFrame, textCol: String): DataFrame =

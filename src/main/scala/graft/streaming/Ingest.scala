@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** One detection event — the contract the reference's CV stage emits
   * (app/services/camera.py:210-227: boxes → (class, conf, bbox) with the
@@ -26,6 +26,38 @@ case class Observation(
   * (app/services/camera.py:35 `prev_rects`). */
 case class CamState(prevBoxes: Seq[(Long, Long, Long, Long)])
 
+/** A mergeable view: running state that each micro-batch updates by
+  * folding its own `partials` into the previous version with `merge`
+  * ([[graft.io.VersionedState]]: versioned by batchId and merged from
+  * the PREVIOUS version, so a crash-replayed batch re-merges from the
+  * same base instead of double-counting). The state lives under
+  * `<workRoot>/<name>` and is aggregate-scale. [[Ingest.startView]]
+  * runs [[commit]] on every trigger; a batch replay (a backfill, or the
+  * `mv_*` oracle queries, which fold a deterministic batch split)
+  * calls the same [[commit]], so it exercises the exact code path the
+  * sink runs. */
+final case class MergeableView(name: String,
+                               partials: DataFrame => DataFrame,
+                               merge: (DataFrame, DataFrame) => DataFrame) {
+
+  /** Fold `batch` into the state as version `batchId`. */
+  def commit(batch: DataFrame, workRoot: String, batchId: Long): Unit =
+    graft.io.VersionedState.mergeCommit(batch.sparkSession,
+      s"$workRoot/$name", batchId, partials(batch), merge)
+
+  /** The latest committed state (None before the first commit). */
+  def latest(spark: SparkSession, workRoot: String): Option[DataFrame] =
+    MergeableView.latest(spark, workRoot, name)
+}
+
+object MergeableView {
+  /** The latest committed state of the view named `name` — for the
+    * serving reads, which know the view but not its input columns. */
+  def latest(spark: SparkSession, workRoot: String,
+             name: String): Option[DataFrame] =
+    graft.io.VersionedState.readLatest(spark, s"$workRoot/$name")
+}
+
 /** §2.9 — the streaming ingest pipeline. The reference is a hand-rolled
   * processing-time micro-batch system (2 s tick per camera, one daemon
   * thread each); here it is Structured Streaming:
@@ -48,16 +80,53 @@ object Ingest {
   val cocoClassMap: Map[Int, String] =
     Map(1 -> "motorcycle", 2 -> "car", 3 -> "motorcycle", 5 -> "car", 7 -> "car")
 
+  // State directory names of the mergeable views whose serving reads
+  // finalize the state; each is the on-disk layout of a deployed view.
+  private val PatternState = "pattern"
+  private val GramState = "gram"
+  private val HourlyState = "hourly"
+  private val ProfileState = "profile"
+  private val SourceCountState = "sourcecounts"
+  private val DsirRawState = "dsirraw"
+  private val QuantileState = "valuehist"
+  private val DataChecksState = "datachecks"
+
+  /** The one `foreachBatch` stream builder: every sink below runs
+    * `body(batch, batchId)` per micro-batch in append mode under
+    * `checkpoint` (exactly-once at the batch grain). */
+  private def sink(rows: DataFrame, checkpoint: String, trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .outputMode(OutputMode.Append)
+      .trigger(trigger)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .start()
+
+  /** Maintain `view` from the `rows` stream: each micro-batch is
+    * [[MergeableView.commit]]ted under `workRoot`; serve from the view's
+    * `latest` state or its finalizing read. */
+  def startView(view: MergeableView, rows: DataFrame, workRoot: String,
+                checkpoint: String,
+                trigger: Trigger = Trigger.ProcessingTime(0L))
+      : StreamingQuery =
+    sink(rows, checkpoint, trigger)(view.commit(_, workRoot, _))
+
+  /** The in-sink fold cadence: every `every`-th batch after the first
+    * (`every = 0` disables — external maintenance cadence instead). */
+  private def compactDue(every: Int, batchId: Long): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
+
   /** In-sink maintenance for the `b=<batchId>` layouts: on the
-    * `every`-batch cadence, fold each root's committed batch dirs
-    * (`upTo = batchId - 1` — committed by definition once this batch
-    * runs, see [[graft.io.Batches.compact]]'s safe-fold bound) into its
-    * compacted base. Keeps a long-running stream's dir count O(every)
-    * per root instead of O(stream lifetime); `every = 0` disables
-    * (external maintenance cadence instead). */
-  /** In-sink `b=` dir folding. CONSUMER CONTRACT for every root this
-    * touches: compaction renames a new base over the old one and only
-    * then deletes the superseded dirs, so there is a crash window
+    * `every`-batch cadence ([[compactDue]]), fold each root's committed
+    * batch dirs (`upTo = batchId - 1` — committed by definition once
+    * this batch runs, see [[graft.io.Batches.compact]]'s safe-fold
+    * bound) into its compacted base. Keeps a long-running stream's dir
+    * count O(every) per root instead of O(stream lifetime).
+    *
+    * CONSUMER CONTRACT for every root this touches: compaction
+    * renames a new base over the old one and only then deletes the
+    * superseded dirs, so there is a crash window
     * (post-rename, pre-delete) in which a plain
     * `spark.read.parquet(root)` double-reads rows that are in both the
     * new base and a not-yet-deleted dir. [[graft.io.Batches.read]]'s
@@ -69,7 +138,7 @@ object Ingest {
     * `compactEvery` doc repeats this. */
   private def maybeCompact(spark: SparkSession, every: Int, batchId: Long,
                            roots: String*): Unit =
-    if (every > 0 && batchId > 0 && batchId % every == 0)
+    if (compactDue(every, batchId))
       roots.foreach(r =>
         graft.io.Batches.compact(spark, r, upTo = batchId - 1))
 
@@ -266,86 +335,83 @@ object Ingest {
     val stateRoot = s"$work/state"
     val recentRoot = s"$work/recent"
     val horizonSec = windows.map(_._2).max
-    dedupObservations(detections).toDF()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger) // reference cadence: ProcessingTime("60 seconds")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          // S9 lake append — write-only: the snapshot never reads this.
-          // Each batch owns a b=<batchId> dir it overwrites, so a crash
-          // replay can't double detections in the long-term record;
-          // compactHistoryEvery folds the accumulating dirs in-sink
-          // (or fold externally with graft.io.Batches.compact,
-          // upTo <= last committed batch)
-          batch.write.mode("overwrite").parquet(s"$historyRoot/b=$batchId")
-          maybeCompact(spark, compactHistoryEvery, batchId, historyRoot)
-          // 1. fold the batch roll-up into the previous state version
-          // (replay-safe versioned commit — io.VersionedState)
-          val state = graft.io.VersionedState.mergeCommit(
-            spark, stateRoot, batchId,
-            graft.io.Snapshot.perCamera(batch),
-            graft.io.Snapshot.mergePerCamera)
-          // 2. horizon-bounded recent store, idempotent on replay.
-          // Partitioned by EPOCH day — floor(epoch/86400), the same
-          // clock the retention cutoff below uses. A calendar key
-          // (to_date) would be session-timezone-local: west of UTC a
-          // local day holds rows up to |offset| hours past the assumed
-          // UTC day end, and the prune would delete in-horizon rows.
-          batch.select(col("camera_id"), col("ts"), col("new_count"),
-              col("new_cars"), col("new_motors"))
-            .withColumn("b", lit(batchId))
-            .withColumn("d", floor(unix_timestamp(col("ts")) / 86400L))
-            .write.partitionBy("b", "d")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(recentRoot)
-          // 3. retention: a day partition whose entire range is older
-          // than (now − horizon) can never contribute to a window again
-          // — partition d covers [d*86400, (d+1)*86400), so it is dead
-          // iff (d+1)*86400 <= now − horizon, i.e. d + 1 <= cutoffDay.
-          // An all-empty stream so far (processing-time triggers DO
-          // deliver empty batches) has no "now" and nothing to prune or
-          // publish — skip those steps without killing the query.
-          val nowRow = state.agg(max(col("last_update"))).collect().head
-          if (!nowRow.isNullAt(0)) {
-            val nowEpoch = nowRow.getDouble(0)
-            val cutoffDay =
-              math.floor((nowEpoch - horizonSec) / 86400.0).toLong
-            graft.io.Fs.listDirNames(spark, recentRoot)
-              .filter(_.startsWith("b=")).foreach { bname =>
-                val bdir = s"$recentRoot/$bname"
-                graft.io.Fs.listDirNames(spark, bdir)
-                  .filter(_.startsWith("d=")).foreach { dname =>
-                    val day = dname.drop(2).toLong
-                    if (day + 1 <= cutoffDay)
-                      graft.io.Fs.delete(spark, s"$bdir/$dname")
-                  }
-                // a batch dir whose last day partition was pruned is
-                // dead weight: left in place it would grow the listing
-                // walk and partition discovery forever (~1.4k dirs/day
-                // at a 60s cadence) — delete it so the directory count
-                // stays bounded by the horizon too
-                if (graft.io.Fs.listDirNames(spark, bdir)
-                      .forall(!_.startsWith("d=")))
-                  graft.io.Fs.delete(spark, bdir)
-              }
-            // 4. assemble the doc from state + bounded recent — the
-            // same code path as the batch Snapshot.build
-            val recent = spark.read.parquet(recentRoot).drop("b", "d")
-            val pc = mirrors
-              .map(m => graft.io.Snapshot.applyMirrors(state, m))
-              .getOrElse(state)
-            val winObs = mirrors
-              .map(m => graft.io.Snapshot.withMirroredObs(recent, m))
-              .getOrElse(recent)
-            graft.io.Snapshot.write(
-              graft.io.Snapshot.assemble(pc, winObs, windows), snapshotPath)
-          }
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    val obs = dedupObservations(detections).toDF()
+    // reference cadence: trigger = ProcessingTime("60 seconds")
+    sink(obs, checkpoint, trigger) { (batch, batchId) =>
+      batch.persist()
+      try {
+        // S9 lake append — write-only: the snapshot never reads this.
+        // Each batch owns a b=<batchId> dir it overwrites, so a crash
+        // replay can't double detections in the long-term record;
+        // compactHistoryEvery folds the accumulating dirs in-sink
+        // (or fold externally with graft.io.Batches.compact,
+        // upTo <= last committed batch)
+        batch.write.mode("overwrite").parquet(s"$historyRoot/b=$batchId")
+        maybeCompact(spark, compactHistoryEvery, batchId, historyRoot)
+        // 1. fold the batch roll-up into the previous state version
+        // (replay-safe versioned commit — io.VersionedState)
+        graft.io.VersionedState.mergeCommit(
+          spark, stateRoot, batchId,
+          graft.io.Snapshot.perCamera(batch),
+          graft.io.Snapshot.mergePerCamera)
+        val state = spark.read.parquet(s"$stateRoot/v=$batchId")
+        // 2. horizon-bounded recent store, idempotent on replay.
+        // Partitioned by EPOCH day — floor(epoch/86400), the same
+        // clock the retention cutoff below uses. A calendar key
+        // (to_date) would be session-timezone-local: west of UTC a
+        // local day holds rows up to |offset| hours past the assumed
+        // UTC day end, and the prune would delete in-horizon rows.
+        batch.select(col("camera_id"), col("ts"), col("new_count"),
+            col("new_cars"), col("new_motors"))
+          .withColumn("b", lit(batchId))
+          .withColumn("d", floor(unix_timestamp(col("ts")) / 86400L))
+          .write.partitionBy("b", "d")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").parquet(recentRoot)
+        // 3. retention: a day partition whose entire range is older
+        // than (now − horizon) can never contribute to a window again
+        // — partition d covers [d*86400, (d+1)*86400), so it is dead
+        // iff (d+1)*86400 <= now − horizon, i.e. d + 1 <= cutoffDay.
+        // An all-empty stream so far (processing-time triggers DO
+        // deliver empty batches) has no "now" and nothing to prune or
+        // publish — skip those steps without killing the query.
+        val nowRow = state.agg(max(col("last_update"))).collect().head
+        if (!nowRow.isNullAt(0)) {
+          val nowEpoch = nowRow.getDouble(0)
+          val cutoffDay =
+            math.floor((nowEpoch - horizonSec) / 86400.0).toLong
+          graft.io.Fs.listDirNames(spark, recentRoot)
+            .filter(_.startsWith("b=")).foreach { bname =>
+              val bdir = s"$recentRoot/$bname"
+              graft.io.Fs.listDirNames(spark, bdir)
+                .filter(_.startsWith("d=")).foreach { dname =>
+                  val day = dname.drop(2).toLong
+                  if (day + 1 <= cutoffDay)
+                    graft.io.Fs.delete(spark, s"$bdir/$dname")
+                }
+              // a batch dir whose last day partition was pruned is
+              // dead weight: left in place it would grow the listing
+              // walk and partition discovery forever (~1.4k dirs/day
+              // at a 60s cadence) — delete it so the directory count
+              // stays bounded by the horizon too
+              if (graft.io.Fs.listDirNames(spark, bdir)
+                    .forall(!_.startsWith("d=")))
+                graft.io.Fs.delete(spark, bdir)
+            }
+          // 4. assemble the doc from state + bounded recent — the
+          // same code path as the batch Snapshot.build
+          val recent = spark.read.parquet(recentRoot).drop("b", "d")
+          val pc = mirrors
+            .map(m => graft.io.Snapshot.applyMirrors(state, m))
+            .getOrElse(state)
+          val winObs = mirrors
+            .map(m => graft.io.Snapshot.withMirroredObs(recent, m))
+            .getOrElse(recent)
+          graft.io.Snapshot.write(
+            graft.io.Snapshot.assemble(pc, winObs, windows), snapshotPath)
+        }
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Incrementally-maintained prediction pattern — the A4 materialized
@@ -354,7 +420,7 @@ object Ingest {
     * 109-145); at 100 TB that read is the product. Here each
     * micro-batch folds its (key, dow, hr, date) daily partials —
     * exact long units, additive across batches — into a versioned
-    * state table (io.VersionedState, same replay-safe mechanic as the
+    * state table ([[patternView]], the same replay-safe mechanic as the
     * snapshot sink), and serving is a tiny groupBy over the partials
     * via [[readPattern]]: `Predict.patternFromDaily(state)` is
     * bit-identical to `Predict.hourlyPattern(full history)` at every
@@ -366,35 +432,22 @@ object Ingest {
                        checkpoint: String,
                        trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitPatternBatch(batch, workRoot, batchId, keyCol, tsCol, valueCol)
-      }
-      .start()
+    startView(patternView(keyCol, tsCol, valueCol), events, workRoot,
+      checkpoint, trigger)
 
-  /** The EXACT per-batch body of [[startPatternSink]], exposed so a
-    * batch replay (backfill, or the driver's oracle gate — the `mv_*`
-    * queries fold a deterministic batch split through these commit
-    * functions and serve from the same reads) exercises the same code
-    * path the sink runs per trigger. */
-  def commitPatternBatch(batch: DataFrame, workRoot: String, batchId: Long,
-                         keyCol: String, tsCol: String,
-                         valueCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/pattern", batchId,
-      graft.ops.Predict.dailyPartials(batch, keyCol, tsCol, valueCol),
+  /** The view [[startPatternSink]] maintains: (key, dow, hr, date)
+    * daily partials in exact long units. */
+  def patternView(keyCol: String, tsCol: String,
+                  valueCol: String): MergeableView =
+    MergeableView(PatternState,
+      graft.ops.Predict.dailyPartials(_, keyCol, tsCol, valueCol),
       graft.ops.Predict.mergeDailyPartials(keyCol))
-    ()
-  }
 
   /** Serving read for [[startPatternSink]]: all-slot predictions from
     * the materialized partials (empty frame before the first commit). */
   def readPattern(spark: SparkSession, workRoot: String,
                   keyCol: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/pattern")
+    MergeableView.latest(spark, workRoot, PatternState)
       .map(daily => graft.ops.Predict.patternFromDaily(daily, keyCol))
 
   /** Streaming MODEL MV — the trained model kept continuously current
@@ -410,7 +463,7 @@ object Ingest {
     * training never rescans events. */
   def readSlotModel(spark: SparkSession, workRoot: String,
                     keyCol: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/pattern")
+    MergeableView.latest(spark, workRoot, PatternState)
       .map(daily => graft.ml.SlotRegression.predictFromSlots(
         graft.ml.SlotRegression.slotLabelsFromDaily(daily, keyCol),
         keyCol))
@@ -422,33 +475,12 @@ object Ingest {
     * covariance spectrum is always current without ever rescanning
     * vectors. Per-trigger cost is the batch's one Gram pass plus a
     * merge over the metadata-scale state table; at 100 TB the
-    * spectrum serves from state alone. */
-  def startGramSink(vectors: DataFrame, vecCol: String, workRoot: String,
-                    checkpoint: String,
-                    trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitGramBatch(batch, workRoot, batchId, vecCol)
-      }
-      .start()
-
-  /** The EXACT per-batch body of [[startGramSink]] (batch replay /
-    * oracle-gate entry point, same contract as
-    * [[commitPatternBatch]]). */
-  def commitGramBatch(batch: DataFrame, workRoot: String, batchId: Long,
-                      vecCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/gram", batchId,
-      graft.ops.Spectral.gramPartials(batch, vecCol),
+    * spectrum serves from state alone. Run it with [[startView]]. */
+  def gramView(vecCol: String): MergeableView =
+    MergeableView(GramState, graft.ops.Spectral.gramPartials(_, vecCol),
       graft.ops.Spectral.mergeGramPartials)
-    ()
-  }
 
-  /** Serving read for [[startGramSink]]: the spectral health row
+  /** Serving read for [[gramView]]: the spectral health row
     * (n_vecs, trace_e8, lambda_e8, share_bp) refit from state — the
     * partials merge is exact decimal addition, so this equals the
     * batch [[graft.ops.Spectral.pcaVariance]] over the concatenated
@@ -456,7 +488,7 @@ object Ingest {
     * unrolled-CTE oracle). */
   def readPcaVariance(spark: SparkSession, workRoot: String, dim: Int,
                       iters: Int): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/gram")
+    MergeableView.latest(spark, workRoot, GramState)
       .map(p => graft.ops.Spectral.varianceDf(spark,
         graft.ops.Spectral.statsFromPartials(p, dim), iters))
 
@@ -466,38 +498,19 @@ object Ingest {
     * additive) fold into a versioned state table; [[readThresholds]]
     * refits p50/p75/p90/max from the AGGREGATE (keys × hours rows), so
     * at 100 TB the percentile sort never sees raw history. Refit
-    * cadence is the caller's choice — the state is always current. */
-  def startHourlySink(events: DataFrame, keyCol: String, tsCol: String,
-                      valueCol: String, workRoot: String,
-                      checkpoint: String,
-                      trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitHourlyBatch(batch, workRoot, batchId, keyCol, tsCol, valueCol)
-      }
-      .start()
-
-  /** Per-batch body of [[startHourlySink]] (see [[commitPatternBatch]]
-    * for why these are exposed). */
-  def commitHourlyBatch(batch: DataFrame, workRoot: String, batchId: Long,
-                        keyCol: String, tsCol: String,
-                        valueCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/hourly", batchId,
-      graft.ops.Percentiles.hourlyPartials(batch, keyCol, tsCol, valueCol),
+    * cadence is the caller's choice — the state is always current.
+    * Run it with [[startView]]. */
+  def hourlyView(keyCol: String, tsCol: String,
+                 valueCol: String): MergeableView =
+    MergeableView(HourlyState,
+      graft.ops.Percentiles.hourlyPartials(_, keyCol, tsCol, valueCol),
       graft.ops.Percentiles.mergeHourlyPartials(keyCol))
-    ()
-  }
 
-  /** Serving read for [[startHourlySink]]: thresholds refit from the
+  /** Serving read for [[hourlyView]]: thresholds refit from the
     * materialized hourly partials (None before the first commit). */
   def readThresholds(spark: SparkSession, workRoot: String,
                      keyCol: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/hourly")
+    MergeableView.latest(spark, workRoot, HourlyState)
       .map(h => graft.ops.Percentiles.thresholdsFromHourly(h, keyCol))
 
   /** Incrementally-maintained corpus unigram statistics — the
@@ -505,118 +518,44 @@ object Ingest {
     * as [[startPatternSink]]: each micro-batch's `(term, cnt)` partials
     * ([[graft.ops.TextStats.unigramPartials]] — exact longs, additive
     * in any batch order) fold into a versioned state table. Serving:
-    * [[readUnigramCounts]] + [[graft.ops.TextStats.unigramScoreAgainst]]
+    * the view's `latest` state + [[graft.ops.TextStats.unigramScoreAgainst]]
     * scores any doc slice against the current model — bit-identical to
     * `unigramScore` over the full ingested corpus (StreamingSpec pins
     * it), without ever rescanning that corpus. The state is
-    * VOCAB-scale (one row per distinct term), not corpus-scale. */
-  def startUnigramSink(docs: DataFrame, textCol: String, workRoot: String,
-                       checkpoint: String,
-                       trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitUnigramBatch(batch, workRoot, batchId, textCol)
-      }
-      .start()
-
-  /** Per-batch body of [[startUnigramSink]] (see [[commitPatternBatch]]
-    * for why these are exposed). */
-  def commitUnigramBatch(batch: DataFrame, workRoot: String,
-                         batchId: Long, textCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/unigram", batchId,
-      graft.ops.TextStats.unigramPartials(batch, textCol),
+    * VOCAB-scale (one row per distinct term), not corpus-scale. Run it
+    * with [[startView]]. */
+  def unigramView(textCol: String): MergeableView =
+    MergeableView("unigram", graft.ops.TextStats.unigramPartials(_, textCol),
       graft.ops.TextStats.mergeUnigramPartials)
-    ()
-  }
-
-  /** Serving read for [[startUnigramSink]]: the current `(term, cnt)`
-    * corpus model (None before the first commit). */
-  def readUnigramCounts(spark: SparkSession,
-                        workRoot: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/unigram")
 
   /** Streaming shingle doc-frequency MV — the ExactSubstr duplication
     * profile's corpus statistic as an incrementally-maintained state
-    * table (same additive-partial machinery as [[startUnigramSink]]):
+    * table (same additive-partial machinery as [[unigramView]]):
     * each micro-batch's `(sh_h, df)` partials
     * ([[graft.ops.TextDedup.shingleFreqPartials]] — docs counted once,
-    * exact longs) fold into versioned state. Serving:
-    * [[readShingleFreq]] + [[graft.ops.TextDedup.dupSpanStatsAgainst]]
+    * exact longs) fold into versioned state. Serving: the view's
+    * `latest` state + [[graft.ops.TextDedup.dupSpanStatsAgainst]]
     * scores any ingested slice's duplicated-span fraction against the
     * WHOLE corpus history — row-identical to batch `dupSpanStats` over
     * everything ingested (StreamingSpec pins it) with no corpus
-    * rescan. State is shingle-vocabulary scale. */
-  def startShingleFreqSink(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int, workRoot: String, checkpoint: String,
-                           trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitShingleFreqBatch(batch, workRoot, batchId, idCol, textCol, n)
-      }
-      .start()
-
-  /** Per-batch body of [[startShingleFreqSink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
-  def commitShingleFreqBatch(batch: DataFrame, workRoot: String,
-                             batchId: Long, idCol: String,
-                             textCol: String, n: Int): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/shinglefreq", batchId,
-      graft.ops.TextDedup.shingleFreqPartials(batch, idCol, textCol, n),
+    * rescan. State is shingle-vocabulary scale. Run it with
+    * [[startView]]. */
+  def shingleFreqView(idCol: String, textCol: String,
+                      n: Int): MergeableView =
+    MergeableView("shinglefreq",
+      graft.ops.TextDedup.shingleFreqPartials(_, idCol, textCol, n),
       graft.ops.TextDedup.mergeShingleFreqPartials)
-    ()
-  }
 
-  /** Serving read for [[startShingleFreqSink]]: the current `(sh_h,
-    * df)` corpus doc-frequency table (None before the first commit). */
-  def readShingleFreq(spark: SparkSession,
-                      workRoot: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/shinglefreq")
-
-  /** Streaming corpus BIGRAM-stats MV — [[startUnigramSink]] for
+  /** Streaming corpus BIGRAM-stats MV — [[unigramView]] for
     * 2-gram events (same additive-partial + versioned-state-merge
     * machinery, bigram-vocab-scale state): keeps the order-sensitive
     * [[graft.ops.TextStats.bigramScore]] model current without corpus
-    * rescans; serve via [[readBigramCounts]] +
+    * rescans; serve via the view's `latest` state +
     * [[graft.ops.TextStats.bigramScoreAgainst]] (bit-equal to the
-    * batch score, spec-pinned). */
-  def startBigramSink(docs: DataFrame, textCol: String, workRoot: String,
-                      checkpoint: String,
-                      trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBigramBatch(batch, workRoot, batchId, textCol)
-      }
-      .start()
-
-  /** Per-batch body of [[startBigramSink]] (see [[commitPatternBatch]]
-    * for why these are exposed). */
-  def commitBigramBatch(batch: DataFrame, workRoot: String,
-                        batchId: Long, textCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/bigram", batchId,
-      graft.ops.TextStats.bigramPartials(batch, textCol),
+    * batch score, spec-pinned). Run it with [[startView]]. */
+  def bigramView(textCol: String): MergeableView =
+    MergeableView("bigram", graft.ops.TextStats.bigramPartials(_, textCol),
       graft.ops.TextStats.mergeUnigramPartials)
-    ()
-  }
-
-  /** Serving read for [[startBigramSink]]. */
-  def readBigramCounts(spark: SparkSession,
-                       workRoot: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/bigram")
 
   /** Streaming COLUMN-PROFILE MV — the data-quality monitor as a
     * materialized view (same versioned-state mechanic as the
@@ -636,30 +575,17 @@ object Ingest {
     * [[graft.ops.Profiler.driftFromProfiles]] gates it against any
     * baseline profile with an n_cols-row join. At 100 TB of ingest
     * this keeps a continuously-current profile for the cost of one
-    * wide aggregation per micro-batch. */
-  def startProfileSink(rows: DataFrame, workRoot: String,
-                       checkpoint: String,
-                       trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.io.VersionedState.mergeCommit(
-          batch.sparkSession, s"$workRoot/profile", batchId,
-          graft.ops.Profiler.profilePartials(batch),
-          graft.ops.Profiler.mergeProfilePartials)
-        ()
-      }
-      .start()
+    * wide aggregation per micro-batch. Run it with [[startView]]. */
+  val profileView: MergeableView =
+    MergeableView(ProfileState, graft.ops.Profiler.profilePartials,
+      graft.ops.Profiler.mergeProfilePartials)
 
-  /** Serving read for [[startProfileSink]]: the current profile in
+  /** Serving read for [[profileView]]: the current profile in
     * [[graft.ops.Profiler.summary]]'s schema (None before the first
     * commit). */
   def readProfile(spark: SparkSession,
                   workRoot: String): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/profile")
+    MergeableView.latest(spark, workRoot, ProfileState)
       .map(graft.ops.Profiler.profileFromPartials)
 
   /** Streaming SOURCE-HISTOGRAM MV — the state behind a continuously
@@ -677,24 +603,13 @@ object Ingest {
     * running batch `temperature` over the full ingested corpus
     * (StreamingSpec pins the kept-id-set equality) without rescanning
     * it. At 100 TB of ingest the per-trigger cost is one partial-agg
-    * count of the batch plus a sources-scale merge. */
-  def startSourceCountSink(rows: DataFrame, sourceCol: String,
-                           workRoot: String, checkpoint: String,
-                           trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.io.VersionedState.mergeCommit(
-          batch.sparkSession, s"$workRoot/sourcecounts", batchId,
-          batch.groupBy(col(sourceCol)).agg(count(lit(1)).as("_n")),
-          (a, b) => a.unionByName(b).groupBy(col(sourceCol))
-            .agg(sum(col("_n")).as("_n")))
-        ()
-      }
-      .start()
+    * count of the batch plus a sources-scale merge. Run it with
+    * [[startView]]. */
+  def sourceCountView(sourceCol: String): MergeableView =
+    MergeableView(SourceCountState,
+      _.groupBy(col(sourceCol)).agg(count(lit(1)).as("_n")),
+      (a, b) => a.unionByName(b).groupBy(col(sourceCol))
+        .agg(sum(col("_n")).as("_n")))
 
   /** Streaming DSIR RAW-side bucket-count MV — importance-resampling
     * statistics kept current as the raw corpus streams in (the same
@@ -706,44 +621,32 @@ object Ingest {
     * [[readDsirModel]] folds the current raw state with them and
     * freezes the micro-unit weights, bit-identical to batch
     * [[graft.ops.Sampling.dsirFit]] over everything ingested
-    * (StreamingSpec pins model and scores) with no corpus rescan. */
-  def startDsirRawCountSink(docs: DataFrame, textCol: String,
-                            nBuckets: Int, workRoot: String,
-                            checkpoint: String,
-                            trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.io.VersionedState.mergeCommit(
-          batch.sparkSession, s"$workRoot/dsirraw", batchId,
-          graft.ops.Sampling.dsirBucketCounts(batch, textCol, nBuckets),
-          graft.ops.Sampling.mergeDsirCounts)
-        ()
-      }
-      .start()
+    * (StreamingSpec pins model and scores) with no corpus rescan. Run
+    * it with [[startView]]. */
+  def dsirRawCountView(textCol: String, nBuckets: Int): MergeableView =
+    MergeableView(DsirRawState,
+      graft.ops.Sampling.dsirBucketCounts(_, textCol, nBuckets),
+      graft.ops.Sampling.mergeDsirCounts)
 
-  /** Serving read for [[startDsirRawCountSink]]: the frozen DSIR model
+  /** Serving read for [[dsirRawCountView]]: the frozen DSIR model
     * over everything ingested so far vs the supplied target corpus
     * (None before the first commit). Feed it to
     * [[graft.ops.Sampling.dsirScore]] / `dsirResample`. */
   def readDsirModel(spark: SparkSession, workRoot: String,
                     target: DataFrame, textCol: String, nBuckets: Int)
       : Option[graft.ops.Sampling.DsirModel] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/dsirraw")
+    MergeableView.latest(spark, workRoot, DsirRawState)
       .map(raw => graft.ops.Sampling.dsirFitFromCounts(raw,
         graft.ops.Sampling.dsirBucketCounts(target, textCol, nBuckets),
         nBuckets))
 
-  /** Serving read for [[startSourceCountSink]]: the CURRENT waterfill
+  /** Serving read for [[sourceCountView]]: the CURRENT waterfill
     * rate table (`sourceCol`, `rate`), None before the first commit.
     * Feed it to [[graft.ops.Sampling.applyTemperatureRates]]. */
   def readTemperatureRates(spark: SparkSession, workRoot: String,
                            sourceCol: String, alpha: Double,
                            budgetFrac: Double): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/sourcecounts")
+    MergeableView.latest(spark, workRoot, SourceCountState)
       .map(h => graft.ops.Sampling.temperatureRates(
         h, sourceCol, "_n", alpha, budgetFrac))
 
@@ -764,18 +667,13 @@ object Ingest {
                         outRoot: String, checkpoint: String,
                         trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitActivityBatch(batch, outRoot, batchId, userCol, tsCol,
-          intervalSec)
-      }
-      .start()
+    sink(events, checkpoint, trigger) { (batch, batchId) =>
+      commitActivityBatch(batch, outRoot, batchId, userCol, tsCol,
+        intervalSec)
+    }
 
-  /** Per-batch body of [[startActivitySink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
+  /** Per-batch body of [[startActivitySink]] (exposed for batch
+    * replay, like [[MergeableView.commit]]). */
   def commitActivityBatch(batch: DataFrame, outRoot: String, batchId: Long,
                           userCol: String, tsCol: String,
                           intervalSec: Long): Unit = {
@@ -829,25 +727,20 @@ object Ingest {
                        compactEvery: Int = 0,
                        horizonSec: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the session fold MERGES while it compacts (Batches.compact
-        // foldBase contract): the folded base holds one row per LIVE
-        // merged session, so the at-rest state — and every serve's
-        // merge input — is bounded by session count, never by how
-        // many commits the stream has made. Consumer contract as
-        // every self-compacting root: read via Batches.read
-        // (readSessions does).
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactSessions(batch.sparkSession, outRoot, keyCol, gapSec,
-            upTo = batchId - 1, horizonSec = horizonSec)
-        commitSessionBatch(batch, outRoot, batchId, keyCol, tsCol,
-          valueCol, gapSec)
-      }
-      .start()
+    sink(events, checkpoint, trigger) { (batch, batchId) =>
+      // the session fold MERGES while it compacts (Batches.compact
+      // foldBase contract): the folded base holds one row per LIVE
+      // merged session, so the at-rest state — and every serve's
+      // merge input — is bounded by session count, never by how
+      // many commits the stream has made. Consumer contract as
+      // every self-compacting root: read via Batches.read
+      // (readSessions does).
+      if (compactDue(compactEvery, batchId))
+        compactSessions(batch.sparkSession, outRoot, keyCol, gapSec,
+          upTo = batchId - 1, horizonSec = horizonSec)
+      commitSessionBatch(batch, outRoot, batchId, keyCol, tsCol,
+        valueCol, gapSec)
+    }
 
   /** The session-summary interval merge in STORED form (`smin`,
     * `smax`, `n`, `vol_units`) — shared by the serving read and the
@@ -913,8 +806,8 @@ object Ingest {
         }
       })
 
-  /** Per-batch body of [[startSessionSink]] (see
-    * [[commitPatternBatch]] for why these are exposed): the batch's
+  /** Per-batch body of [[startSessionSink]] (exposed for batch
+    * replay, like [[MergeableView.commit]]): the batch's
     * own gap-sessions, reduced to summary rows with exact long units
     * (round(value·100) — the [[graft.util.Exact]] fixed-point). */
   def commitSessionBatch(batch: DataFrame, outRoot: String,
@@ -971,17 +864,12 @@ object Ingest {
                          outRoot: String, checkpoint: String,
                          trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitLinkGraphBatch(batch, outRoot, batchId, srcCol, dstCol)
-      }
-      .start()
+    sink(edges, checkpoint, trigger) { (batch, batchId) =>
+      commitLinkGraphBatch(batch, outRoot, batchId, srcCol, dstCol)
+    }
 
-  /** Per-batch body of [[startLinkGraphSink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
+  /** Per-batch body of [[startLinkGraphSink]] (exposed for batch
+    * replay, like [[MergeableView.commit]]). */
   def commitLinkGraphBatch(batch: DataFrame, outRoot: String,
                            batchId: Long, srcCol: String,
                            dstCol: String): Unit = {
@@ -1021,18 +909,13 @@ object Ingest {
                            checkpoint: String,
                            trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBucketGrainBatch(batch, outRoot, batchId, keyCol, tsCol,
-          valueCol, bucketSec)
-      }
-      .start()
+    sink(events, checkpoint, trigger) { (batch, batchId) =>
+      commitBucketGrainBatch(batch, outRoot, batchId, keyCol, tsCol,
+        valueCol, bucketSec)
+    }
 
-  /** Per-batch body of [[startBucketGrainSink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
+  /** Per-batch body of [[startBucketGrainSink]] (exposed for batch
+    * replay, like [[MergeableView.commit]]). */
   def commitBucketGrainBatch(batch: DataFrame, outRoot: String,
                              batchId: Long, keyCol: String, tsCol: String,
                              valueCol: String, bucketSec: Long): Unit = {
@@ -1071,36 +954,17 @@ object Ingest {
     * `percentile` semantics from the histogram
     * ([[graft.ops.Percentiles.quantilesFromHist]]), so the dashboard
     * answer is bit-identical to batch `percentile` over the
-    * concatenated stream (StreamingSpec). */
-  def startQuantileSink(rows: DataFrame, valueCol: String,
-                        workRoot: String, checkpoint: String,
-                        trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitQuantileBatch(batch, workRoot, batchId, valueCol)
-      }
-      .start()
-
-  /** Per-batch body of [[startQuantileSink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
-  def commitQuantileBatch(batch: DataFrame, workRoot: String,
-                          batchId: Long, valueCol: String): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/valuehist", batchId,
-      graft.ops.Percentiles.valueHistPartial(batch, valueCol),
+    * concatenated stream (StreamingSpec). Run it with [[startView]]. */
+  def quantileView(valueCol: String): MergeableView =
+    MergeableView(QuantileState,
+      graft.ops.Percentiles.valueHistPartial(_, valueCol),
       graft.ops.Percentiles.mergeValueHist)
-    ()
-  }
 
-  /** Serving read for [[startQuantileSink]] (None before the first
+  /** Serving read for [[quantileView]] (None before the first
     * commit). */
   def readQuantiles(spark: SparkSession, workRoot: String,
                     probs: Seq[Double]): Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/valuehist")
+    MergeableView.latest(spark, workRoot, QuantileState)
       .map(h => graft.ops.Percentiles.quantilesFromHist(h, probs))
 
   /** Streaming CDC UPSERT SINK — a change-data-capture log (id, seq,
@@ -1120,17 +984,12 @@ object Ingest {
                    opCol: String, outRoot: String, checkpoint: String,
                    trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitCdcBatch(batch, outRoot, batchId, idCol, seqCol, opCol)
-      }
-      .start()
+    sink(changes, checkpoint, trigger) { (batch, batchId) =>
+      commitCdcBatch(batch, outRoot, batchId, idCol, seqCol, opCol)
+    }
 
-  /** Per-batch body of [[startCdcSink]] (see [[commitPatternBatch]]
-    * for why these are exposed). */
+  /** Per-batch body of [[startCdcSink]] (exposed for batch replay,
+    * like [[MergeableView.commit]]). */
   def commitCdcBatch(batch: DataFrame, outRoot: String, batchId: Long,
                      idCol: String, seqCol: String, opCol: String): Unit = {
     graft.ops.Corpus.cdcLatest(batch, idCol, seqCol, opCol)
@@ -1161,40 +1020,20 @@ object Ingest {
     * per-trigger cost is one partial aggregation of the batch plus a
     * one-row merge — at 100 TB of ingest the quality dashboard is
     * free. Row-local checks only: uniqueness/FK need the key set, so
-    * they stay batch jobs over the at-rest table. */
-  def startDataChecksSink(rows: DataFrame,
-                          checks: Seq[graft.ops.Checks.RowCheck],
-                          workRoot: String, checkpoint: String,
-                          trigger: Trigger = Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitDataChecksBatch(batch, workRoot, batchId, checks)
-      }
-      .start()
-
-  /** Per-batch body of [[startDataChecksSink]] (see
-    * [[commitPatternBatch]] for why these are exposed). */
-  def commitDataChecksBatch(batch: DataFrame, workRoot: String,
-                            batchId: Long,
-                            checks: Seq[graft.ops.Checks.RowCheck]): Unit = {
-    graft.io.VersionedState.mergeCommit(
-      batch.sparkSession, s"$workRoot/datachecks", batchId,
-      graft.ops.Checks.rowCheckPartials(batch, checks),
+    * they stay batch jobs over the at-rest table. Run it with
+    * [[startView]]. */
+  def dataChecksView(checks: Seq[graft.ops.Checks.RowCheck]): MergeableView =
+    MergeableView(DataChecksState,
+      graft.ops.Checks.rowCheckPartials(_, checks),
       graft.ops.Checks.mergeRowCheckPartials)
-    ()
-  }
 
-  /** Serving read for [[startDataChecksSink]]: the current expectation
+  /** Serving read for [[dataChecksView]]: the current expectation
     * report (None before the first commit). `checks` must be the same
     * list the sink runs with. */
   def readDataChecksReport(spark: SparkSession, workRoot: String,
                            checks: Seq[graft.ops.Checks.RowCheck])
       : Option[DataFrame] =
-    graft.io.VersionedState.readLatest(spark, s"$workRoot/datachecks")
+    MergeableView.latest(spark, workRoot, DataChecksState)
       .map(p => graft.ops.Checks.reportFromPartials(p, checks))
 
   /** Incremental NEAR-dup ingest filter: a persisted MinHash band index
@@ -1283,121 +1122,116 @@ object Ingest {
     require(horizonSec >= 0L, s"horizonSec must be >= 0, got $horizonSec")
     // cross-trigger bloom cache — same contract as the line sink's
     var bloomCache: (Long, org.apache.spark.util.sketch.BloomFilter) = null
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // one clock read per batch: the stamp every admitted key gets,
-        // the probe cutoff, and the eviction cutoff all agree
-        val now = clock()
-        val cutoff: Option[Long] =
-          if (horizonSec > 0L) Some(now - horizonSec) else None
-        val evict: DataFrame => DataFrame = cutoff match {
-          case Some(c) => df => df.filter(col("_seen") >= c)
-          case None => graft.io.Batches.noFold
-        }
-        val keys = graft.ops.TextDedup
-          .bandKeys(batch, idCol, textCol, n, k, bands).cache()
-        var admittedKeys: DataFrame = null
-        try {
-          // bound the prior-dir enumeration BEFORE reading it: folding
-          // only batches <= batchId - 1 (committed by definition once
-          // this batch runs) can neither race a replay nor change what
-          // a replayed batch reads — the base holds exactly the dirs
-          // the replay would have enumerated. outRoot folds on the
-          // same cadence: write-only here, but its dir count (and any
-          // downstream consumer's listing) grows per batch all the same
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            // the index fold evicts out-of-horizon rows (state bound);
-            // outRoot is the OUTPUT corpus, not probe state — never
-            // evicted
-            if (bloomGuard)
-              graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-                partitionBy = Seq("p"),
-                deriveTail = df => df.withColumn("p",
-                  pmod(col("band_h"), lit(prefixParts)).cast("int")),
-                foldBase = evict)
-            else
-              graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-                foldBase = evict)
-            graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
-          }
-          val bloomRoot = s"$indexPath/_bloom"
-          val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-            if (!bloomGuard) None
-            else graft.io.BloomState
-              .latestVersionBefore(spark, bloomRoot, below = batchId)
-              .map { v =>
-                if (bloomCache != null && bloomCache._1 == v) bloomCache._2
-                else {
-                  val b = graft.io.BloomState.read(spark, bloomRoot, v)
-                  bloomCache = (v, b)
-                  b
-                }
-              }
-          // cross-batch: drop docs colliding with the persisted index —
-          // guarded: bloom-negative keys provably collide with nothing,
-          // the residue probes the p=-pruned base + flat tails;
-          // unguarded: the full-index semi-join (fails fast on a
-          // pre-b= flat layout rather than forgetting its admissions)
-          val priorHits =
-            if (bloomGuard)
-              nearDupPriorHits(spark, indexPath, batchId, keys, idCol,
-                prevBloom, prefixParts, cutoff)
-            else graft.io.Batches
-              .read(spark, indexPath, below = Some(batchId)) match {
-              case Some(idx) =>
-                val inHorizon = cutoff match {
-                  case Some(c) => idx.filter(col("_seen") >= c)
-                  case None => idx
-                }
-                keys.join(inHorizon.select("band", "band_h"),
-                    Seq("band", "band_h"), "left_semi")
-                  .select(col(idCol)).distinct()
-              case None => keys.select(col(idCol)).limit(0)
-            }
-          // within-batch: keep the smallest id per colliding bucket
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("band", "band_h").orderBy(col(idCol))
-          val batchDups = keys
-            .withColumn("_keep", min(col(idCol)).over(w))
-            .filter(col(idCol) =!= col("_keep"))
-            .select(col(idCol)).distinct()
-          val dropIds = priorHits.union(batchDups).distinct()
-          batch.join(dropIds, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-          // persisted: the frame feeds the index write AND the bloom
-          // append (which also counts it) — one computation, not three
-          admittedKeys = keys.join(dropIds, Seq(idCol), "left_anti")
-            .persist()
-          // horizoned indexes stamp every key with its admission second
-          val indexRows =
-            if (horizonSec > 0L) admittedKeys.withColumn("_seen", lit(now))
-            else admittedKeys
-          indexRows
-            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-          if (bloomGuard) {
-            // bloom LAST — committed only once the index rows it
-            // certifies are on disk (same crash story as the line
-            // sink). Build site is adaptive (BloomState.append):
-            // driver insert at trigger scale, distributed
-            // stat.bloomFilter past bloomDriverMaxRows so a CATCH-UP
-            // batch after downtime never collects backlog-scale rows
-            val nb = graft.io.BloomState.append(
-              admittedKeys.select(col("band_h")), "band_h", prevBloom,
-              expectedKeys, fpp, bloomDriverMaxRows)
-            graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
-            bloomCache = (batchId, nb)
-          }
-        } finally {
-          if (admittedKeys != null) admittedKeys.unpersist()
-          keys.unpersist()
-          ()
-        }
+    sink(docs, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // one clock read per batch: the stamp every admitted key gets,
+      // the probe cutoff, and the eviction cutoff all agree
+      val now = clock()
+      val cutoff: Option[Long] =
+        if (horizonSec > 0L) Some(now - horizonSec) else None
+      val evict: DataFrame => DataFrame = cutoff match {
+        case Some(c) => df => df.filter(col("_seen") >= c)
+        case None => graft.io.Batches.noFold
       }
-      .start()
+      val keys = graft.ops.TextDedup
+        .bandKeys(batch, idCol, textCol, n, k, bands).cache()
+      var admittedKeys: DataFrame = null
+      try {
+        // bound the prior-dir enumeration BEFORE reading it: folding
+        // only batches <= batchId - 1 (committed by definition once
+        // this batch runs) can neither race a replay nor change what
+        // a replayed batch reads — the base holds exactly the dirs
+        // the replay would have enumerated. outRoot folds on the
+        // same cadence: write-only here, but its dir count (and any
+        // downstream consumer's listing) grows per batch all the same
+        if (compactDue(compactEvery, batchId)) {
+          // the index fold evicts out-of-horizon rows (state bound);
+          // outRoot is the OUTPUT corpus, not probe state — never
+          // evicted
+          if (bloomGuard)
+            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
+              partitionBy = Seq("p"),
+              deriveTail = df => df.withColumn("p",
+                pmod(col("band_h"), lit(prefixParts)).cast("int")),
+              foldBase = evict)
+          else
+            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
+              foldBase = evict)
+          graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
+        }
+        val bloomRoot = s"$indexPath/_bloom"
+        val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
+          if (!bloomGuard) None
+          else graft.io.BloomState
+            .latestVersionBefore(spark, bloomRoot, below = batchId)
+            .map { v =>
+              if (bloomCache != null && bloomCache._1 == v) bloomCache._2
+              else {
+                val b = graft.io.BloomState.read(spark, bloomRoot, v)
+                bloomCache = (v, b)
+                b
+              }
+            }
+        // cross-batch: drop docs colliding with the persisted index —
+        // guarded: bloom-negative keys provably collide with nothing,
+        // the residue probes the p=-pruned base + flat tails;
+        // unguarded: the full-index semi-join (fails fast on a
+        // pre-b= flat layout rather than forgetting its admissions)
+        val priorHits =
+          if (bloomGuard)
+            nearDupPriorHits(spark, indexPath, batchId, keys, idCol,
+              prevBloom, prefixParts, cutoff)
+          else graft.io.Batches
+            .read(spark, indexPath, below = Some(batchId)) match {
+            case Some(idx) =>
+              val inHorizon = cutoff match {
+                case Some(c) => idx.filter(col("_seen") >= c)
+                case None => idx
+              }
+              keys.join(inHorizon.select("band", "band_h"),
+                  Seq("band", "band_h"), "left_semi")
+                .select(col(idCol)).distinct()
+            case None => keys.select(col(idCol)).limit(0)
+          }
+        // within-batch: keep the smallest id per colliding bucket
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("band", "band_h").orderBy(col(idCol))
+        val batchDups = keys
+          .withColumn("_keep", min(col(idCol)).over(w))
+          .filter(col(idCol) =!= col("_keep"))
+          .select(col(idCol)).distinct()
+        val dropIds = priorHits.union(batchDups).distinct()
+        batch.join(dropIds, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        // persisted: the frame feeds the index write AND the bloom
+        // append (which also counts it) — one computation, not three
+        admittedKeys = keys.join(dropIds, Seq(idCol), "left_anti")
+          .persist()
+        // horizoned indexes stamp every key with its admission second
+        val indexRows =
+          if (horizonSec > 0L) admittedKeys.withColumn("_seen", lit(now))
+          else admittedKeys
+        indexRows
+          .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+        if (bloomGuard) {
+          // bloom LAST — committed only once the index rows it
+          // certifies are on disk (same crash story as the line
+          // sink). Build site is adaptive (BloomState.append):
+          // driver insert at trigger scale, distributed
+          // stat.bloomFilter past bloomDriverMaxRows so a CATCH-UP
+          // batch after downtime never collects backlog-scale rows
+          val nb = graft.io.BloomState.append(
+            admittedKeys.select(col("band_h")), "band_h", prevBloom,
+            expectedKeys, fpp, bloomDriverMaxRows)
+          graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
+          bloomCache = (batchId, nb)
+        }
+      } finally {
+        if (admittedKeys != null) admittedKeys.unpersist()
+        keys.unpersist()
+        ()
+      }
+    }
   }
 
   /** First 60 bits of a 16-byte md5 digest as a non-negative BIGINT —
@@ -1723,113 +1557,108 @@ object Ingest {
     // trigger against the cheap file listing, so restarts and replays
     // fall back to a fresh read, never a stale filter)
     var bloomCache: (Long, org.apache.spark.util.sketch.BloomFilter) = null
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val lines = batch.select(col(idCol),
-          posexplode(split(coalesce(col(textCol), lit("")),
-            java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
-          .persist()
-        var admitted: DataFrame = null
-        try {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            if (bloomGuard)
-              graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-                partitionBy = Seq("p"),
-                deriveTail = df => df.withColumn("p",
-                  pmod(h64FromMd5(col("_h")), lit(prefixParts)).cast("int")))
-            else
-              graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1)
-            graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
-          }
-          val cand = lines.filter(length(col("line")) >= minChars)
-            .withColumn("_h", unhex(md5(col("line").cast("binary"))))
-          val exempt = lines.filter(length(col("line")) < minChars)
-            .withColumn("_h", lit(null).cast("binary"))
-          // within-batch first occurrence of each hash — min(struct) is
-          // partial-aggregable; all rows of a hash group share the same
-          // line text, so the struct carries the winner's text out
-          val firstInBatch = cand
-            .groupBy(col("_h"))
-            .agg(min(struct(col(idCol), col("pos"), col("line"))).as("_w"))
-            .select(col("_h"),
-              col("_w").getField(idCol).as(idCol),
-              col("_w").getField("pos").as("pos"),
-              col("_w").getField("line").as("line"))
-          // ...minus lines any COMMITTED prior batch admitted
-          val bloomRoot = s"$indexPath/_bloom"
-          val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-            if (!bloomGuard) None
-            else graft.io.BloomState
-              .latestVersionBefore(spark, bloomRoot, below = batchId)
-              .map { v =>
-                if (bloomCache != null && bloomCache._1 == v) bloomCache._2
-                else {
-                  val b = graft.io.BloomState.read(spark, bloomRoot, v)
-                  bloomCache = (v, b)
-                  b
-                }
-              }
-          admitted = (if (bloomGuard) {
-            val withKeys = firstInBatch
-              .withColumn("_h64", h64FromMd5(col("_h")))
-              .withColumn("p",
-                pmod(col("_h64"), lit(prefixParts)).cast("int"))
-            lineDedupAdmit(spark, indexPath, batchId, withKeys, prevBloom)
-          } else {
-            val priorHashes = graft.io.Batches
-              .read(spark, indexPath, below = Some(batchId)) match {
-              case Some(idx) => idx.select(col("_h"))
-              case None => cand.select(col("_h")).limit(0)
-            }
-            firstInBatch.join(priorHashes, Seq("_h"), "left_anti")
-          }).persist()
-          val kept = admitted.select(col("_h"), col(idCol), col("pos"),
-            col("line")).unionByName(exempt)
-          val reassembled = kept.groupBy(col(idCol))
-            .agg(array_join(transform(
-              array_sort(collect_list(struct(col("pos"), col("line")))),
-              x => x.getField("line")), sep).as("_text"))
-          batch.drop(textCol)
-            .join(reassembled, Seq(idCol), "left")
-            .withColumn(textCol, coalesce(col("_text"), lit("")))
-            .drop("_text")
-            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-          if (bloomGuard) {
-            // tail dirs are FLAT — identical layout to the unguarded
-            // sink (batch-scale, read whole by the probe); only the
-            // compaction fold pays the p= many-directories layout
-            admitted.select(col("_h"))
-              .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-            // bloom LAST: committed only once the index rows it
-            // certifies are on disk (any crash before here replays the
-            // whole batch against the previous bloom + index). Build
-            // site is adaptive (BloomState.append): at trigger scale
-            // the admitted hashes insert on the driver into a COPY of
-            // the previous filter (8 bytes per distinct new line —
-            // measured cheaper than per-partition full-size filters);
-            // past bloomDriverMaxRows (a catch-up batch after
-            // downtime) the build is a distributed stat.bloomFilter
-            // merged executor-side, so driver memory never scales
-            // with the backlog.
-            val nb = graft.io.BloomState.append(
-              admitted.select(col("_h64")), "_h64", prevBloom,
-              expectedLines, fpp, bloomDriverMaxRows)
-            graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
-            bloomCache = (batchId, nb)
-          } else
-            admitted.select(col("_h")).distinct()
-              .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-        } finally {
-          if (admitted != null) admitted.unpersist()
-          lines.unpersist()
-          ()
+    sink(docs, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val lines = batch.select(col(idCol),
+        posexplode(split(coalesce(col(textCol), lit("")),
+          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+        .persist()
+      var admitted: DataFrame = null
+      try {
+        if (compactDue(compactEvery, batchId)) {
+          if (bloomGuard)
+            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
+              partitionBy = Seq("p"),
+              deriveTail = df => df.withColumn("p",
+                pmod(h64FromMd5(col("_h")), lit(prefixParts)).cast("int")))
+          else
+            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1)
+          graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
         }
+        val cand = lines.filter(length(col("line")) >= minChars)
+          .withColumn("_h", unhex(md5(col("line").cast("binary"))))
+        val exempt = lines.filter(length(col("line")) < minChars)
+          .withColumn("_h", lit(null).cast("binary"))
+        // within-batch first occurrence of each hash — min(struct) is
+        // partial-aggregable; all rows of a hash group share the same
+        // line text, so the struct carries the winner's text out
+        val firstInBatch = cand
+          .groupBy(col("_h"))
+          .agg(min(struct(col(idCol), col("pos"), col("line"))).as("_w"))
+          .select(col("_h"),
+            col("_w").getField(idCol).as(idCol),
+            col("_w").getField("pos").as("pos"),
+            col("_w").getField("line").as("line"))
+        // ...minus lines any COMMITTED prior batch admitted
+        val bloomRoot = s"$indexPath/_bloom"
+        val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
+          if (!bloomGuard) None
+          else graft.io.BloomState
+            .latestVersionBefore(spark, bloomRoot, below = batchId)
+            .map { v =>
+              if (bloomCache != null && bloomCache._1 == v) bloomCache._2
+              else {
+                val b = graft.io.BloomState.read(spark, bloomRoot, v)
+                bloomCache = (v, b)
+                b
+              }
+            }
+        admitted = (if (bloomGuard) {
+          val withKeys = firstInBatch
+            .withColumn("_h64", h64FromMd5(col("_h")))
+            .withColumn("p",
+              pmod(col("_h64"), lit(prefixParts)).cast("int"))
+          lineDedupAdmit(spark, indexPath, batchId, withKeys, prevBloom)
+        } else {
+          val priorHashes = graft.io.Batches
+            .read(spark, indexPath, below = Some(batchId)) match {
+            case Some(idx) => idx.select(col("_h"))
+            case None => cand.select(col("_h")).limit(0)
+          }
+          firstInBatch.join(priorHashes, Seq("_h"), "left_anti")
+        }).persist()
+        val kept = admitted.select(col("_h"), col(idCol), col("pos"),
+          col("line")).unionByName(exempt)
+        val reassembled = kept.groupBy(col(idCol))
+          .agg(array_join(transform(
+            array_sort(collect_list(struct(col("pos"), col("line")))),
+            x => x.getField("line")), sep).as("_text"))
+        batch.drop(textCol)
+          .join(reassembled, Seq(idCol), "left")
+          .withColumn(textCol, coalesce(col("_text"), lit("")))
+          .drop("_text")
+          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        if (bloomGuard) {
+          // tail dirs are FLAT — identical layout to the unguarded
+          // sink (batch-scale, read whole by the probe); only the
+          // compaction fold pays the p= many-directories layout
+          admitted.select(col("_h"))
+            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+          // bloom LAST: committed only once the index rows it
+          // certifies are on disk (any crash before here replays the
+          // whole batch against the previous bloom + index). Build
+          // site is adaptive (BloomState.append): at trigger scale
+          // the admitted hashes insert on the driver into a COPY of
+          // the previous filter (8 bytes per distinct new line —
+          // measured cheaper than per-partition full-size filters);
+          // past bloomDriverMaxRows (a catch-up batch after
+          // downtime) the build is a distributed stat.bloomFilter
+          // merged executor-side, so driver memory never scales
+          // with the backlog.
+          val nb = graft.io.BloomState.append(
+            admitted.select(col("_h64")), "_h64", prevBloom,
+            expectedLines, fpp, bloomDriverMaxRows)
+          graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
+          bloomCache = (batchId, nb)
+        } else
+          admitted.select(col("_h")).distinct()
+            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+      } finally {
+        if (admitted != null) admitted.unpersist()
+        lines.unpersist()
+        ()
       }
-      .start()
+    }
   }
 
   /** Offline recall audit for [[startNearDupFilterSink]]: the sink
@@ -1916,43 +1745,38 @@ object Ingest {
                                       trigger: Trigger = Trigger.ProcessingTime(0L),
                                       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val keys = graft.ops.Embeddings
-          .signBandKeys(batch, idCol, vecCol, dim, planesPerBand, bands)
-          .cache()
-        try {
-          maybeCompact(spark, compactEvery, batchId, indexPath, outRoot)
-          val priorHits = graft.io.Batches
-            .read(spark, indexPath, below = Some(batchId)) match {
-            case Some(idx) =>
-              keys.join(
-                  idx.select(col("band"), col("key"), col("qv").as("_iqv")),
-                  Seq("band", "key"))
-                .filter(graft.ops.Embeddings
-                  .qcosine(col("qv"), col("_iqv")) >= minCos)
-                .select(col(idCol)).distinct()
-            case None => batch.select(col(idCol)).limit(0)
-          }
-          val batchDominated = keys.as("x").join(keys.as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.key") === col("y.key") &&
-                col(s"x.$idCol") < col(s"y.$idCol"))
-            .filter(graft.ops.Embeddings
-              .qcosine(col("x.qv"), col("y.qv")) >= minCos)
-            .select(col(s"y.$idCol").as(idCol)).distinct()
-          val dropIds = priorHits.union(batchDominated).distinct()
-          batch.join(dropIds, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-          keys.join(dropIds, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-        } finally { keys.unpersist(); () }
-      }
-      .start()
+    sink(vecs, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val keys = graft.ops.Embeddings
+        .signBandKeys(batch, idCol, vecCol, dim, planesPerBand, bands)
+        .cache()
+      try {
+        maybeCompact(spark, compactEvery, batchId, indexPath, outRoot)
+        val priorHits = graft.io.Batches
+          .read(spark, indexPath, below = Some(batchId)) match {
+          case Some(idx) =>
+            keys.join(
+                idx.select(col("band"), col("key"), col("qv").as("_iqv")),
+                Seq("band", "key"))
+              .filter(graft.ops.Embeddings
+                .qcosine(col("qv"), col("_iqv")) >= minCos)
+              .select(col(idCol)).distinct()
+          case None => batch.select(col(idCol)).limit(0)
+        }
+        val batchDominated = keys.as("x").join(keys.as("y"),
+            col("x.band") === col("y.band") &&
+              col("x.key") === col("y.key") &&
+              col(s"x.$idCol") < col(s"y.$idCol"))
+          .filter(graft.ops.Embeddings
+            .qcosine(col("x.qv"), col("y.qv")) >= minCos)
+          .select(col(s"y.$idCol").as(idCol)).distinct()
+        val dropIds = priorHits.union(batchDominated).distinct()
+        batch.join(dropIds, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        keys.join(dropIds, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+      } finally { keys.unpersist(); () }
+    }
 
   /** Eval-contamination ingest guard — the streaming half of the
     * train/eval hygiene check ([[graft.ops.TextDedup.contamination]]):
@@ -2009,28 +1833,23 @@ object Ingest {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     benchHashes.count() // materialize before the first trigger fires
     val probe = if (broadcastBench) broadcast(benchHashes) else benchHashes
-    val query = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
+    val query = sink(docs, checkpoint, trigger) { (batch, batchId) =>
+      batch.persist()
+      try {
+        maybeCompact(batch.sparkSession, compactEvery, batchId,
+          outRoot, quarantineRoot)
+        val refused = graft.ops.TextDedup
+          .contaminationAgainst(batch, idCol, textCol, n, probe)
+          .filter(col("contamination_ratio") >= maxRatio)
+          .persist()
         try {
-          maybeCompact(batch.sparkSession, compactEvery, batchId,
-            outRoot, quarantineRoot)
-          val refused = graft.ops.TextDedup
-            .contaminationAgainst(batch, idCol, textCol, n, probe)
-            .filter(col("contamination_ratio") >= maxRatio)
-            .persist()
-          try {
-            batch.join(refused, Seq(idCol), "inner")
-              .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
-            batch.join(refused.select(col(idCol)), Seq(idCol), "left_anti")
-              .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-          } finally { refused.unpersist(); () }
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+          batch.join(refused, Seq(idCol), "inner")
+            .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
+          batch.join(refused.select(col(idCol)), Seq(idCol), "left_anti")
+            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        } finally { refused.unpersist(); () }
+      } finally { batch.unpersist(); () }
+    }
     val qid = query.id
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -2074,29 +1893,24 @@ object Ingest {
                         trigger: Trigger = Trigger.ProcessingTime(0L),
                         compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          import graft.ops.TextStats
-          maybeCompact(batch.sparkSession, compactEvery, batchId,
-            outRoot, quarantineRoot)
-          // audit record FIRST (original text + counts for carriers) —
-          // if the batch dies between the two writes, a replay
-          // rewrites both dirs, so order only affects what a
-          // mid-crash window can observe, and quarantine-without-out
-          // is the safe side (never redaction-less text in out)
-          TextStats.withPiiStats(batch, textCol)
-            .filter(col("has_pii") > 0L)
-            .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
-          batch.withColumn(textCol, TextStats.piiRedacted(col(textCol)))
-            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-        } finally { batch.unpersist(); () }
-      }
-      .start()
+    sink(docs, checkpoint, trigger) { (batch, batchId) =>
+      batch.persist()
+      try {
+        import graft.ops.TextStats
+        maybeCompact(batch.sparkSession, compactEvery, batchId,
+          outRoot, quarantineRoot)
+        // audit record FIRST (original text + counts for carriers) —
+        // if the batch dies between the two writes, a replay
+        // rewrites both dirs, so order only affects what a
+        // mid-crash window can observe, and quarantine-without-out
+        // is the safe side (never redaction-less text in out)
+        TextStats.withPiiStats(batch, textCol)
+          .filter(col("has_pii") > 0L)
+          .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
+        batch.withColumn(textCol, TextStats.piiRedacted(col(textCol)))
+          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+      } finally { batch.unpersist(); () }
+    }
 
   /** Streaming IVF index maintenance: append each micro-batch of new
     * embedding rows into the persisted cell-partitioned index
@@ -2120,18 +1934,13 @@ object Ingest {
                          trigger: Trigger = Trigger.ProcessingTime(0L),
                          compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.ops.Embeddings.compactIvfIndex(batch.sparkSession,
-            indexPath, upTo = batchId - 1)
-        graft.ops.Embeddings.appendToIvfIndex(model, batch, idCol, vecCol,
-          indexPath, batchTag = Some(batchId))
-      }
-      .start()
+    sink(vectors, checkpoint, trigger) { (batch, batchId) =>
+      if (compactDue(compactEvery, batchId))
+        graft.ops.Embeddings.compactIvfIndex(batch.sparkSession,
+          indexPath, upTo = batchId - 1)
+      graft.ops.Embeddings.appendToIvfIndex(model, batch, idCol, vecCol,
+        indexPath, batchTag = Some(batchId))
+    }
 
   /** Streaming maintenance of the at-rest BM25 search index
     * ([[graft.ops.Retrieval.writeSearchIndex]]): each micro-batch of
@@ -2149,20 +1958,15 @@ object Ingest {
                                  trigger: Trigger = Trigger.ProcessingTime(0L),
                                  compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // fold only batches this stream has already committed
-        // (upTo = batchId - 1), the startIvfAppendSink bound
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.ops.Retrieval.compactSearchIndex(batch.sparkSession,
-            indexPath, upTo = batchId - 1)
-        graft.ops.Retrieval.appendToSearchIndex(batch, idCol, textCol,
-          indexPath, batchTag = Some(batchId))
-      }
-      .start()
+    sink(docs, checkpoint, trigger) { (batch, batchId) =>
+      // fold only batches this stream has already committed
+      // (upTo = batchId - 1), the startIvfAppendSink bound
+      if (compactDue(compactEvery, batchId))
+        graft.ops.Retrieval.compactSearchIndex(batch.sparkSession,
+          indexPath, upTo = batchId - 1)
+      graft.ops.Retrieval.appendToSearchIndex(batch, idCol, textCol,
+        indexPath, batchTag = Some(batchId))
+    }
 
   /** End-to-end wiring: detections stream → dedup → parquet history sink
     * (partitioned by date like the reference's lake) + console-able

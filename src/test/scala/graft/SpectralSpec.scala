@@ -121,9 +121,8 @@ class SpectralSpec extends SparkSpec {
     val (df, _) = planted()
     val work = java.nio.file.Files.createTempDirectory("gram-mv").toString
     for (b <- 0 until 3) {
-      graft.streaming.Ingest.commitGramBatch(
-        df.filter(pmod(col("vec_id"), lit(3)) === b), work, b.toLong,
-        "embedding")
+      graft.streaming.Ingest.gramView("embedding").commit(
+        df.filter(pmod(col("vec_id"), lit(3)) === b), work, b.toLong)
       val served = graft.streaming.Ingest
         .readPcaVariance(spark, work, dim, 12).get.collect().toSeq
       val batchFit = Spectral.pcaVariance(
@@ -132,8 +131,8 @@ class SpectralSpec extends SparkSpec {
       assert(served == batchFit, s"batch $b")
     }
     // crash-replay: recommitting the last batch must not double-count
-    graft.streaming.Ingest.commitGramBatch(
-      df.filter(pmod(col("vec_id"), lit(3)) === 2), work, 2L, "embedding")
+    graft.streaming.Ingest.gramView("embedding").commit(
+      df.filter(pmod(col("vec_id"), lit(3)) === 2), work, 2L)
     val replayed = graft.streaming.Ingest
       .readPcaVariance(spark, work, dim, 12).get.collect().toSeq
     val full = Spectral.pcaVariance(df, "embedding", dim, 12)

@@ -353,11 +353,12 @@ class StreamingSpec extends SparkSpec {
     val all = batches.flatten.toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("graft_shfreq")
     val mem = MemoryStream[(Long, String)]
-    val q = Ingest.startShingleFreqSink(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", 3, s"$tmp/work", s"$tmp/cp")
+    val view = Ingest.shingleFreqView("doc_id", "text", 3)
+    val q = Ingest.startView(view, mem.toDF().toDF("doc_id", "text"),
+      s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
-    val freq = Ingest.readShingleFreq(spark, s"$tmp/work").get
+    val freq = view.latest(spark, s"$tmp/work").get
     // state == full-corpus doc frequencies, exactly
     val expectFreq = ops.TextDedup
       .shingleFreqPartials(all, "doc_id", "text", 3)
@@ -406,11 +407,12 @@ class StreamingSpec extends SparkSpec {
     val all = batches.flatten.toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("graft_unigram")
     val mem = MemoryStream[(Long, String)]
-    val q = Ingest.startUnigramSink(mem.toDF().toDF("doc_id", "text"),
-      "text", s"$tmp/work", s"$tmp/cp")
+    val view = Ingest.unigramView("text")
+    val q = Ingest.startView(view, mem.toDF().toDF("doc_id", "text"),
+      s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
-    val counts = Ingest.readUnigramCounts(spark, s"$tmp/work").get
+    val counts = view.latest(spark, s"$tmp/work").get
     // state == full-corpus counts, exactly
     val expectCounts = ops.TextStats.unigramPartials(all, "text")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -451,8 +453,8 @@ class StreamingSpec extends SparkSpec {
     val nB = 64
     val tmp = java.nio.file.Files.createTempDirectory("graft_dsirmv")
     val mem = MemoryStream[(Long, String)]
-    val q = Ingest.startDsirRawCountSink(mem.toDF().toDF("doc_id", "text"),
-      "text", nB, s"$tmp/work", s"$tmp/cp")
+    val q = Ingest.startView(Ingest.dsirRawCountView("text", nB),
+      mem.toDF().toDF("doc_id", "text"), s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     // folded state == single-pass raw counts, exactly
@@ -491,8 +493,8 @@ class StreamingSpec extends SparkSpec {
     val all = batches.flatten.toDF("id", "src")
     val tmp = java.nio.file.Files.createTempDirectory("graft_srcmv")
     val mem = MemoryStream[(Long, String)]
-    val q = Ingest.startSourceCountSink(mem.toDF().toDF("id", "src"),
-      "src", s"$tmp/work", s"$tmp/cp")
+    val q = Ingest.startView(Ingest.sourceCountView("src"),
+      mem.toDF().toDF("id", "src"), s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     // state == full-corpus histogram, exactly (additive long counts)
@@ -514,6 +516,74 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch && streamed.nonEmpty)
   }
 
+  test("every mergeable view: recommitting batch 2 over a stale staging " +
+    "dir serves the same state and leaves exactly v=1 and v=2") {
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val events = Seq(
+      (0L, 1L, ts("2024-02-05 08:10:00"), 5.0),
+      (1L, 1L, ts("2024-02-05 08:40:00"), 2.5),
+      (2L, 2L, ts("2024-02-05 09:00:00"), 3.0),
+      (3L, 1L, ts("2024-02-12 08:15:00"), 11.0),
+      (4L, 2L, ts("2024-02-06 09:30:00"), 4.0),
+      (5L, 2L, ts("2024-02-06 10:30:00"), 20.0),
+      (6L, 1L, ts("2024-02-07 11:00:00"), 7.25),
+      (7L, 2L, ts("2024-02-07 11:05:00"), 0.07),
+      (8L, 1L, ts("2024-02-08 12:00:00"), 9.5))
+      .toDF("id", "user_id", "ts", "value")
+    val docs = Seq(
+      (0L, "alpha beta gamma alpha", "web"),
+      (1L, "beta beta delta", "wiki"),
+      (2L, "gamma gamma alpha epsilon", "web"),
+      (3L, "alpha beta gamma alpha", null),
+      (4L, "delta alpha beta beta zeta", "books"),
+      (5L, "one two three four five", "web"))
+      .toDF("id", "text", "src")
+    val vecs = (0 until 12).map(i => (i.toLong,
+        (0 until 8).map(k => (((i * (k + 3)) % 17) - 8 + 0.01 * k).toFloat)))
+      .toDF("id", "embedding")
+    val checks = Seq(ops.Checks.notNull("value"),
+      ops.Checks.inRange("value", 0.0, 10.0))
+    val views = Seq(
+      Ingest.patternView("user_id", "ts", "value") -> events,
+      Ingest.gramView("embedding") -> vecs,
+      Ingest.hourlyView("user_id", "ts", "value") -> events,
+      Ingest.unigramView("text") -> docs,
+      Ingest.shingleFreqView("id", "text", 3) -> docs,
+      Ingest.bigramView("text") -> docs,
+      Ingest.profileView -> docs,
+      Ingest.sourceCountView("src") -> docs,
+      Ingest.dsirRawCountView("text", 16) -> docs,
+      Ingest.quantileView("value") -> events,
+      Ingest.dataChecksView(checks) -> events)
+    // the on-disk state dir names are the deployed layout
+    assert(views.map(_._1.name).toSet == Set("pattern", "gram", "hourly",
+      "unigram", "shinglefreq", "bigram", "profile", "sourcecounts",
+      "dsirraw", "valuehist", "datachecks"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map {
+        case a: Array[Byte] => a.toSeq
+        case x => x
+      }.mkString("|")).toSeq.sorted
+    views.foreach { case (view, input) =>
+      def batch(b: Long) = input.filter(pmod(col("id"), lit(3)) === b)
+      def commitAll(work: String): Unit =
+        (0L to 2L).foreach(b => view.commit(batch(b), work, b))
+      val plain = java.nio.file.Files.createTempDirectory("mvplain").toString
+      commitAll(plain)
+      val work = java.nio.file.Files.createTempDirectory("mvreplay").toString
+      commitAll(work)
+      // a crash mid-commit of batch 2 leaves its staging dir behind
+      spark.range(3).write.parquet(s"$work/${view.name}/_staging_2")
+      view.commit(batch(2L), work, 2L)
+      assert(rows(view.latest(spark, work).get) ==
+        rows(view.latest(spark, plain).get), view.name)
+      val versions = new java.io.File(s"$work/${view.name}").list()
+        .filter(_.startsWith("v=")).toSet
+      assert(versions == Set("v=1", "v=2"), view.name)
+    }
+  }
+
   test("bigram MV: streamed state scores bit-identically to the batch operator") {
     implicit val sc = spark.sqlContext
     import spark.implicits._
@@ -523,11 +593,12 @@ class StreamingSpec extends SparkSpec {
     val all = batches.flatten.toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("graft_bigram")
     val mem = MemoryStream[(Long, String)]
-    val q = Ingest.startBigramSink(mem.toDF().toDF("doc_id", "text"),
-      "text", s"$tmp/work", s"$tmp/cp")
+    val view = Ingest.bigramView("text")
+    val q = Ingest.startView(view, mem.toDF().toDF("doc_id", "text"),
+      s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
-    val counts = Ingest.readBigramCounts(spark, s"$tmp/work").get
+    val counts = view.latest(spark, s"$tmp/work").get
     val expectCounts = ops.TextStats.bigramPartials(all, "text")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts.collect()
@@ -1003,8 +1074,8 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("hoursink").toString
     val mem = MemoryStream[(Long, Timestamp, Double)]
     val events = mem.toDS().toDF("user_id", "ts", "value")
-    val q = Ingest.startHourlySink(events, "user_id", "ts", "value",
-      s"$dir/work", s"$dir/ckpt")
+    val q = Ingest.startView(Ingest.hourlyView("user_id", "ts", "value"),
+      events, s"$dir/work", s"$dir/ckpt")
     try {
       // batch 2 adds more volume to an hour batch 1 already opened
       val batches = Seq(
@@ -1317,8 +1388,8 @@ class StreamingSpec extends SparkSpec {
     import graft.ops.Profiler
     val tmp = java.nio.file.Files.createTempDirectory("graft_prof").toString
     val mem = MemoryStream[(Long, String, Double)]
-    val q = Ingest.startProfileSink(mem.toDF().toDF("id", "cat", "v"),
-      s"$tmp/work", s"$tmp/cp")
+    val q = Ingest.startView(Ingest.profileView,
+      mem.toDF().toDF("id", "cat", "v"), s"$tmp/work", s"$tmp/cp")
     val slices = Seq(
       (0 until 40).map(i => (i.toLong, if (i % 5 == 0) null else s"c${i % 7}",
         i * 1.5)),
@@ -1751,8 +1822,8 @@ class StreamingSpec extends SparkSpec {
     val probs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_qmv")
     val mem = MemoryStream[Double]
-    val q = Ingest.startQuantileSink(mem.toDF().toDF("value"),
-      "value", s"$tmp/mv", s"$tmp/cp")
+    val q = Ingest.startView(Ingest.quantileView("value"),
+      mem.toDF().toDF("value"), s"$tmp/mv", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     val served = Ingest.readQuantiles(spark, s"$tmp/mv", probs)
@@ -1819,9 +1890,8 @@ class StreamingSpec extends SparkSpec {
       Seq((4L, Some(-1.0), "A"), (5L, Some(3.0), "N")))
     val tmp = java.nio.file.Files.createTempDirectory("graft_dcmv")
     val mem = MemoryStream[(Long, Option[Double], String)]
-    val q = Ingest.startDataChecksSink(
-      mem.toDF().toDF("id", "v", "flag"), checks,
-      s"$tmp/work", s"$tmp/cp")
+    val q = Ingest.startView(Ingest.dataChecksView(checks),
+      mem.toDF().toDF("id", "v", "flag"), s"$tmp/work", s"$tmp/cp")
     try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     val served = Ingest.readDataChecksReport(spark, s"$tmp/work", checks)
@@ -1845,9 +1915,8 @@ class StreamingSpec extends SparkSpec {
     val rows = (0 until 60).map(i => (i.toLong, vec(i)))
     val mem = MemoryStream[(Long, Seq[Float])]
     val dir = java.nio.file.Files.createTempDirectory("gram-stream").toString
-    val q = Ingest.startGramSink(
-      mem.toDF().toDF("vec_id", "embedding"), "embedding",
-      s"$dir/work", s"$dir/ckpt")
+    val q = Ingest.startView(Ingest.gramView("embedding"),
+      mem.toDF().toDF("vec_id", "embedding"), s"$dir/work", s"$dir/ckpt")
     try {
       val (b1, b2) = rows.splitAt(25)
       mem.addData(b1: _*); q.processAllAvailable()
