@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - `b=-(w+2)`, w >= 0 — the compacted base holding every batch
   *     id <= w. The watermark rides IN THE DIR NAME, so its publish is
   *     one atomic rename and readers never consult side state. (The
-  *     encoding skips -1, which the IVF layout reserves for its base
-  *     build — one convention across both layouts.)
+  *     tag rules are [[Tagged]]'s, shared with the indexes' layout,
+  *     whose base build owns -1.)
   *
   * Read rule ([[liveDirs]]): take the base dir with the HIGHEST
   * watermark w, plus batch dirs with id > w. Everything else —
@@ -58,16 +58,36 @@ object Batches {
     * the fold's row shrink otherwise. */
   val noFold: DataFrame => DataFrame = identity
 
-  private[io] def idOf(name: String): Option[Long] =
-    if (name.startsWith("b=")) name.stripPrefix("b=").toLongOption else None
-
   private def batchIds(s: SparkSession, root: String): Seq[Long] =
-    Fs.listDirNames(s, root).flatMap(idOf(_))
+    Fs.listDirNames(s, root).flatMap(Tagged.tagOf)
+
+  private def dir(root: String, id: Long): String =
+    s"$root/${Tagged.dirName(id)}"
 
   /** High-water batch id folded into the compacted base; -1 if the root
     * has never been compacted (or doesn't exist). */
   def watermark(s: SparkSession, root: String): Long =
-    batchIds(s, root).filter(_ <= -2L).map(-_ - 2L).maxOption.getOrElse(-1L)
+    Tagged.watermarkOf(batchIds(s, root))
+
+  /** Write one micro-batch's rows as its own `b=<batchId>` dir,
+    * overwriting it — the replay-idempotent write of every sink on
+    * this layout. */
+  def write(df: DataFrame, root: String, batchId: Long): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(dir(root, batchId))
+
+  /** Whether a [[liveDirs]] entry is the compacted base (else a tail). */
+  def isBase(path: String): Boolean =
+    Tagged.tagOf(new org.apache.hadoop.fs.Path(path).getName)
+      .exists(Tagged.foldedThrough(_).nonEmpty)
+
+  /** The compacted base dir holding every batch id <= `w`. */
+  def baseDir(root: String, w: Long): String = dir(root, Tagged.baseTag(w))
+
+  /** The highest batch id the [[liveDirs]] entries `dirs` hold (a base
+    * counts as its watermark). */
+  def highWater(dirs: Seq[String]): Long =
+    dirs.flatMap(d => Tagged.tagOf(new org.apache.hadoop.fs.Path(d).getName))
+      .map(t => Tagged.foldedThrough(t).getOrElse(t)).max
 
   /** Fail fast on a pre-`b=` layout: parquet files sitting directly at
     * `root` (the old flat-append sinks wrote these). Silently ignoring
@@ -96,14 +116,14 @@ object Batches {
   def liveDirs(s: SparkSession, root: String,
                below: Option[Long] = None): Seq[String] = {
     val ids = batchIds(s, root)
-    val w = ids.filter(_ <= -2L).map(-_ - 2L).maxOption.getOrElse(-1L)
+    val w = Tagged.watermarkOf(ids)
     below.foreach(b => require(w < b,
       s"$root compacted through batch $w, at or past the reader's " +
         s"current batch $b — a fold ran beyond the stream's committed " +
         "frontier (upTo must stay <= the last checkpointed batch)"))
-    val base = if (w >= 0L) Seq(-(w + 2L)) else Nil
+    val base = if (w >= 0L) Seq(Tagged.baseTag(w)) else Nil
     val tail = ids.filter(id => id >= 0L && id > w && below.forall(id < _))
-    (base ++ tail.sorted).map(id => s"$root/b=$id")
+    (base ++ tail.sorted).map(dir(root, _))
   }
 
   /** Read the layout's live content (base + tail) with `b` as a
@@ -146,8 +166,9 @@ object Batches {
     * pre-write shuffle is a repartition BY those columns (each value
     * lands in ~one task's files) instead of a bare coalesce, which
     * would scatter every value across every task and write
-    * nFiles × nValues tiny files. */
-  /** `foldBase` (additional hook): applied to the UNION of everything
+    * nFiles × nValues tiny files.
+    *
+    * `foldBase`: applied to the UNION of everything
     * being folded, before the new base is written — for roots whose
     * rows are MERGEABLE state rather than append-only facts (e.g. the
     * session-summary sink: summaries of one raw session split across
@@ -173,17 +194,17 @@ object Batches {
     val staging = s"$root/_compact_b"
     Fs.delete(s, staging)
     val ids = batchIds(s, root)
-    val w = ids.filter(_ <= -2L).map(-_ - 2L).maxOption.getOrElse(-1L)
+    val w = Tagged.watermarkOf(ids)
     // sweep: bases superseded by a newer watermark; batch dirs whose
     // content the base already holds (a replay after compaction may
     // have re-created one — byte-equivalent, so deletion loses nothing)
-    ids.filter(id => (id <= -2L && -id - 2L < w) || (id >= 0L && id <= w))
-      .foreach(id => Fs.delete(s, s"$root/b=$id"))
+    ids.filter(Tagged.stale(_, w)).foreach(id => Fs.delete(s, dir(root, id)))
     val candidates = ids.filter(id => id >= 0L && id > w && id <= upTo)
     if (candidates.isEmpty) return false
     val newW = candidates.max
-    val sources = (if (w >= 0L) Seq(-(w + 2L)) else Nil) ++ candidates.sorted
-    val paths = sources.map(id => s"$root/b=$id")
+    val sources =
+      (if (w >= 0L) Seq(Tagged.baseTag(w)) else Nil) ++ candidates.sorted
+    val paths = sources.map(dir(root, _))
     val bytes = paths
       .map(p => Fs.totalBytes(s, p, _.endsWith(".parquet"))).sum
     // A non-identity foldBase can SHRINK the union substantially (the
@@ -232,9 +253,9 @@ object Batches {
         // schema-evolution contract (elder frames null the new column)
         val oldBase = if (w >= 0L)
           Seq(s.read.option("mergeSchema", "true")
-            .parquet(s"$root/b=${-(w + 2L)}")) else Nil
+            .parquet(baseDir(root, w))) else Nil
         val tails = candidates.sorted
-          .map(id => deriveTail(s.read.parquet(s"$root/b=$id")))
+          .map(id => deriveTail(s.read.parquet(dir(root, id))))
         val raw = (oldBase ++ tails)
           .reduce(_.unionByName(_, allowMissingColumns = true))
         val folded = pin(foldBase(raw))
@@ -246,7 +267,7 @@ object Batches {
       (if (partitionBy.isEmpty) w0 else w0.partitionBy(partitionBy: _*))
         .parquet(staging)
     } finally foldedHandle.foreach(_.unpersist())
-    Fs.rename(s, staging, s"$root/b=${-(newW + 2L)}") // atomic publish
+    Fs.rename(s, staging, baseDir(root, newW)) // atomic publish
     paths.foreach(Fs.delete(s, _))
     true
   }

@@ -585,37 +585,62 @@ object Embeddings {
     * directory at scan time. */
   def writeIvfIndex(model: IvfModel, corpus: DataFrame, idCol: String,
                     vecCol: String, path: String,
-                    filesPerCell: Int = 1): Unit = {
-    // stage, then bak-swap (Fs.publish) so a rebuild-while-serving
-    // search never reads a half-written index, and a crash mid-publish
-    // leaves the previous index recoverable at path_bak (rebuilds
-    // happen on quantizer retrain — rare, but they race live probes)
-    val s = corpus.sparkSession
+                    filesPerCell: Int = 1): Unit =
+    publishIvfBuild(ivfRows(model, corpus, idCol, vecCol), idCol, path,
+      filesPerCell)
+
+  /** Quantized `(id, cv, cell)` index rows of `df` under `model`. */
+  private def ivfRows(model: IvfModel, df: DataFrame, idCol: String,
+                      vecCol: String): DataFrame =
+    df.select(col(idCol), quantize(col(vecCol)).as("cv"))
+      .withColumn("cell", cellOfQuantized(model, col("cv")))
+
+  /** PQ code `(id, cell, codes)` index rows of `df`. */
+  private def pqRows(cells: IvfModel, pq: PqModel, df: DataFrame,
+                     idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol), quantize(col(vecCol)).as("_cv"))
+      .withColumn("cell", cellOfQuantized(cells, col("_cv")))
+      .withColumn("codes", pqCodeOfQuantized(pq, col("_cv")))
+      .drop("_cv")
+
+  /** Write cell-carrying `rows` as a fresh build (`cell=<c>/b=-1`) to a
+    * staging dir, then bak-swap publish it at `path`
+    * ([[graft.io.Fs.publish]]) so a rebuild-while-serving search never
+    * reads a half-written index and a crash mid-publish leaves the
+    * previous index recoverable (rebuilds happen on quantizer retrain —
+    * rare, but they race live probes). Streaming appends own
+    * `b=<batchId>` (see appendToIvfIndex), so a crash replay overwrites
+    * its own subpartitions instead of appending duplicate vectors.
+    *
+    * Route by cell before the partitioned write: without it every
+    * upstream task emits a file into every cell it touches, so file
+    * count scales with tasks × cells (measured 1920 files for a
+    * 64-cell index at the 30× probe — a search then opens ~30 files
+    * per probed cell) instead of with the cell layout. filesPerCell
+    * splits giant cells across writers when one file per cell is too
+    * coarse; the build is a rare offline job, so the routing shuffle
+    * is the right trade for a read-optimized layout. */
+  private def publishIvfBuild(rows: DataFrame, idCol: String, path: String,
+                              filesPerCell: Int): Unit = {
+    val s = rows.sparkSession
     val staging = path + "_staging"
     graft.io.Fs.delete(s, staging)
-    val routed = corpus.select(col(idCol), quantize(col(vecCol)).as("cv"))
-      .withColumn("cell", cellOfQuantized(model, col("cv")))
-    // route by cell before the partitioned write: without it every
-    // upstream task emits a file into every cell it touches, so file
-    // count scales with tasks × cells (measured 1920 files for a
-    // 64-cell index at the 30× probe — a search then opens ~30 files
-    // per probed cell) instead of with the cell layout. filesPerCell
-    // splits giant cells across writers when one file per cell is too
-    // coarse; the build is a rare offline job, so the routing shuffle
-    // is the right trade for a read-optimized layout.
     val parted =
-      if (filesPerCell <= 1) routed.repartition(col("cell"))
-      else routed.repartition(col("cell"),
+      if (filesPerCell <= 1) rows.repartition(col("cell"))
+      else rows.repartition(col("cell"),
         pmod(hash(col(idCol)), lit(filesPerCell)))
-    // two-level layout cell=<c>/b=<tag>: the base build owns b=-1;
-    // streaming appends own b=<batchId> (see appendToIvfIndex) so a
-    // crash replay overwrites its own subpartitions instead of
-    // appending duplicate vectors. Readers prune on `cell` (first
-    // level) exactly as before and ignore `b`.
-    parted.withColumn("b", lit(-1L)).write.partitionBy("cell", "b")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
+    graft.io.Tagged.write(parted, staging, Seq("cell"), batchTag = None)
     graft.io.Fs.publish(s, staging, path)
   }
+
+  /** The live rows of the persisted index's `cells` directories: a
+    * static `cell IN (...)` partition filter plus the tag filter
+    * ([[graft.io.Tagged.live]]), both pruning directories. */
+  private def liveCells(spark: org.apache.spark.sql.SparkSession,
+                        indexPath: String, cells: Array[Int]): DataFrame =
+    spark.read.parquet(indexPath)
+      .filter(col("cell").isin(cells.toIndexedSeq: _*))
+      .filter(graft.io.Tagged.live(spark, indexPath))
 
   /** Persist the IVF+PQ index: PQ CODES partitioned by cell — the
     * at-rest form of [[ivfPqTopK]] and the full 100 TB memory story in
@@ -630,23 +655,9 @@ object Embeddings {
     * and the publish crash story carries over. */
   def writeIvfPqIndex(cells: IvfModel, pq: PqModel, corpus: DataFrame,
                       idCol: String, vecCol: String, path: String,
-                      filesPerCell: Int = 1): Unit = {
-    val s = corpus.sparkSession
-    val staging = path + "_staging"
-    graft.io.Fs.delete(s, staging)
-    val routed = corpus
-      .select(col(idCol), quantize(col(vecCol)).as("_cv"))
-      .withColumn("cell", cellOfQuantized(cells, col("_cv")))
-      .withColumn("codes", pqCodeOfQuantized(pq, col("_cv")))
-      .drop("_cv")
-    val parted =
-      if (filesPerCell <= 1) routed.repartition(col("cell"))
-      else routed.repartition(col("cell"),
-        pmod(hash(col(idCol)), lit(filesPerCell)))
-    parted.withColumn("b", lit(-1L)).write.partitionBy("cell", "b")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
-    graft.io.Fs.publish(s, staging, path)
-  }
+                      filesPerCell: Int = 1): Unit =
+    publishIvfBuild(pqRows(cells, pq, corpus, idCol, vecCol), idCol, path,
+      filesPerCell)
 
   /** Search the persisted IVF+PQ index: collect the probe cell set,
     * scan ONLY those cell directories (static partition filter, the
@@ -662,9 +673,7 @@ object Embeddings {
     graft.io.Fs.recoverPublished(spark, indexPath)
     val probedCells = probeCellsOf(cells, queries, idCol, vecCol, nProbe)
       .select("cell").distinct().collect().map(_.getInt(0))
-    val cb = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(probedCells.toIndexedSeq: _*))
-      .filter(liveIvfRows(ivfWatermark(spark, indexPath)))
+    val cb = liveCells(spark, indexPath, probedCells)
       .select(col(idCol).as("corpus_id"),
         pqReconstruct(pq, col("codes")).as("rv"), col("cell"))
     val probeCells = transform(
@@ -708,24 +717,11 @@ object Embeddings {
     * b=-1, matching the build. */
   def appendToIvfIndex(model: IvfModel, newVectors: DataFrame,
                        idCol: String, vecCol: String, path: String,
-                       batchTag: Option[Long] = None): Unit = {
-    val routed = newVectors
-      .select(col(idCol), quantize(col(vecCol)).as("cv"))
-      .withColumn("cell", cellOfQuantized(model, col("cv")))
-      // one file per touched cell per append (vs one per task × cell);
-      // append batches are small, so the routing shuffle is trivial
-      .repartition(col("cell"))
-      .withColumn("b", lit(batchTag.getOrElse(-1L)))
-    batchTag match {
-      case Some(_) =>
-        routed.write.partitionBy("cell", "b")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      case None =>
-        routed.write.partitionBy("cell", "b")
-          .mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-    }
-  }
+                       batchTag: Option[Long] = None): Unit =
+    // one file per touched cell per append (vs one per task × cell);
+    // append batches are small, so the routing shuffle is trivial
+    graft.io.Tagged.write(ivfRows(model, newVectors, idCol, vecCol)
+      .repartition(col("cell")), path, Seq("cell"), batchTag)
 
   /** [[appendToIvfIndex]] for the CODE-ROW layout of
     * [[writeIvfPqIndex]]: new vectors route through the FIXED coarse
@@ -739,51 +735,9 @@ object Embeddings {
   def appendToIvfPqIndex(cells: IvfModel, pq: PqModel,
                          newVectors: DataFrame, idCol: String,
                          vecCol: String, path: String,
-                         batchTag: Option[Long] = None): Unit = {
-    val routed = newVectors
-      .select(col(idCol), quantize(col(vecCol)).as("_cv"))
-      .withColumn("cell", cellOfQuantized(cells, col("_cv")))
-      .withColumn("codes", pqCodeOfQuantized(pq, col("_cv")))
-      .drop("_cv")
-      .repartition(col("cell"))
-      .withColumn("b", lit(batchTag.getOrElse(-1L)))
-    batchTag match {
-      case Some(_) =>
-        routed.write.partitionBy("cell", "b")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      case None =>
-        routed.write.partitionBy("cell", "b")
-          .mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-    }
-  }
-
-  /** Watermark of the last [[compactIvfIndex]] fold: the highest id
-    * among `_w_<id>` marker files at the index root; -1 before any
-    * compaction. Markers are underscore-prefixed (invisible to
-    * partition discovery) and CREATED, never rewritten — the newest
-    * one wins, so a crash can never leave the watermark in a
-    * half-updated state (the window a single rewritten marker file
-    * would have between delete and recreate). */
-  def ivfWatermark(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Long =
-    graft.io.Fs.listFileNames(spark, path)
-      .filter(_.startsWith("_w_"))
-      .flatMap(_.stripPrefix("_w_").toLongOption)
-      .maxOption.getOrElse(-1L)
-
-  /** Row filter selecting the index's LIVE content under watermark `w`:
-    * the base build (b = -1, which also holds one-shot appends), the
-    * compacted fold base (b = -(w+2)), and the uncompacted streaming
-    * tail (b > w). Stale partitions a crashed [[compactIvfIndex]] or a
-    * post-compaction replay left behind are excluded, so every crash
-    * window reads each vector exactly once. Degenerates to
-    * all-partitions when w = -1 (never compacted: -(w+2) = -1 and
-    * b > -1 covers every tag). A pure partition-column predicate, so
-    * it prunes directories, not rows. */
-  private def liveIvfRows(w: Long): Column =
-    col("b") === lit(-1L) || col("b") === lit(-(w + 2L)) ||
-      col("b") > lit(w)
+                         batchTag: Option[Long] = None): Unit =
+    graft.io.Tagged.write(pqRows(cells, pq, newVectors, idCol, vecCol)
+      .repartition(col("cell")), path, Seq("cell"), batchTag)
 
   /** Fold the streaming `(cell, b=batchId)` subpartitions with
     * id in (watermark, upTo] — plus the previous fold's base — into a
@@ -794,61 +748,16 @@ object Embeddings {
     * the bulk of a 100 TB index; folding them would make maintenance
     * cost proportional to the corpus instead of to the appends).
     *
-    * Protocol (fold → marker → sweep), each step safe to die after:
-    * the folded rows are written under the new tag by a dynamic
-    * partition overwrite (re-runnable — same tag, same partitions);
-    * the `_w_<newW>` marker then ATOMICALLY advances the watermark
-    * (readers ignore the new tag until it lands, and ignore the folded
-    * sources once it does — see [[liveIvfRows]]); the superseded
-    * source dirs and older markers are swept last, and a missed sweep
-    * is retried by the next compaction. `upTo` must stay at or below
-    * the appending stream's last checkpointed batch, same bound (and
-    * same reasoning) as [[graft.io.Batches.compact]]. Returns true iff
-    * a fold happened. */
+    * The index is one tree of the shared `_w_` store
+    * ([[graft.io.Tagged.compact]]: fold → atomic `_w_<newW>` marker →
+    * sweep, each step safe to die after; the same `upTo` bound).
+    * Returns true iff a fold happened. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, upTo: Long): Boolean = {
-    import org.apache.spark.sql.SaveMode
-    val io = graft.io.Fs
-    if (!io.exists(spark, path)) return false
-    io.recoverPublished(spark, path) // heal a crashed build publish
-    val w = ivfWatermark(spark, path)
-    val cellDirs = io.listDirNames(spark, path).filter(_.startsWith("cell="))
-    val tagsByCell = cellDirs.map(c =>
-      c -> io.listDirNames(spark, s"$path/$c")
-        .flatMap(n => if (n.startsWith("b=")) n.stripPrefix("b=").toLongOption
-                      else None))
-    // sweep stale partitions first: folded sources a crashed sweep left
-    // behind (0 <= t <= w) and fold bases superseded by a newer
-    // watermark (t <= -2, encoded watermark < w)
-    tagsByCell.foreach { case (c, tags) =>
-      tags.filter(t => (t >= 0L && t <= w) || (t <= -2L && -t - 2L < w))
-        .foreach(t => io.delete(spark, s"$path/$c/b=$t"))
-    }
-    val candidates = tagsByCell.flatMap(_._2).distinct
-      .filter(t => t >= 0L && t > w && t <= upTo)
-    if (candidates.isEmpty) return false
-    val newW = candidates.max
-    val foldTags = (if (w >= 0L) Seq(-(w + 2L)) else Nil) ++ candidates
-    spark.read.parquet(path)
-      .filter(col("b").isin(foldTags: _*))
-      .drop("b").withColumn("b", lit(-(newW + 2L)))
-      // one file per touched cell (same routing as appendToIvfIndex:
-      // the fold is append-scale, not corpus-scale)
-      .repartition(col("cell"))
-      .write.partitionBy("cell", "b")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite).parquet(path)
-    io.touch(spark, s"$path/_w_$newW") // the atomic watermark advance
-    tagsByCell.foreach { case (c, tags) =>
-      tags.filter(foldTags.contains)
-        .foreach(t => io.delete(spark, s"$path/$c/b=$t"))
-    }
-    io.listFileNames(spark, path)
-      .filter(n => n.startsWith("_w_") &&
-        n.stripPrefix("_w_").toLongOption.exists(_ < newW))
-      .foreach(n => io.delete(spark, s"$path/$n"))
-    true
-  }
+                      path: String, upTo: Long): Boolean =
+    // one file per touched cell (same routing as appendToIvfIndex: the
+    // fold is append-scale, not corpus-scale)
+    graft.io.Tagged.compact(spark, path, upTo, Seq(graft.io.Tagged.Tree(
+      "", Seq("cell"), _.repartition(col("cell")))))
 
   /** Offline IVF quantizer maintenance — the answer to centroid DRIFT:
     * [[appendToIvfIndex]] (and [[graft.streaming.Ingest.startIvfAppendSink]])
@@ -889,30 +798,21 @@ object Embeddings {
                     path: String, idCol: String, nLists: Int,
                     iters: Int = 10, sampleCap: Int = 4096,
                     filesPerCell: Int = 1): IvfModel = {
-    import org.apache.spark.sql.SaveMode
     graft.io.Fs.recoverPublished(spark, path)
     val live = spark.read.parquet(path)
-      .filter(liveIvfRows(ivfWatermark(spark, path)))
+      .filter(graft.io.Tagged.live(spark, path))
       .select(col(idCol), col("cv"))
     val sample = live
       .select(col("cv"), md5(col(idCol).cast("string")).as("h"))
       .orderBy("h").limit(sampleCap)
       .collect().map(_.getSeq[Long](0).toArray)
     val model = fitQuantizedSample(sample, nLists, iters)
-    val staging = path + "_staging"
-    graft.io.Fs.delete(spark, staging)
-    val routed = live.withColumn("cell", cellOfQuantized(model, col("cv")))
-    val parted =
-      if (filesPerCell <= 1) routed.repartition(col("cell"))
-      else routed.repartition(col("cell"),
-        pmod(hash(col(idCol)), lit(filesPerCell)))
     // the staging write CONSUMES the old index (live reads it) before
     // publish touches the path; the new index is a clean single-base
     // build — b=-1 everywhere, no watermark markers (a fresh stream
     // starts its b= tags from scratch)
-    parted.withColumn("b", lit(-1L)).write.partitionBy("cell", "b")
-      .mode(SaveMode.Overwrite).parquet(staging)
-    graft.io.Fs.publish(spark, staging, path)
+    publishIvfBuild(live.withColumn("cell", cellOfQuantized(model,
+      col("cv"))), idCol, path, filesPerCell)
     model
   }
 
@@ -941,11 +841,9 @@ object Embeddings {
     graft.io.Fs.recoverPublished(spark, indexPath)
     val probedCells = probeCellsOf(model, queries, idCol, vecCol, nProbe)
       .select("cell").distinct().collect().map(_.getInt(0))
-    val cb = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(probedCells.toIndexedSeq: _*))
-      // exclude partitions superseded by a fold ([[compactIvfIndex]]):
-      // static partition predicate, prunes dirs like the cell filter
-      .filter(liveIvfRows(ivfWatermark(spark, indexPath)))
+    // live tags exclude partitions superseded by a fold
+    // ([[compactIvfIndex]]), pruning dirs like the cell filter
+    val cb = liveCells(spark, indexPath, probedCells)
       .select(col(idCol).as("corpus_id"), col("cv"), col("cell"))
     val probeCells = transform(
       slice(array_sort(array(
@@ -985,7 +883,7 @@ object Embeddings {
                      nProbe: Int, k: Int, nQueries: Int = 64): Double = {
     graft.io.Fs.recoverPublished(spark, indexPath)
     val live = spark.read.parquet(indexPath)
-      .filter(liveIvfRows(ivfWatermark(spark, indexPath)))
+      .filter(graft.io.Tagged.live(spark, indexPath))
       .select(col(idCol), col("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val q = live
@@ -1015,9 +913,7 @@ object Embeddings {
       explode(probeCells).as("cell"))
     val probed = qCells.select("cell").distinct()
       .collect().map(_.getInt(0)) // bounded by nLists
-    val cb = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(probed.toIndexedSeq: _*))
-      .filter(liveIvfRows(ivfWatermark(spark, indexPath)))
+    val cb = liveCells(spark, indexPath, probed)
       .select(col(idCol).as("corpus_id"), col("cv"), col("cell"))
     val approx = topK(cb.join(broadcast(qCells), Seq("cell"))
       .filter(col("corpus_id") =!= col("query_id"))

@@ -181,23 +181,6 @@ object Retrieval {
     (h % nBuckets.toLong).toInt
   }
 
-  /** Persist the search index: postings `(id, dl, term, tf)` written
-    * PARTITIONED BY a term-hash bucket `tb` — the at-rest layout behind
-    * "a keyword search probes its terms' buckets of a 100 TB corpus,
-    * not the corpus". A query's scan is statically pruned to
-    * |queryTerms| of `nBuckets` directories (IvfIndexSpec discipline:
-    * files-read == the probed buckets' files, asserted in
-    * RetrievalSpec); the per-term df table rides the same bucketing,
-    * and the corpus stats `(n_docs, tot_tokens, n_buckets)` are a
-    * one-row sidecar read before planning. Route-then-write
-    * (`repartition(tb)`) keeps file count at the bucket layout instead
-    * of tasks × buckets, and the whole tree is staged then bak-swap
-    * published ([[graft.io.Fs.publish]]) so a rebuild never races a
-    * live search and a mid-publish crash is recoverable.
-    *
-    * dl is denormalized onto every posting row (the Lucene norms
-    * pattern): +8 bytes/posting buys the scorer a scan with no join
-    * back to a doc-length table. */
   /** The three index trees as `(postings tf-frame, stats one-row)` for
     * one document set — shared by the base build and every append.
     * With `withPositions`, each posting also carries the term's sorted
@@ -228,31 +211,37 @@ object Retrieval {
     (tf, stats)
   }
 
-  private def writeParts(spark: org.apache.spark.sql.SparkSession,
-                         tf: DataFrame, stats: DataFrame, root: String,
+  /** Write the three trees under `batchTag` ([[graft.io.Tagged.write]]:
+    * a tagged replay overwrites ITS OWN b= partitions in all three
+    * instead of appending duplicates). */
+  private def writeParts(tf: DataFrame, stats: DataFrame, root: String,
                          batchTag: Option[Long]): Unit = {
-    val b = batchTag.getOrElse(-1L)
-    val routed = tf.repartition(col("tb")).withColumn("b", lit(b))
     val dfreq = tf.groupBy(col("term"), col("tb"))
       .agg(count(lit(1)).as("df_t"))
-      .repartition(col("tb")).withColumn("b", lit(b))
-    val st = stats.withColumn("b", lit(b)).coalesce(1)
-    val (mode, dyn) = batchTag match {
-      // a replayed batch overwrites ITS OWN b= partitions in all three
-      // trees instead of appending duplicates (crash-replay idempotent)
-      case Some(_) => (org.apache.spark.sql.SaveMode.Overwrite, true)
-      case None => (org.apache.spark.sql.SaveMode.Append, false)
-    }
-    def w(d: DataFrame, sub: String, parts: Seq[String]): Unit = {
-      val base = d.write.partitionBy(parts: _*).mode(mode)
-      (if (dyn) base.option("partitionOverwriteMode", "dynamic") else base)
-        .parquet(root + "/" + sub)
-    }
-    w(routed, "postings", Seq("tb", "b"))
-    w(dfreq, "dfreq", Seq("tb", "b"))
-    w(st, "stats", Seq("b"))
+    graft.io.Tagged.write(tf.repartition(col("tb")), root + "/postings",
+      Seq("tb"), batchTag)
+    graft.io.Tagged.write(dfreq.repartition(col("tb")), root + "/dfreq",
+      Seq("tb"), batchTag)
+    graft.io.Tagged.write(stats.coalesce(1), root + "/stats", Nil, batchTag)
   }
 
+  /** Persist the search index: postings `(id, dl, term, tf)` written
+    * PARTITIONED BY a term-hash bucket `tb` — the at-rest layout behind
+    * "a keyword search probes its terms' buckets of a 100 TB corpus,
+    * not the corpus". A query's scan is statically pruned to
+    * |queryTerms| of `nBuckets` directories (IvfIndexSpec discipline:
+    * files-read == the probed buckets' files, asserted in
+    * RetrievalSpec); the per-term df table rides the same bucketing,
+    * and the corpus stats `(n_docs, tot_tokens, n_buckets)` are a
+    * one-row sidecar read before planning. Route-then-write
+    * (`repartition(tb)`) keeps file count at the bucket layout instead
+    * of tasks × buckets, and the whole tree is staged then bak-swap
+    * published ([[graft.io.Fs.publish]]) so a rebuild never races a
+    * live search and a mid-publish crash is recoverable.
+    *
+    * dl is denormalized onto every posting row (the Lucene norms
+    * pattern): +8 bytes/posting buys the scorer a scan with no join
+    * back to a doc-length table. */
   def writeSearchIndex(df: DataFrame, idCol: String, textCol: String,
                        path: String, nBuckets: Int = 64,
                        withPositions: Boolean = false): Unit = {
@@ -262,7 +251,7 @@ object Retrieval {
     val (tf, stats) = indexParts(df, idCol, textCol, nBuckets,
       withPositions)
     // base build owns b=-1 in every tree; appends own b=<batchId>
-    writeParts(s, tf, stats, staging, batchTag = None)
+    writeParts(tf, stats, staging, batchTag = None)
     graft.io.Fs.publish(s, staging, path)
   }
 
@@ -286,27 +275,8 @@ object Retrieval {
       .select(col("n_buckets"), col("has_positions")).head
     val (tf, stats) = indexParts(newDocs, idCol, textCol,
       head.getInt(0), head.getBoolean(1))
-    writeParts(s, tf, stats, path, batchTag)
+    writeParts(tf, stats, path, batchTag)
   }
-
-  /** Watermark of the last [[compactSearchIndex]] fold — `_w_<id>`
-    * marker files at the index root, newest wins; -1 before any fold
-    * (the [[Embeddings.ivfWatermark]] create-only protocol). */
-  def searchWatermark(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Long =
-    graft.io.Fs.listFileNames(spark, path)
-      .filter(_.startsWith("_w_"))
-      .flatMap(_.stripPrefix("_w_").toLongOption)
-      .maxOption.getOrElse(-1L)
-
-  /** Live-partition predicate under watermark `w`: base build (b=-1),
-    * current fold base (b=-(w+2)), uncompacted tail (b>w). Pure
-    * partition-column predicate — prunes directories. Same algebra as
-    * the IVF index's liveIvfRows; holds for all three trees because
-    * every append stamps the same `b` into each. */
-  private def liveSearchRows(w: Long): org.apache.spark.sql.Column =
-    col("b") === lit(-1L) || col("b") === lit(-(w + 2L)) ||
-      col("b") > lit(w)
 
   /** Fold the per-batch append partitions with tag in (watermark, upTo]
     * (plus the previous fold base) into one new base tag across ALL
@@ -317,61 +287,21 @@ object Retrieval {
     * side reassemble totals lets the compactor pre-sum them. The base
     * build's b=-1 is never rewritten (it is the 100 TB bulk; folding it
     * would price maintenance at corpus scale instead of append scale).
-    * Fold → `_w_` marker → sweep, each step crash-safe to repeat;
+    * The three trees are one store of [[graft.io.Tagged.compact]]
+    * (fold → `_w_` marker → sweep, each step crash-safe to repeat);
     * `upTo` must not pass the appending stream's last checkpointed
     * batch. Returns true iff a fold happened. */
   def compactSearchIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, upTo: Long): Boolean = {
-    import org.apache.spark.sql.SaveMode
-    val io = graft.io.Fs
-    if (!io.exists(spark, path)) return false
-    io.recoverPublished(spark, path)
-    val w = searchWatermark(spark, path)
-    // tags per tree: postings/dfreq nest b under tb=, stats is flat
-    def bTagsUnder(dir: String): Seq[(String, Long)] =
-      io.listDirNames(spark, dir).flatMap { n =>
-        if (n.startsWith("b="))
-          n.stripPrefix("b=").toLongOption.map(t => s"$dir/$n" -> t)
-        else if (n.startsWith("tb=")) bTagsUnder(s"$dir/$n")
-        else Nil
-      }
-    val tagged = Seq("postings", "dfreq", "stats")
-      .flatMap(t => bTagsUnder(s"$path/$t"))
-    // sweep stale leftovers of a crashed sweep or a post-fold replay
-    tagged.filter { case (_, t) =>
-      (t >= 0L && t <= w) || (t <= -2L && -t - 2L < w)
-    }.foreach { case (d, _) => io.delete(spark, d) }
-    val candidates = tagged.map(_._2).distinct
-      .filter(t => t > w && t >= 0L && t <= upTo)
-    if (candidates.isEmpty) return false
-    val newW = candidates.max
-    val foldTags = (if (w >= 0L) Seq(-(w + 2L)) else Nil) ++ candidates
-    val newTag = -(newW + 2L)
-    def foldWrite(d: DataFrame, sub: String, parts: Seq[String]): Unit =
-      d.withColumn("b", lit(newTag))
-        .write.partitionBy(parts: _*)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(s"$path/$sub")
-    val inFold = col("b").isin(foldTags: _*)
-    foldWrite(spark.read.parquet(s"$path/postings").filter(inFold)
-      .drop("b").repartition(col("tb")), "postings", Seq("tb", "b"))
-    foldWrite(spark.read.parquet(s"$path/dfreq").filter(inFold)
-      .groupBy(col("term"), col("tb")).agg(sum(col("df_t")).as("df_t"))
-      .repartition(col("tb")), "dfreq", Seq("tb", "b"))
-    foldWrite(spark.read.parquet(s"$path/stats").filter(inFold)
-      .agg(sum(col("n_docs")).as("n_docs"),
+    import graft.io.Tagged.Tree
+    graft.io.Tagged.compact(spark, path, upTo, Seq(
+      Tree("postings", Seq("tb"), _.repartition(col("tb"))),
+      Tree("dfreq", Seq("tb"), _.groupBy(col("term"), col("tb"))
+        .agg(sum(col("df_t")).as("df_t")).repartition(col("tb"))),
+      Tree("stats", Nil, _.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("tot_tokens")).as("tot_tokens"),
         max(col("n_buckets")).as("n_buckets"),
-        max(col("has_positions")).as("has_positions")).coalesce(1),
-      "stats", Seq("b"))
-    io.touch(spark, s"$path/_w_$newW")
-    tagged.filter(kv => foldTags.contains(kv._2))
-      .foreach { case (d, _) => io.delete(spark, d) }
-    io.listFileNames(spark, path)
-      .filter(n => n.startsWith("_w_") &&
-        n.stripPrefix("_w_").toLongOption.exists(_ < newW))
-      .foreach(n => io.delete(spark, s"$path/$n"))
-    true
+        max(col("has_positions")).as("has_positions")).coalesce(1))))
   }
 
   /** BM25 search over the persisted index: read the stats sidecar,
@@ -387,7 +317,7 @@ object Retrieval {
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25IndexTopK: empty query")
     graft.io.Fs.recoverPublished(spark, indexPath)
-    val live = liveSearchRows(searchWatermark(spark, indexPath))
+    val live = graft.io.Tagged.live(spark, indexPath)
     val statsRows = spark.read.parquet(indexPath + "/stats").filter(live)
     val nBuckets = statsRows.select(col("n_buckets")).head.getInt(0)
     val buckets = queryTerms.map(termBucket(_, nBuckets)).distinct
@@ -490,7 +420,7 @@ object Retrieval {
       "phraseIndexTopK: index was built without positions " +
         "(writeSearchIndex(withPositions = true))")
     val nBuckets = head.getInt(0)
-    val live = liveSearchRows(searchWatermark(spark, indexPath))
+    val live = graft.io.Tagged.live(spark, indexPath)
     val buckets = phrase.distinct.map(termBucket(_, nBuckets)).distinct
     val posts = spark.read.parquet(indexPath + "/postings")
       .filter(col("tb").isin(buckets: _*)).filter(live)
@@ -534,7 +464,7 @@ object Retrieval {
     require(maxDfPct >= 1 && maxDfPct <= 100,
       "prfIndexTopK: maxDfPct must be in [1, 100]")
     graft.io.Fs.recoverPublished(spark, indexPath)
-    val live = liveSearchRows(searchWatermark(spark, indexPath))
+    val live = graft.io.Tagged.live(spark, indexPath)
     val stats = spark.read.parquet(indexPath + "/stats").filter(live)
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("tot_tokens")).as("tot_tokens"))

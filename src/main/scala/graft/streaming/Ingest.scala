@@ -346,7 +346,7 @@ object Ingest {
         // compactHistoryEvery folds the accumulating dirs in-sink
         // (or fold externally with graft.io.Batches.compact,
         // upTo <= last committed batch)
-        batch.write.mode("overwrite").parquet(s"$historyRoot/b=$batchId")
+        graft.io.Batches.write(batch, historyRoot, batchId)
         maybeCompact(spark, compactHistoryEvery, batchId, historyRoot)
         // 1. fold the batch roll-up into the previous state version
         // (replay-safe versioned commit — io.VersionedState)
@@ -677,11 +677,10 @@ object Ingest {
   def commitActivityBatch(batch: DataFrame, outRoot: String, batchId: Long,
                           userCol: String, tsCol: String,
                           intervalSec: Long): Unit = {
-    batch.select(col(userCol),
+    graft.io.Batches.write(batch.select(col(userCol),
         floor(unix_timestamp(col(tsCol)) / intervalSec)
           .cast("long").as("period"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+      .distinct(), outRoot, batchId)
     ()
   }
 
@@ -815,7 +814,7 @@ object Ingest {
                          valueCol: String, gapSec: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(keyCol)).orderBy(col("eps"))
-    batch.select(col(keyCol),
+    graft.io.Batches.write(batch.select(col(keyCol),
         unix_timestamp(col(tsCol)).as("eps"),
         round(col(valueCol) * 100).cast("long").as("_u"))
       .withColumn("_brk",
@@ -827,8 +826,7 @@ object Ingest {
       .agg(min(col("eps")).as("smin"), max(col("eps")).as("smax"),
         count(lit(1)).as("n"), sum(col("_u")).as("vol_units"))
       .select(col(keyCol), col("smin"), col("smax"), col("n"),
-        col("vol_units"))
-      .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        col("vol_units")), outRoot, batchId)
     ()
   }
 
@@ -873,8 +871,9 @@ object Ingest {
   def commitLinkGraphBatch(batch: DataFrame, outRoot: String,
                            batchId: Long, srcCol: String,
                            dstCol: String): Unit = {
-    batch.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+    graft.io.Batches.write(
+      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      outRoot, batchId)
     ()
   }
 
@@ -919,11 +918,11 @@ object Ingest {
   def commitBucketGrainBatch(batch: DataFrame, outRoot: String,
                              batchId: Long, keyCol: String, tsCol: String,
                              valueCol: String, bucketSec: Long): Unit = {
-    batch.groupBy(col(keyCol),
+    graft.io.Batches.write(batch.groupBy(col(keyCol),
         (floor(unix_timestamp(col(tsCol)) / bucketSec) * bucketSec)
           .cast("long").as("bucket_ts"))
-      .agg(sum(round(col(valueCol) * 100).cast("long")).as("u"))
-      .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+      .agg(sum(round(col(valueCol) * 100).cast("long")).as("u")),
+      outRoot, batchId)
     ()
   }
 
@@ -992,8 +991,9 @@ object Ingest {
     * like [[MergeableView.commit]]). */
   def commitCdcBatch(batch: DataFrame, outRoot: String, batchId: Long,
                      idCol: String, seqCol: String, opCol: String): Unit = {
-    graft.ops.Corpus.cdcLatest(batch, idCol, seqCol, opCol)
-      .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+    graft.io.Batches.write(
+      graft.ops.Corpus.cdcLatest(batch, idCol, seqCol, opCol),
+      outRoot, batchId)
     ()
   }
 
@@ -1120,8 +1120,9 @@ object Ingest {
                                () => System.currentTimeMillis() / 1000L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(horizonSec >= 0L, s"horizonSec must be >= 0, got $horizonSec")
-    // cross-trigger bloom cache — same contract as the line sink's
-    var bloomCache: (Long, org.apache.spark.util.sketch.BloomFilter) = null
+    val guard =
+      if (bloomGuard) Some(new GuardBloom(indexPath, expectedKeys, fpp,
+        bloomDriverMaxRows)) else None
     sink(docs, checkpoint, trigger) { (batch, batchId) =>
       val spark = batch.sparkSession
       // one clock read per batch: the stamp every admitted key gets,
@@ -1137,41 +1138,12 @@ object Ingest {
         .bandKeys(batch, idCol, textCol, n, k, bands).cache()
       var admittedKeys: DataFrame = null
       try {
-        // bound the prior-dir enumeration BEFORE reading it: folding
-        // only batches <= batchId - 1 (committed by definition once
-        // this batch runs) can neither race a replay nor change what
-        // a replayed batch reads — the base holds exactly the dirs
-        // the replay would have enumerated. outRoot folds on the
-        // same cadence: write-only here, but its dir count (and any
-        // downstream consumer's listing) grows per batch all the same
-        if (compactDue(compactEvery, batchId)) {
-          // the index fold evicts out-of-horizon rows (state bound);
-          // outRoot is the OUTPUT corpus, not probe state — never
-          // evicted
-          if (bloomGuard)
-            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-              partitionBy = Seq("p"),
-              deriveTail = df => df.withColumn("p",
-                pmod(col("band_h"), lit(prefixParts)).cast("int")),
-              foldBase = evict)
-          else
-            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-              foldBase = evict)
-          graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
-        }
-        val bloomRoot = s"$indexPath/_bloom"
-        val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-          if (!bloomGuard) None
-          else graft.io.BloomState
-            .latestVersionBefore(spark, bloomRoot, below = batchId)
-            .map { v =>
-              if (bloomCache != null && bloomCache._1 == v) bloomCache._2
-              else {
-                val b = graft.io.BloomState.read(spark, bloomRoot, v)
-                bloomCache = (v, b)
-                b
-              }
-            }
+        // the index fold evicts out-of-horizon rows (state bound);
+        // outRoot is the OUTPUT corpus, not probe state — never evicted
+        compactFilterRoots(spark, compactEvery, batchId, indexPath,
+          outRoot, guard.map(_ => prefixOf(col("band_h"), prefixParts)),
+          evict)
+        val prevBloom = guard.flatMap(_.before(spark, batchId))
         // cross-batch: drop docs colliding with the persisted index —
         // guarded: bloom-negative keys provably collide with nothing,
         // the residue probes the p=-pruned base + flat tails;
@@ -1201,8 +1173,8 @@ object Ingest {
           .filter(col(idCol) =!= col("_keep"))
           .select(col(idCol)).distinct()
         val dropIds = priorHits.union(batchDups).distinct()
-        batch.join(dropIds, Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        graft.io.Batches.write(batch.join(dropIds, Seq(idCol), "left_anti"),
+          outRoot, batchId)
         // persisted: the frame feeds the index write AND the bloom
         // append (which also counts it) — one computation, not three
         admittedKeys = keys.join(dropIds, Seq(idCol), "left_anti")
@@ -1211,21 +1183,10 @@ object Ingest {
         val indexRows =
           if (horizonSec > 0L) admittedKeys.withColumn("_seen", lit(now))
           else admittedKeys
-        indexRows
-          .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-        if (bloomGuard) {
-          // bloom LAST — committed only once the index rows it
-          // certifies are on disk (same crash story as the line
-          // sink). Build site is adaptive (BloomState.append):
-          // driver insert at trigger scale, distributed
-          // stat.bloomFilter past bloomDriverMaxRows so a CATCH-UP
-          // batch after downtime never collects backlog-scale rows
-          val nb = graft.io.BloomState.append(
-            admittedKeys.select(col("band_h")), "band_h", prevBloom,
-            expectedKeys, fpp, bloomDriverMaxRows)
-          graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
-          bloomCache = (batchId, nb)
-        }
+        graft.io.Batches.write(indexRows, indexPath, batchId)
+        // bloom LAST (see GuardBloom.commit)
+        guard.foreach(_.commit(spark, batchId, admittedKeys, "band_h",
+          prevBloom))
       } finally {
         if (admittedKeys != null) admittedKeys.unpersist()
         keys.unpersist()
@@ -1254,6 +1215,78 @@ object Ingest {
       .latestVersionBefore(spark, s"$indexPath/_bloom", below)
       .map(v => graft.io.BloomState.read(spark, s"$indexPath/_bloom", v))
 
+  /** Hash-prefix partition `p` of a guarded index row with key `key`. */
+  private def prefixOf(key: org.apache.spark.sql.Column,
+                       prefixParts: Int): org.apache.spark.sql.Column =
+    pmod(key, lit(prefixParts)).cast("int")
+
+  /** In-sink fold of a filter sink's two roots on the [[compactDue]]
+    * cadence. Folding only batches <= batchId - 1 (committed by
+    * definition once this batch runs) BEFORE the probe enumerates the
+    * prior dirs can neither race a replay nor change what a replayed
+    * batch reads — the base holds exactly the dirs the replay would
+    * have enumerated. The index folds through `foldBase`; a guarded
+    * index (`prefix` = its flat tails' `p` column) folds into a
+    * `p=`-partitioned base. The write-only out root folds on the same
+    * cadence: its dir count grows per batch all the same. */
+  private def compactFilterRoots(spark: SparkSession, every: Int,
+      batchId: Long, indexPath: String, outRoot: String,
+      prefix: Option[org.apache.spark.sql.Column],
+      foldBase: DataFrame => DataFrame = graft.io.Batches.noFold): Unit =
+    if (compactDue(every, batchId)) {
+      prefix match {
+        case Some(p) => graft.io.Batches.compact(spark, indexPath,
+          upTo = batchId - 1, partitionBy = Seq("p"),
+          deriveTail = _.withColumn("p", p), foldBase = foldBase)
+        case None => graft.io.Batches.compact(spark, indexPath,
+          upTo = batchId - 1, foldBase = foldBase)
+      }
+      graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
+    }
+
+  /** A guarded filter sink's cumulative bloom under `<indexPath>/_bloom`,
+    * cached across triggers: the cached filter serves only while its
+    * version is still the latest committed below the current batch —
+    * checked per trigger against the cheap file listing, so restarts
+    * and replays fall back to a fresh read, never a stale filter. */
+  private final class GuardBloom(indexPath: String, expectedKeys: Long,
+                                 fpp: Double, driverMaxRows: Long) {
+    private val root = s"$indexPath/_bloom"
+    private var cached: (Long, org.apache.spark.util.sketch.BloomFilter) =
+      null
+
+    /** The filter as of batches strictly below `batchId`; None before
+      * the first commit. */
+    def before(spark: SparkSession, batchId: Long)
+        : Option[org.apache.spark.util.sketch.BloomFilter] =
+      graft.io.BloomState.latestVersionBefore(spark, root, below = batchId)
+        .map { v =>
+          if (cached == null || cached._1 != v)
+            cached = (v, graft.io.BloomState.read(spark, root, v))
+          cached._2
+        }
+
+    /** Insert `admitted`'s `keyCol` into `prev` and commit the result as
+      * version `batchId`. Call it LAST in the batch, once the index rows
+      * it certifies are on disk: any crash before it replays the whole
+      * batch against the previous bloom + index. The build site is
+      * adaptive ([[graft.io.BloomState.append]]): at trigger scale the
+      * keys insert on the driver into a COPY of the previous filter
+      * (measured cheaper than per-partition full-size filters); past
+      * `driverMaxRows` (a catch-up batch after downtime) the build is a
+      * distributed stat.bloomFilter merged executor-side, so driver
+      * memory never scales with the backlog. */
+    def commit(spark: SparkSession, batchId: Long, admitted: DataFrame,
+               keyCol: String,
+               prev: Option[org.apache.spark.util.sketch.BloomFilter])
+        : Unit = {
+      val nb = graft.io.BloomState.append(admitted.select(col(keyCol)),
+        keyCol, prev, expectedKeys, fpp, driverMaxRows)
+      graft.io.BloomState.commit(spark, root, batchId, nb)
+      cached = (batchId, nb)
+    }
+  }
+
   /** Guarded cross-batch admission for the line-dedup sink: of this
     * batch's distinct-line winners (`firstInBatch`: one row per `_h`
     * carrying `_h64` and the prefix partition `p`), the rows whose
@@ -1280,51 +1313,51 @@ object Ingest {
     * cannot hold a probe's hash. */
   private[graft] def lineDedupAdmit(spark: SparkSession, indexPath: String,
       batchId: Long, firstInBatch: DataFrame,
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame = {
+      bloom: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame =
+    guardedProbe(spark, indexPath, batchId, firstInBatch, "_h64", Seq("_h"),
+      bloom, "bloom guard cannot certify definitely-new lines (a missing " +
+        "hash would re-admit its line). Run rebuildLineDedupGuard") match {
+      case None => firstInBatch // nothing admitted yet, or all negative
+      case Some((hit, prior)) =>
+        firstInBatch.filter(!hit).unionByName(
+          firstInBatch.filter(hit).join(prior, Seq("_h"), "left_anti"))
+    }
+
+  /** The two-tier probe of the guarded filter sinks ([[lineDedupAdmit]],
+    * [[nearDupPriorHits]]) against the committed index below `batchId`:
+    * None when no prior row can match a row of `rows` (nothing
+    * admitted yet, or every `keyCol` bloom-negative); otherwise the
+    * bloom-hit predicate and the prior index rows (`cols`) that can
+    * match the positives — the `p=`-partitioned base read PRUNED to the
+    * positives' prefixes (a bounded ≤ prefixParts-row collect builds the
+    * predicate) plus the flat tails, batch-scale by the compaction
+    * contract and read whole. `rows` carries `keyCol` and its prefix
+    * `p`. An index with admitted batches but no bloom fails fast
+    * (`missing` completes the message): a missing key would re-admit
+    * its row. */
+  private def guardedProbe(spark: SparkSession, indexPath: String,
+      batchId: Long, rows: DataFrame, keyCol: String, cols: Seq[String],
+      bloom: Option[org.apache.spark.util.sketch.BloomFilter],
+      missing: String): Option[(org.apache.spark.sql.Column, DataFrame)] = {
     graft.io.Batches.requireBatchLayout(spark, indexPath)
     val dirs = graft.io.Batches.liveDirs(spark, indexPath,
       below = Some(batchId))
-    (bloom, dirs) match {
-      case (_, Nil) => firstInBatch // nothing admitted yet
-      case (None, _) =>
-        throw new IllegalStateException(
-          s"$indexPath holds admitted batches but no _bloom state: the " +
-            "bloom guard cannot certify definitely-new lines (a missing " +
-            "hash would re-admit its line). Run rebuildLineDedupGuard " +
-            "once (stream stopped) to migrate an unguarded index, or " +
-            "start the sink with bloomGuard = false")
-      case (Some(bf), _) =>
-        val bc = spark.sparkContext.broadcast(bf)
-        val hit = graft.functions.BloomMightContainLong
-          .mightContain(col("_h64"), bc)
-        val negatives = firstInBatch.filter(!hit)
-        val positives = firstInBatch.filter(hit)
-        val pset = positives.select(col("p")).distinct()
-          .collect().map(_.getInt(0)) // bounded at prefixParts rows
-        if (pset.isEmpty) firstInBatch
-        else {
-          val prior = prunedIndexRead(spark, dirs, indexPath, pset,
-            Seq("_h"))
-          negatives.unionByName(
-            positives.join(prior, Seq("_h"), "left_anti"))
-        }
-    }
-  }
-
-  /** Live content of a guarded index (flat tails + `p=`-partitioned
-    * base), with the BASE read pruned to the `pset` prefixes — the
-    * shared probe read of the guarded filter sinks. Tails are
-    * batch-scale by the compaction contract and read whole. */
-  private def prunedIndexRead(spark: SparkSession, dirs: Seq[String],
-                              indexPath: String, pset: Array[Int],
-                              cols: Seq[String]): DataFrame = {
-    val (baseDirs, tailDirs) =
-      dirs.partition(_.substring(indexPath.length).contains("b=-"))
-    (baseDirs.map(d => spark.read.parquet(d)
+    if (dirs.isEmpty) return None
+    val bf = bloom.getOrElse(throw new IllegalStateException(
+      s"$indexPath holds admitted batches but no _bloom state: the " +
+        missing + " once (stream stopped) to migrate an unguarded " +
+        "index, or start the sink with bloomGuard = false"))
+    val hit = graft.functions.BloomMightContainLong
+      .mightContain(col(keyCol), spark.sparkContext.broadcast(bf))
+    val pset = rows.filter(hit).select(col("p")).distinct()
+      .collect().map(_.getInt(0)) // bounded at prefixParts rows
+    if (pset.isEmpty) return None
+    val (baseDirs, tailDirs) = dirs.partition(graft.io.Batches.isBase)
+    Some(hit -> (baseDirs.map(d => spark.read.parquet(d)
         .filter(col("p").isin(pset.map(Int.box): _*))
         .select(cols.map(col): _*)) ++
       tailDirs.map(d => spark.read.parquet(d).select(cols.map(col): _*)))
-      .reduce(_.unionByName(_))
+      .reduce(_.unionByName(_)))
   }
 
   /** Layout-aware consumer read of the guarded line index's live
@@ -1356,9 +1389,7 @@ object Ingest {
       expectedItems: Long, fpp: Double): Unit = {
     val dirs = graft.io.Batches.liveDirs(spark, indexPath)
     if (dirs.isEmpty) return
-    val ids = dirs.map(_.split("/b=").last.toLong)
-    val highWater = // max folded-or-live batch id (base encodes -(w+2))
-      ids.map(id => if (id <= -2L) -id - 2L else id).max
+    val highWater = graft.io.Batches.highWater(dirs)
     // prep: live rows → STORAGE rows + the `p` column (re-derived, so
     // a resize rebuild of an already-guarded index just re-buckets);
     // storage must keep the tails' schema — the next compaction unions
@@ -1380,7 +1411,7 @@ object Ingest {
       graft.io.BloomState.commit(spark, s"$indexPath/_bloom",
         highWater, bloom)
       graft.io.Fs.rename(spark, staging,
-        s"$indexPath/b=${-(highWater + 2L)}")
+        graft.io.Batches.baseDir(indexPath, highWater))
       dirs.foreach(graft.io.Fs.delete(spark, _))
     } finally { rows.unpersist(); () }
   }
@@ -1393,8 +1424,7 @@ object Ingest {
                             prefixParts: Int): Unit =
     rebuildGuardedBase(spark, indexPath,
       df => df.select(col("_h")).distinct()
-        .withColumn("p",
-          pmod(h64FromMd5(col("_h")), lit(prefixParts)).cast("int")),
+        .withColumn("p", prefixOf(h64FromMd5(col("_h")), prefixParts)),
       rows => rows.select(h64FromMd5(col("_h")).as("k")),
       expectedLines, fpp)
 
@@ -1404,8 +1434,7 @@ object Ingest {
                           expectedKeys: Long, fpp: Double,
                           prefixParts: Int): Unit =
     rebuildGuardedBase(spark, indexPath,
-      df => df.withColumn("p",
-        pmod(col("band_h"), lit(prefixParts)).cast("int")),
+      df => df.withColumn("p", prefixOf(col("band_h"), prefixParts)),
       rows => rows.select(col("band_h").as("k")),
       expectedKeys, fpp)
 
@@ -1422,43 +1451,23 @@ object Ingest {
       bloom: Option[org.apache.spark.util.sketch.BloomFilter],
       prefixParts: Int,
       horizonCutoff: Option[Long] = None): DataFrame = {
-    graft.io.Batches.requireBatchLayout(spark, indexPath)
-    val dirs = graft.io.Batches.liveDirs(spark, indexPath,
-      below = Some(batchId))
-    (bloom, dirs) match {
-      case (_, Nil) => keys.select(col(idCol)).limit(0)
-      case (None, _) =>
-        throw new IllegalStateException(
-          s"$indexPath holds admitted batches but no _bloom state: the " +
-            "guard cannot certify collision-free keys. Run " +
-            "rebuildNearDupGuard once (stream stopped) to migrate an " +
-            "unguarded index, or start the sink with bloomGuard = false")
-      case (Some(bf), _) =>
-        val bc = spark.sparkContext.broadcast(bf)
-        val positives = keys.filter(graft.functions.BloomMightContainLong
-            .mightContain(col("band_h"), bc))
-          .withColumn("p",
-            pmod(col("band_h"), lit(prefixParts)).cast("int"))
-        val pset = positives.select(col("p")).distinct()
-          .collect().map(_.getInt(0))
-        // horizoned probe: only in-horizon index rows may suppress —
-        // a bloom positive whose rows all aged out falls through to
-        // admission (the bloom itself never evicts; see the sink doc)
-        val readCols = horizonCutoff match {
-          case Some(_) => Seq("band", "band_h", "_seen")
-          case None => Seq("band", "band_h")
+    val rows = keys.withColumn("p", prefixOf(col("band_h"), prefixParts))
+    // horizoned probe: only in-horizon index rows may suppress — a
+    // bloom positive whose rows all aged out falls through to
+    // admission (the bloom itself never evicts; see the sink doc)
+    guardedProbe(spark, indexPath, batchId, rows, "band_h",
+      Seq("band", "band_h") ++ horizonCutoff.map(_ => "_seen"), bloom,
+      "guard cannot certify collision-free keys. Run " +
+        "rebuildNearDupGuard") match {
+      case None => keys.select(col(idCol)).limit(0)
+      case Some((hit, idx)) =>
+        val inHorizon = horizonCutoff match {
+          case Some(c) => idx.filter(col("_seen") >= c)
+            .select(col("band"), col("band_h"))
+          case None => idx
         }
-        if (pset.isEmpty) keys.select(col(idCol)).limit(0)
-        else {
-          val idx = prunedIndexRead(spark, dirs, indexPath, pset, readCols)
-          val inHorizon = horizonCutoff match {
-            case Some(c) => idx.filter(col("_seen") >= c)
-              .select(col("band"), col("band_h"))
-            case None => idx
-          }
-          positives.join(inHorizon, Seq("band", "band_h"), "left_semi")
-            .select(col(idCol)).distinct()
-        }
+        rows.filter(hit).join(inHorizon, Seq("band", "band_h"), "left_semi")
+          .select(col(idCol)).distinct()
     }
   }
 
@@ -1552,11 +1561,9 @@ object Ingest {
                          prefixParts: Int = 256,
                          bloomDriverMaxRows: Long = 1000000L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // cross-trigger bloom cache (valid only when its version is still
-    // the latest committed below the current batch — checked per
-    // trigger against the cheap file listing, so restarts and replays
-    // fall back to a fresh read, never a stale filter)
-    var bloomCache: (Long, org.apache.spark.util.sketch.BloomFilter) = null
+    val guard =
+      if (bloomGuard) Some(new GuardBloom(indexPath, expectedLines, fpp,
+        bloomDriverMaxRows)) else None
     sink(docs, checkpoint, trigger) { (batch, batchId) =>
       val spark = batch.sparkSession
       val lines = batch.select(col(idCol),
@@ -1565,16 +1572,9 @@ object Ingest {
         .persist()
       var admitted: DataFrame = null
       try {
-        if (compactDue(compactEvery, batchId)) {
-          if (bloomGuard)
-            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
-              partitionBy = Seq("p"),
-              deriveTail = df => df.withColumn("p",
-                pmod(h64FromMd5(col("_h")), lit(prefixParts)).cast("int")))
-          else
-            graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1)
-          graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
-        }
+        compactFilterRoots(spark, compactEvery, batchId, indexPath,
+          outRoot, guard.map(_ =>
+            prefixOf(h64FromMd5(col("_h")), prefixParts)))
         val cand = lines.filter(length(col("line")) >= minChars)
           .withColumn("_h", unhex(md5(col("line").cast("binary"))))
         val exempt = lines.filter(length(col("line")) < minChars)
@@ -1590,24 +1590,11 @@ object Ingest {
             col("_w").getField("pos").as("pos"),
             col("_w").getField("line").as("line"))
         // ...minus lines any COMMITTED prior batch admitted
-        val bloomRoot = s"$indexPath/_bloom"
-        val prevBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-          if (!bloomGuard) None
-          else graft.io.BloomState
-            .latestVersionBefore(spark, bloomRoot, below = batchId)
-            .map { v =>
-              if (bloomCache != null && bloomCache._1 == v) bloomCache._2
-              else {
-                val b = graft.io.BloomState.read(spark, bloomRoot, v)
-                bloomCache = (v, b)
-                b
-              }
-            }
+        val prevBloom = guard.flatMap(_.before(spark, batchId))
         admitted = (if (bloomGuard) {
           val withKeys = firstInBatch
             .withColumn("_h64", h64FromMd5(col("_h")))
-            .withColumn("p",
-              pmod(col("_h64"), lit(prefixParts)).cast("int"))
+            .withColumn("p", prefixOf(col("_h64"), prefixParts))
           lineDedupAdmit(spark, indexPath, batchId, withKeys, prevBloom)
         } else {
           val priorHashes = graft.io.Batches
@@ -1623,36 +1610,20 @@ object Ingest {
           .agg(array_join(transform(
             array_sort(collect_list(struct(col("pos"), col("line")))),
             x => x.getField("line")), sep).as("_text"))
-        batch.drop(textCol)
+        graft.io.Batches.write(batch.drop(textCol)
           .join(reassembled, Seq(idCol), "left")
           .withColumn(textCol, coalesce(col("_text"), lit("")))
-          .drop("_text")
-          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+          .drop("_text"), outRoot, batchId)
         if (bloomGuard) {
           // tail dirs are FLAT — identical layout to the unguarded
           // sink (batch-scale, read whole by the probe); only the
           // compaction fold pays the p= many-directories layout
-          admitted.select(col("_h"))
-            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
-          // bloom LAST: committed only once the index rows it
-          // certifies are on disk (any crash before here replays the
-          // whole batch against the previous bloom + index). Build
-          // site is adaptive (BloomState.append): at trigger scale
-          // the admitted hashes insert on the driver into a COPY of
-          // the previous filter (8 bytes per distinct new line —
-          // measured cheaper than per-partition full-size filters);
-          // past bloomDriverMaxRows (a catch-up batch after
-          // downtime) the build is a distributed stat.bloomFilter
-          // merged executor-side, so driver memory never scales
-          // with the backlog.
-          val nb = graft.io.BloomState.append(
-            admitted.select(col("_h64")), "_h64", prevBloom,
-            expectedLines, fpp, bloomDriverMaxRows)
-          graft.io.BloomState.commit(spark, bloomRoot, batchId, nb)
-          bloomCache = (batchId, nb)
+          graft.io.Batches.write(admitted.select(col("_h")), indexPath, batchId)
+          // bloom LAST (see GuardBloom.commit)
+          guard.foreach(_.commit(spark, batchId, admitted, "_h64", prevBloom))
         } else
-          admitted.select(col("_h")).distinct()
-            .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+          graft.io.Batches.write(admitted.select(col("_h")).distinct(),
+            indexPath, batchId)
       } finally {
         if (admitted != null) admitted.unpersist()
         lines.unpersist()
@@ -1771,10 +1742,10 @@ object Ingest {
             .qcosine(col("x.qv"), col("y.qv")) >= minCos)
           .select(col(s"y.$idCol").as(idCol)).distinct()
         val dropIds = priorHits.union(batchDominated).distinct()
-        batch.join(dropIds, Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
-        keys.join(dropIds, Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$indexPath/b=$batchId")
+        graft.io.Batches.write(batch.join(dropIds, Seq(idCol), "left_anti"),
+          outRoot, batchId)
+        graft.io.Batches.write(keys.join(dropIds, Seq(idCol), "left_anti"),
+          indexPath, batchId)
       } finally { keys.unpersist(); () }
     }
 
@@ -1843,10 +1814,10 @@ object Ingest {
           .filter(col("contamination_ratio") >= maxRatio)
           .persist()
         try {
-          batch.join(refused, Seq(idCol), "inner")
-            .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
-          batch.join(refused.select(col(idCol)), Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+          graft.io.Batches.write(batch.join(refused, Seq(idCol), "inner"),
+            quarantineRoot, batchId)
+          graft.io.Batches.write(batch.join(refused.select(col(idCol)),
+            Seq(idCol), "left_anti"), outRoot, batchId)
         } finally { refused.unpersist(); () }
       } finally { batch.unpersist(); () }
     }
@@ -1904,11 +1875,11 @@ object Ingest {
         // rewrites both dirs, so order only affects what a
         // mid-crash window can observe, and quarantine-without-out
         // is the safe side (never redaction-less text in out)
-        TextStats.withPiiStats(batch, textCol)
-          .filter(col("has_pii") > 0L)
-          .write.mode("overwrite").parquet(s"$quarantineRoot/b=$batchId")
-        batch.withColumn(textCol, TextStats.piiRedacted(col(textCol)))
-          .write.mode("overwrite").parquet(s"$outRoot/b=$batchId")
+        graft.io.Batches.write(TextStats.withPiiStats(batch, textCol)
+          .filter(col("has_pii") > 0L), quarantineRoot, batchId)
+        graft.io.Batches.write(
+          batch.withColumn(textCol, TextStats.piiRedacted(col(textCol))),
+          outRoot, batchId)
       } finally { batch.unpersist(); () }
     }
 

@@ -279,7 +279,7 @@ class IvfIndexSpec extends SparkSpec {
     val before = topk()
 
     assert(Embeddings.compactIvfIndex(spark, dir, upTo = 1L))
-    assert(Embeddings.ivfWatermark(spark, dir) == 1L)
+    assert(graft.io.Tagged.watermark(spark, dir) == 1L)
     val tags = spark.read.parquet(dir)
       .select(col("b").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
@@ -302,7 +302,7 @@ class IvfIndexSpec extends SparkSpec {
 
     // fold the rest: the previous fold base collapses into the new one
     assert(Embeddings.compactIvfIndex(spark, dir, upTo = 99L))
-    assert(Embeddings.ivfWatermark(spark, dir) == 2L)
+    assert(graft.io.Tagged.watermark(spark, dir) == 2L)
     assert(spark.read.parquet(dir)
       .select(col("b").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet == Set(-1L, -4L))

@@ -135,4 +135,109 @@ class PublishRecoverySpec extends SparkSpec {
     assert(healed == healthy)
     assert(Fs.exists(spark, dir) && !Fs.exists(spark, bakOf(dir)))
   }
+
+  test("crash matrix: every intermediate state of a tagged-store compaction serves the pre-fold read and converges") {
+    // Tagged.compact on a store with a previous fold (watermark w0):
+    // [F] fold write under the new base tag, [M] `_w_<newW>` marker,
+    // [S] sweep of the folded sources, [W] sweep of older markers.
+    // Each state after a crash is rebuilt from copies taken before
+    // and after one full compact; in every one the live read must be
+    // the pre-fold read, and re-running the compact with the same
+    // upTo must converge to the full run's tag dirs and watermark.
+    import java.nio.file.{Files, Path, Paths}
+    import org.apache.commons.io.FileUtils
+    import scala.jdk.CollectionConverters._
+    def walk(dir: String): Seq[Path] = {
+      val st = Files.walk(Paths.get(dir))
+      try st.iterator().asScala.toList finally st.close()
+    }
+    def tagDirs(dir: String): Set[String] = walk(dir)
+      .filter(p => Files.isDirectory(p) &&
+        graft.io.Tagged.tagOf(p.getFileName.toString).nonEmpty)
+      .map(p => Paths.get(dir).relativize(p).toString).toSet
+    def markers(dir: String): Set[String] = Fs.listFileNames(spark, dir)
+      .filter(_.startsWith("_w_")).toSet
+    def copy(from: String, to: String): Unit =
+      FileUtils.copyDirectory(new java.io.File(from), new java.io.File(to))
+
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val probes = e.filter($"vec_id" < 5)
+    val model = Embeddings.ivfFit(e, "vec_id", "embedding", nLists = 8)
+    val ivfParts = (0 to 3).map(i => e.filter($"vec_id" % 4 === i))
+    val docs = Seq(
+      (1L, "spark shuffle join plan"), (2L, "broadcast join codegen stage"),
+      (3L, "shuffle skew salting shuffle"), (4L, "join reorder statistics"),
+      (5L, "skew aware partition pruning"), (6L, "shuffle join skew"))
+      .toDF("doc_id", "text")
+    val terms = Seq("shuffle", "join", "skew")
+    // (name, build + appends + first fold, second fold's upTo, compact,
+    //  live read)
+    case class Store(name: String, build: String => Unit, upTo: Long,
+                     compact: String => Boolean,
+                     read: String => Set[Seq[Any]])
+    val stores = Seq(
+      Store("ivf", { dir =>
+          Embeddings.writeIvfIndex(model, ivfParts(0), "vec_id",
+            "embedding", dir)
+          (1 to 3).foreach(i => Embeddings.appendToIvfIndex(model,
+            ivfParts(i), "vec_id", "embedding", dir,
+            batchTag = Some(i - 1L)))
+          assert(Embeddings.compactIvfIndex(spark, dir, upTo = 0L))
+        }, 2L,
+        Embeddings.compactIvfIndex(spark, _, upTo = 2L),
+        dir => Embeddings.ivfTopKIndexed(model, spark, dir, probes,
+          "vec_id", "embedding", nProbe = 3, k = 5)
+          .collect().map(_.toSeq).toSet),
+      Store("search", { dir =>
+          graft.ops.Retrieval.writeSearchIndex(
+            docs.filter($"doc_id" <= 2), "doc_id", "text", dir, nBuckets = 8)
+          (3L to 6L).foreach(id => graft.ops.Retrieval.appendToSearchIndex(
+            docs.filter($"doc_id" === id), "doc_id", "text", dir,
+            batchTag = Some(id - 3L)))
+          assert(graft.ops.Retrieval.compactSearchIndex(spark, dir, 1L))
+        }, 3L,
+        graft.ops.Retrieval.compactSearchIndex(spark, _, upTo = 3L),
+        dir => graft.ops.Retrieval.bm25IndexTopK(spark, dir, "doc_id",
+          terms, k = 10).collect().map(_.toSeq).toSet))
+
+    for (st <- stores) {
+      val root = tmp(s"graft_tagged_matrix_${st.name}")
+      val pre = s"$root/pre"; val post = s"$root/post"
+      st.build(pre)
+      val before = st.read(pre)
+      copy(pre, post)
+      assert(st.compact(post))
+      val newW = graft.io.Tagged.watermark(spark, post)
+      assert(newW == st.upTo)
+      assert(st.read(post) == before, s"${st.name}: full fold changed reads")
+      val newBase = graft.io.Tagged.dirName(graft.io.Tagged.baseTag(newW))
+      val folded = walk(post).filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString == newBase)
+      assert(folded.nonEmpty)
+      def withFold(dir: String): Unit = {
+        copy(pre, dir)
+        folded.foreach(p => copy(p.toString,
+          s"$dir/${Paths.get(post).relativize(p)}"))
+      }
+      val states = Seq[(String, String => Unit)](
+        "fold write" -> withFold,
+        "marker" -> { d => withFold(d); Fs.touch(spark, s"$d/_w_$newW") },
+        "source sweep" -> { d => copy(post, d)
+          markers(pre).foreach(m => Fs.touch(spark, s"$d/$m")) },
+        "marker sweep" -> (copy(post, _)))
+      for ((crashAfter, make) <- states) {
+        val dir = s"$root/${crashAfter.replace(' ', '_')}"
+        make(dir)
+        assert(st.read(dir) == before,
+          s"${st.name}, crash after $crashAfter: live read changed")
+        st.compact(dir)
+        // (an older marker a crash left stays until the next fold's
+        // marker sweep; the newest marker alone sets the watermark)
+        assert(tagDirs(dir) == tagDirs(post) &&
+          graft.io.Tagged.watermark(spark, dir) == newW,
+          s"${st.name}, crash after $crashAfter: re-run did not converge")
+        assert(st.read(dir) == before)
+      }
+    }
+  }
 }

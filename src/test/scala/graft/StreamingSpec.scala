@@ -1681,7 +1681,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     // batchId 2 folded batches 0..1 into b=-3 (watermark 1); batches
     // 2,3 are the uncompacted tail; base b=-1 never rewritten
-    assert(graft.ops.Retrieval.searchWatermark(spark, idx) == 1L)
+    assert(graft.io.Tagged.watermark(spark, idx) == 1L)
     val statsB = spark.read.parquet(s"$idx/stats")
       .select(col("b").cast("long")).collect().map(_.getLong(0)).toSet
     assert(statsB == Set(-1L, -3L, 2L, 3L), s"stats layout: $statsB")
@@ -1699,7 +1699,7 @@ class StreamingSpec extends SparkSpec {
     // same upTo re-folds into the same tag, then sweeps
     graft.ops.Retrieval.compactSearchIndex(spark, idx, upTo = 3L)
     assert(hits(idx) == hits(full))
-    assert(graft.ops.Retrieval.searchWatermark(spark, idx) == 3L)
+    assert(graft.io.Tagged.watermark(spark, idx) == 3L)
   }
 
   test("activity index: streamed retention equals batch cohorts over " +
