@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     tag rules are [[Tagged]]'s, shared with the indexes' layout,
   *     whose base build owns -1.)
   *
-  * Read rule ([[liveDirs]]): take the base dir with the HIGHEST
+  * Read rule ([[live]]): take the base dir with the HIGHEST
   * watermark w, plus batch dirs with id > w. Everything else —
   * batch dirs <= w (folded content; a post-compaction replay may
   * recreate one, byte-equivalent, see below), superseded older bases —
@@ -75,19 +75,21 @@ object Batches {
   def write(df: DataFrame, root: String, batchId: Long): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(dir(root, batchId))
 
-  /** Whether a [[liveDirs]] entry is the compacted base (else a tail). */
-  def isBase(path: String): Boolean =
-    Tagged.tagOf(new org.apache.hadoop.fs.Path(path).getName)
-      .exists(Tagged.foldedThrough(_).nonEmpty)
-
   /** The compacted base dir holding every batch id <= `w`. */
   def baseDir(root: String, w: Long): String = dir(root, Tagged.baseTag(w))
 
-  /** The highest batch id the [[liveDirs]] entries `dirs` hold (a base
-    * counts as its watermark). */
-  def highWater(dirs: Seq[String]): Long =
-    dirs.flatMap(d => Tagged.tagOf(new org.apache.hadoop.fs.Path(d).getName))
-      .map(t => Tagged.foldedThrough(t).getOrElse(t)).max
+  /** A root's live content ([[live]]): the newest compacted base's
+    * watermark `w` (-1 if never compacted) and the batch ids of the
+    * uncompacted tail, ascending. */
+  final case class Live(root: String, w: Long, tail: Seq[Long]) {
+    /** The compacted base dir, if any. */
+    def base: Option[String] = if (w >= 0L) Some(baseDir(root, w)) else None
+    def tailDirs: Seq[String] = tail.map(dir(root, _))
+    /** Every live dir, base first. */
+    def dirs: Seq[String] = base.toSeq ++ tailDirs
+    /** The highest batch id held (the base counts as its watermark). */
+    def highWater: Long = (w +: tail).max
+  }
 
   /** Fail fast on a pre-`b=` layout: parquet files sitting directly at
     * `root` (the old flat-append sinks wrote these). Silently ignoring
@@ -108,22 +110,20 @@ object Batches {
         "silently ignored — migrate it into a b= dir first")
   }
 
-  /** The directories a reader should see: the newest compacted base
-    * (if any) plus uncompacted batch dirs above its watermark —
-    * optionally only those below `below` (a sink reading its own store
-    * passes its current batch id, so a replay can't see its own
-    * half-written output). Sorted, base first. */
-  def liveDirs(s: SparkSession, root: String,
-               below: Option[Long] = None): Seq[String] = {
+  /** What a reader should see: the newest compacted base (if any) plus
+    * uncompacted batch dirs above its watermark — optionally only those
+    * below `below` (a sink reading its own store passes its current
+    * batch id, so a replay can't see its own half-written output). */
+  def live(s: SparkSession, root: String,
+           below: Option[Long] = None): Live = {
     val ids = batchIds(s, root)
     val w = Tagged.watermarkOf(ids)
     below.foreach(b => require(w < b,
       s"$root compacted through batch $w, at or past the reader's " +
         s"current batch $b — a fold ran beyond the stream's committed " +
         "frontier (upTo must stay <= the last checkpointed batch)"))
-    val base = if (w >= 0L) Seq(Tagged.baseTag(w)) else Nil
-    val tail = ids.filter(id => id >= 0L && id > w && below.forall(id < _))
-    (base ++ tail.sorted).map(dir(root, _))
+    Live(root, w,
+      ids.filter(id => id >= 0L && id > w && below.forall(id < _)).sorted)
   }
 
   /** Read the layout's live content (base + tail) with `b` as a
@@ -139,7 +139,7 @@ object Batches {
   def read(s: SparkSession, root: String,
            below: Option[Long] = None): Option[DataFrame] = {
     requireBatchLayout(s, root)
-    val dirs = liveDirs(s, root, below)
+    val dirs = live(s, root, below).dirs
     if (dirs.isEmpty) None
     else Some(s.read.option("basePath", root)
       .option("mergeSchema", "true").parquet(dirs: _*))

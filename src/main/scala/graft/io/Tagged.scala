@@ -12,23 +12,23 @@ import org.apache.spark.sql.functions.{col, lit}
   * filter to [[live]] tags, and [[compact]] folds the tail. */
 object Tagged {
   /** Tag of a base build. */
-  val buildTag: Long = -1L
+  private[io] val buildTag: Long = -1L
 
   /** Tag of the compacted base folded through batch `w`. */
   def baseTag(w: Long): Long = -(w + 2L)
 
   /** The watermark a base tag encodes; None for build and tail tags. */
-  def foldedThrough(tag: Long): Option[Long] =
+  private[io] def foldedThrough(tag: Long): Option[Long] =
     if (tag <= -2L) Some(-tag - 2L) else None
 
   /** Highest watermark among the base tags in `tags`; -1 when none. */
-  def watermarkOf(tags: Seq[Long]): Long =
+  private[io] def watermarkOf(tags: Seq[Long]): Long =
     tags.flatMap(foldedThrough).maxOption.getOrElse(-1L)
 
   /** A tag a fold through `w` made obsolete: a tail batch the base
     * already holds (a post-fold replay may re-create one,
     * byte-equivalent) or a base superseded by a newer watermark. */
-  def stale(tag: Long, w: Long): Boolean =
+  private[io] def stale(tag: Long, w: Long): Boolean =
     (tag >= 0L && tag <= w) || foldedThrough(tag).exists(_ < w)
 
   /** Name of the directory holding tag `tag`. */
@@ -46,7 +46,7 @@ object Tagged {
     * when w = -1 (never compacted: -(w+2) = -1 and b > -1 covers every
     * tag). A pure partition-column predicate, so it prunes
     * directories, not rows. */
-  def live(w: Long): Column =
+  private[io] def live(w: Long): Column =
     col("b") === lit(buildTag) || col("b") === lit(baseTag(w)) ||
       col("b") > lit(w)
 
@@ -113,7 +113,8 @@ object Tagged {
     * sweep [[stale]] tags; fold by dynamic partition overwrite (readers
     * ignore the new tag until the marker lands); touch `_w_<newW>`, the
     * ATOMIC watermark advance; sweep the folded sources; sweep older
-    * markers (a missed sweep is retried by the next fold). `upTo` must
+    * markers (also when there is nothing to fold, so a crash before
+    * this last sweep converges on the next call). `upTo` must
     * stay at or below the appending stream's last checkpointed batch,
     * the bound of [[Batches.compact]]. Returns true iff a fold
     * happened. */
@@ -126,19 +127,21 @@ object Tagged {
     tagged.filter(kv => stale(kv._2, w)).foreach(kv => Fs.delete(s, kv._1))
     val candidates = tagged.map(_._2).distinct
       .filter(t => t >= 0L && t > w && t <= upTo)
-    if (candidates.isEmpty) return false
-    val newW = candidates.max
-    val foldTags = (if (w >= 0L) Seq(baseTag(w)) else Nil) ++ candidates
-    trees.foreach { t =>
-      val root = treePath(path, t)
-      write(t.fold(s.read.parquet(root).filter(col("b").isin(foldTags: _*))
-        .drop("b")), root, t.partitionCols, Some(baseTag(newW)))
+    val newW = candidates.maxOption
+    newW.foreach { nw =>
+      val foldTags = (if (w >= 0L) Seq(baseTag(w)) else Nil) ++ candidates
+      trees.foreach { t =>
+        val root = treePath(path, t)
+        write(t.fold(s.read.parquet(root).filter(col("b").isin(foldTags: _*))
+          .drop("b")), root, t.partitionCols, Some(baseTag(nw)))
+      }
+      Fs.touch(s, s"$path/_w_$nw")
+      tagged.filter(kv => foldTags.contains(kv._2))
+        .foreach(kv => Fs.delete(s, kv._1))
     }
-    Fs.touch(s, s"$path/_w_$newW")
-    tagged.filter(kv => foldTags.contains(kv._2))
-      .foreach(kv => Fs.delete(s, kv._1))
-    Fs.listFileNames(s, path).filter(n => markerOf(n).exists(_ < newW))
+    val current = newW.getOrElse(w)
+    Fs.listFileNames(s, path).filter(n => markerOf(n).exists(_ < current))
       .foreach(n => Fs.delete(s, s"$path/$n"))
-    true
+    newW.nonEmpty
   }
 }

@@ -42,6 +42,19 @@ object Embeddings {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot / (na * nb))
   }
 
+  /** Per-query top-k of a scored `(query_id, corpus_id, score)` frame:
+    * windowed rank by `score` (descending with `desc`), corpus_id
+    * tie-break. Returns (query_id, corpus_id, score, rnk). */
+  private def rankTopK(scored: DataFrame, score: String, k: Int,
+                       desc: Boolean = false): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(if (desc) col(score).desc else col(score), col("corpus_id"))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("query_id"), col("corpus_id"), col(score),
+        col("rnk").cast("int").as("rnk"))
+  }
+
   /** Brute-force cosine top-k: for each query vector, the k most similar
     * corpus vectors (excluding itself). Queries are broadcast; the corpus
     * is scanned once; ranking is windowed per query with vec_id
@@ -55,13 +68,7 @@ object Embeddings {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .withColumn("cosine", qcosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "cosine", k, desc = true)
   }
 
   /** Brute-force top-k by exact integer squared-L2 distance — the
@@ -81,13 +88,7 @@ object Embeddings {
       .withColumn("dist",
         qdot(col("qv"), col("qv")) - lit(2L) * qdot(col("qv"), col("cv")) +
           qdot(col("cv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("dist"), col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("dist"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "dist", k)
   }
 
   /** ANN evaluation: recall of an approximate top-k frame against the
@@ -154,13 +155,7 @@ object Embeddings {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .withColumn("cosine_q", qcosine(col("qq"), col("cq")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine_q").desc, col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine_q"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "cosine_q", k, desc = true)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane j,
@@ -235,13 +230,7 @@ object Embeddings {
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .filter(col("corpus_id") =!= col("query_id"))
       .withColumn("cosine", qcosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "cosine", k, desc = true)
   }
 
   /** IVF coarse-quantizer model: a small centroid table, broadcast as
@@ -363,6 +352,12 @@ object Embeddings {
                 idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol), cellOf(model, col(vecCol)).as("cell"))
 
+  /** The `nProbe` nearest cells of quantized vector `qv`, nearest
+    * first. */
+  private def nearestCells(model: IvfModel, qv: Column, nProbe: Int): Column =
+    transform(slice(array_sort(array(centroidDistStructs(model, qv): _*)),
+      1, nProbe), s => s.getField("cell"))
+
   /** The `nProbe` nearest cells of each query vector — exactly the
     * broadcast cell set [[ivfTopK]]/[[ivfTopKIndexed]] join against.
     * Exposed for diagnostics: measuring how many index partitions a
@@ -370,10 +365,7 @@ object Embeddings {
     * files) and for cache pre-warming. */
   def probeCellsOf(model: IvfModel, queries: DataFrame, idCol: String,
                    vecCol: String, nProbe: Int): DataFrame = {
-    val cells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(model, quantize(col(vecCol))): _*)), 1, nProbe),
-      s => s.getField("cell"))
+    val cells = nearestCells(model, quantize(col(vecCol)), nProbe)
     queries.select(col(idCol).as("query_id"), explode(cells).as("cell"))
   }
 
@@ -390,22 +382,13 @@ object Embeddings {
       .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cv"))
       .select(col("corpus_id"), col("cv"),
         cellOfQuantized(model, col("cv")).as("cell"))
-    val probeCells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(model, quantize(col(vecCol))): _*)), 1, nProbe),
-      s => s.getField("cell"))
+    val probeCells = nearestCells(model, quantize(col(vecCol)), nProbe)
     val qCells = queries.select(col(idCol).as("query_id"),
       quantize(col(vecCol)).as("qv"), explode(probeCells).as("cell"))
     val scored = cb.join(broadcast(qCells), Seq("cell"))
       .filter(col("corpus_id") =!= col("query_id"))
       .withColumn("cosine", qcosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "cosine", k, desc = true)
   }
 
   // ---- Product Quantization (Jégou et al. 2011): the ANN memory
@@ -499,13 +482,7 @@ object Embeddings {
       .withColumn("adc_dist",
         qdot(col("qv"), col("qv")) - lit(2L) * qdot(col("qv"), col("rv")) +
           qdot(col("rv"), col("rv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adc_dist"), col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("adc_dist"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "adc_dist", k)
   }
 
   /** IVF+PQ composed search — the classical pairing (and FAISS's
@@ -526,10 +503,7 @@ object Embeddings {
       .select(col("corpus_id"),
         cellOfQuantized(cells, col("cv")).as("cell"),
         pqReconstruct(pq, pqCodeOfQuantized(pq, col("cv"))).as("rv"))
-    val probeCells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(cells, quantize(col(vecCol))): _*)), 1, nProbe),
-      s => s.getField("cell"))
+    val probeCells = nearestCells(cells, quantize(col(vecCol)), nProbe)
     val q = queries.select(col(idCol).as("query_id"),
       quantize(col(vecCol)).as("qv"), explode(probeCells).as("cell"))
     val scored = cb.join(broadcast(q), Seq("cell"))
@@ -537,13 +511,7 @@ object Embeddings {
       .withColumn("adc_dist",
         qdot(col("qv"), col("qv")) - lit(2L) * qdot(col("qv"), col("rv")) +
           qdot(col("rv"), col("rv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adc_dist"), col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("adc_dist"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "adc_dist", k)
   }
 
   /** PQ search with exact RE-RANKING — the standard production recipe
@@ -568,13 +536,7 @@ object Embeddings {
       .withColumn("dist",
         qdot(col("qv"), col("qv")) - lit(2L) * qdot(col("qv"), col("cv")) +
           qdot(col("cv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("dist"), col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("dist"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "dist", k)
   }
 
   /** Persist the IVF index: the quantized corpus written PARTITIONED BY
@@ -642,6 +604,25 @@ object Embeddings {
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
       .filter(graft.io.Tagged.live(spark, indexPath))
 
+  /** The cell-pruned probe of a persisted index: the quantized queries
+    * `q` (query_id, qv) fanned out to their `nProbe` nearest cells,
+    * joined with the live rows of only those cells ([[liveCells]]; the
+    * cell set, bounded by nLists, is collected to the driver), each row
+    * carrying the index-side `corpus` columns (corpus_id among them);
+    * self-pairs dropped. */
+  private def probeLiveCells(model: IvfModel,
+                             spark: org.apache.spark.sql.SparkSession,
+                             indexPath: String, q: DataFrame, nProbe: Int,
+                             corpus: Column*): DataFrame = {
+    val qCells = q.select(col("query_id"), col("qv"),
+      explode(nearestCells(model, col("qv"), nProbe)).as("cell"))
+    val probed = qCells.select("cell").distinct()
+      .collect().map(_.getInt(0))
+    liveCells(spark, indexPath, probed).select(corpus :+ col("cell"): _*)
+      .join(broadcast(qCells), Seq("cell"))
+      .filter(col("corpus_id") =!= col("query_id"))
+  }
+
   /** Persist the IVF+PQ index: PQ CODES partitioned by cell — the
     * at-rest form of [[ivfPqTopK]] and the full 100 TB memory story in
     * one layout: a probe's scan is cut to its nProbe cell directories
@@ -671,29 +652,14 @@ object Embeddings {
                        idCol: String, vecCol: String,
                        nProbe: Int, k: Int): DataFrame = {
     graft.io.Fs.recoverPublished(spark, indexPath)
-    val probedCells = probeCellsOf(cells, queries, idCol, vecCol, nProbe)
-      .select("cell").distinct().collect().map(_.getInt(0))
-    val cb = liveCells(spark, indexPath, probedCells)
-      .select(col(idCol).as("corpus_id"),
-        pqReconstruct(pq, col("codes")).as("rv"), col("cell"))
-    val probeCells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(cells, quantize(col(vecCol))): _*)), 1, nProbe),
-      s => s.getField("cell"))
-    val qCells = queries.select(col(idCol).as("query_id"),
-      quantize(col(vecCol)).as("qv"), explode(probeCells).as("cell"))
-    val scored = cb.join(broadcast(qCells), Seq("cell"))
-      .filter(col("corpus_id") =!= col("query_id"))
+    val scored = probeLiveCells(cells, spark, indexPath,
+        queries.select(col(idCol).as("query_id"),
+          quantize(col(vecCol)).as("qv")), nProbe,
+        col(idCol).as("corpus_id"), pqReconstruct(pq, col("codes")).as("rv"))
       .withColumn("adc_dist",
         qdot(col("qv"), col("qv")) - lit(2L) * qdot(col("qv"), col("rv")) +
           qdot(col("rv"), col("rv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adc_dist"), col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("adc_dist"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "adc_dist", k)
   }
 
   /** Incremental IVF index maintenance: route NEW vectors into their
@@ -839,28 +805,12 @@ object Embeddings {
     // moved back before serving — the reference loader's main-then-.bak
     // order (app/utils.py:405-441) applied to the index directory
     graft.io.Fs.recoverPublished(spark, indexPath)
-    val probedCells = probeCellsOf(model, queries, idCol, vecCol, nProbe)
-      .select("cell").distinct().collect().map(_.getInt(0))
-    // live tags exclude partitions superseded by a fold
-    // ([[compactIvfIndex]]), pruning dirs like the cell filter
-    val cb = liveCells(spark, indexPath, probedCells)
-      .select(col(idCol).as("corpus_id"), col("cv"), col("cell"))
-    val probeCells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(model, quantize(col(vecCol))): _*)), 1, nProbe),
-      s => s.getField("cell"))
-    val qCells = queries.select(col(idCol).as("query_id"),
-      quantize(col(vecCol)).as("qv"), explode(probeCells).as("cell"))
-    val scored = cb.join(broadcast(qCells), Seq("cell"))
-      .filter(col("corpus_id") =!= col("query_id"))
+    val scored = probeLiveCells(model, spark, indexPath,
+        queries.select(col(idCol).as("query_id"),
+          quantize(col(vecCol)).as("qv")), nProbe,
+        col(idCol).as("corpus_id"), col("cv"))
       .withColumn("cosine", qcosine(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
+    rankTopK(scored, "cosine", k, desc = true)
   }
 
   /** Sampled RECALL MONITOR for a persisted IVF index — the drift
@@ -891,32 +841,16 @@ object Embeddings {
       .orderBy("_h").limit(nQueries)
       .select(col(idCol).as("query_id"), col("cv").as("qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def topK(candidates: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("corpus_id"))
-      candidates.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("query_id"), col("corpus_id"))
-    }
+    def topK(candidates: DataFrame): DataFrame =
+      rankTopK(candidates, "cosine", k, desc = true)
     val exact = topK(live.select(col(idCol).as("corpus_id"), col("cv"))
       .crossJoin(broadcast(q))
       .filter(col("corpus_id") =!= col("query_id"))
       .withColumn("cosine", qcosine(col("qv"), col("cv"))))
     // approx side: the same cell-pruned probe as [[ivfTopKIndexed]],
     // on the already-quantized sampled vectors
-    val probeCells = transform(
-      slice(array_sort(array(
-        centroidDistStructs(model, col("qv")): _*)), 1, nProbe),
-      s => s.getField("cell"))
-    val qCells = q.select(col("query_id"), col("qv"),
-      explode(probeCells).as("cell"))
-    val probed = qCells.select("cell").distinct()
-      .collect().map(_.getInt(0)) // bounded by nLists
-    val cb = liveCells(spark, indexPath, probed)
-      .select(col(idCol).as("corpus_id"), col("cv"), col("cell"))
-    val approx = topK(cb.join(broadcast(qCells), Seq("cell"))
-      .filter(col("corpus_id") =!= col("query_id"))
+    val approx = topK(probeLiveCells(model, spark, indexPath, q, nProbe,
+        col(idCol).as("corpus_id"), col("cv"))
       .withColumn("cosine", qcosine(col("qv"), col("cv"))))
     val r = recallAtK(approx, exact)
       .agg(avg(col("recall"))).head()

@@ -1234,13 +1234,10 @@ object Ingest {
       prefix: Option[org.apache.spark.sql.Column],
       foldBase: DataFrame => DataFrame = graft.io.Batches.noFold): Unit =
     if (compactDue(every, batchId)) {
-      prefix match {
-        case Some(p) => graft.io.Batches.compact(spark, indexPath,
-          upTo = batchId - 1, partitionBy = Seq("p"),
-          deriveTail = _.withColumn("p", p), foldBase = foldBase)
-        case None => graft.io.Batches.compact(spark, indexPath,
-          upTo = batchId - 1, foldBase = foldBase)
-      }
+      graft.io.Batches.compact(spark, indexPath, upTo = batchId - 1,
+        partitionBy = prefix.map(_ => "p").toSeq,
+        deriveTail = df => prefix.fold(df)(df.withColumn("p", _)),
+        foldBase = foldBase)
       graft.io.Batches.compact(spark, outRoot, upTo = batchId - 1)
     }
 
@@ -1340,9 +1337,8 @@ object Ingest {
       bloom: Option[org.apache.spark.util.sketch.BloomFilter],
       missing: String): Option[(org.apache.spark.sql.Column, DataFrame)] = {
     graft.io.Batches.requireBatchLayout(spark, indexPath)
-    val dirs = graft.io.Batches.liveDirs(spark, indexPath,
-      below = Some(batchId))
-    if (dirs.isEmpty) return None
+    val live = graft.io.Batches.live(spark, indexPath, below = Some(batchId))
+    if (live.dirs.isEmpty) return None
     val bf = bloom.getOrElse(throw new IllegalStateException(
       s"$indexPath holds admitted batches but no _bloom state: the " +
         missing + " once (stream stopped) to migrate an unguarded " +
@@ -1352,11 +1348,10 @@ object Ingest {
     val pset = rows.filter(hit).select(col("p")).distinct()
       .collect().map(_.getInt(0)) // bounded at prefixParts rows
     if (pset.isEmpty) return None
-    val (baseDirs, tailDirs) = dirs.partition(graft.io.Batches.isBase)
-    Some(hit -> (baseDirs.map(d => spark.read.parquet(d)
+    Some(hit -> (live.base.map(d => spark.read.parquet(d)
         .filter(col("p").isin(pset.map(Int.box): _*))
-        .select(cols.map(col): _*)) ++
-      tailDirs.map(d => spark.read.parquet(d).select(cols.map(col): _*)))
+        .select(cols.map(col): _*)).toSeq ++
+      live.tailDirs.map(d => spark.read.parquet(d).select(cols.map(col): _*)))
       .reduce(_.unionByName(_)))
   }
 
@@ -1370,7 +1365,7 @@ object Ingest {
   def readLineIndex(spark: SparkSession, indexPath: String,
                     below: Option[Long] = None): Option[DataFrame] = {
     graft.io.Batches.requireBatchLayout(spark, indexPath)
-    val dirs = graft.io.Batches.liveDirs(spark, indexPath, below)
+    val dirs = graft.io.Batches.live(spark, indexPath, below).dirs
     if (dirs.isEmpty) None
     else Some(dirs
       .map(d => spark.read.parquet(d).select(col("_h")))
@@ -1387,9 +1382,9 @@ object Ingest {
       prep: DataFrame => DataFrame,
       bloomKeys: DataFrame => DataFrame,
       expectedItems: Long, fpp: Double): Unit = {
-    val dirs = graft.io.Batches.liveDirs(spark, indexPath)
+    val live = graft.io.Batches.live(spark, indexPath)
+    val (dirs, highWater) = (live.dirs, live.highWater)
     if (dirs.isEmpty) return
-    val highWater = graft.io.Batches.highWater(dirs)
     // prep: live rows → STORAGE rows + the `p` column (re-derived, so
     // a resize rebuild of an already-guarded index just re-buckets);
     // storage must keep the tails' schema — the next compaction unions
@@ -1476,7 +1471,7 @@ object Ingest {
   def readNearDupIndex(spark: SparkSession, indexPath: String,
                        below: Option[Long] = None): Option[DataFrame] = {
     graft.io.Batches.requireBatchLayout(spark, indexPath)
-    val dirs = graft.io.Batches.liveDirs(spark, indexPath, below)
+    val dirs = graft.io.Batches.live(spark, indexPath, below).dirs
     if (dirs.isEmpty) None
     else Some(dirs.map(d => spark.read.parquet(d).drop("p"))
       .reduce(_.unionByName(_)))

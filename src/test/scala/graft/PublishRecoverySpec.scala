@@ -143,7 +143,8 @@ class PublishRecoverySpec extends SparkSpec {
     // Each state after a crash is rebuilt from copies taken before
     // and after one full compact; in every one the live read must be
     // the pre-fold read, and re-running the compact with the same
-    // upTo must converge to the full run's tag dirs and watermark.
+    // upTo must converge to the full run's tag dirs, markers and
+    // watermark.
     import java.nio.file.{Files, Path, Paths}
     import org.apache.commons.io.FileUtils
     import scala.jdk.CollectionConverters._
@@ -231,9 +232,8 @@ class PublishRecoverySpec extends SparkSpec {
         assert(st.read(dir) == before,
           s"${st.name}, crash after $crashAfter: live read changed")
         st.compact(dir)
-        // (an older marker a crash left stays until the next fold's
-        // marker sweep; the newest marker alone sets the watermark)
         assert(tagDirs(dir) == tagDirs(post) &&
+          markers(dir) == markers(post) &&
           graft.io.Tagged.watermark(spark, dir) == newW,
           s"${st.name}, crash after $crashAfter: re-run did not converge")
         assert(st.read(dir) == before)
