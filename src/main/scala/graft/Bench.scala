@@ -121,12 +121,16 @@ object Bench {
     // comparison to totals). The stamp (core count + epoch seconds)
     // makes every run's map durable; the short stdout line names the
     // exact file so a parser can find this run's map without guessing.
+    // The copy goes into a bench-runs/ directory beside the output
+    // file, so stamped copies collect in one git-ignored place.
     val stamped = {
-      val base = outFile.stripSuffix(".json")
-      s"${base}_c${cpus}_${System.currentTimeMillis / 1000}.json"
+      val out = java.nio.file.Paths.get(outFile)
+      val runs = out.resolveSibling("bench-runs")
+      java.nio.file.Files.createDirectories(runs)
+      val base = out.getFileName.toString.stripSuffix(".json")
+      runs.resolve(s"${base}_c${cpus}_${System.currentTimeMillis / 1000}.json")
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(stamped),
-      (full + "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(stamped, (full + "\n").getBytes("UTF-8"))
     spark.stop()
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"cpus":$cpus,"total_jobs":$totalJobs,"failed":$failedJson,"sf":"$sfDir","per_query":"$stamped"}""")
     if (failed.nonEmpty) sys.exit(1)

@@ -2204,21 +2204,72 @@ object SparkEntry {
   /** Brute-force cosine top-5 for the vec_id<10 probe set — the shared
     * oracle for e_ann_bruteforce and the exact-mode ANN variants. */
   private val annTop5Sql =
+    quantizedVecsSql + bruteCosineSql(10) +
+      topKTailSql("cosine", "cosine DESC", "s", 5)
+
+  /** The floor(x·10⁴) quantized-vector CTE `v(vec_id, qv)` that opens
+    * every ANN oracle. */
+  private lazy val quantizedVecsSql =
     """WITH v AS (SELECT vec_id, list_transform(embedding,
       |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
       |           FROM embeddings),
-      |q AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 10),
-      |s AS (SELECT q.query_id, c.vec_id corpus_id,
-      |        CAST(list_dot_product(q.qv, c.qv) AS DOUBLE) /
-      |        (sqrt(CAST(list_dot_product(q.qv, q.qv) AS DOUBLE)) *
-      |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
-      |      FROM q JOIN v c ON c.vec_id <> q.query_id),
-      |r AS (SELECT query_id, corpus_id, cosine,
-      |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-      |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
-      |      FROM s)
-      |SELECT query_id, corpus_id, cosine, rnk
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+      |""".stripMargin
+
+  /** Probe set `q` (vec_id < nQueries) and its brute-force cosine to
+    * every other corpus vector, as CTE `s`. */
+  private def bruteCosineSql(nQueries: Int): String =
+    s"""q AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < $nQueries),
+       |s AS (SELECT q.query_id, c.vec_id corpus_id,
+       |        CAST(list_dot_product(q.qv, c.qv) AS DOUBLE) /
+       |        (sqrt(CAST(list_dot_product(q.qv, q.qv) AS DOUBLE)) *
+       |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
+       |      FROM q JOIN v c ON c.vec_id <> q.query_id),
+       |""".stripMargin
+
+  /** The per-query top-k tail of the ANN oracles: rank CTE `src`'s
+    * (query_id, corpus_id, score) rows by `order`, ties to the lower
+    * corpus_id, and keep the first k. */
+  private def topKTailSql(score: String, order: String, src: String,
+                          k: Int): String =
+    s"""r AS (SELECT query_id, corpus_id, $score,
+       |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |          ORDER BY $order, corpus_id) AS INT) rnk
+       |      FROM $src)
+       |SELECT query_id, corpus_id, $score, rnk
+       |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+
+  /** In-bucket (LSH) or in-cell (IVF) cosine ranking: corpus rows `cb`
+    * against probe rows `qb` sharing the same `key`, then the top-k. */
+  private def probedTopKSql(key: String, k: Int): String =
+    s"""s AS (SELECT qb.query_id, cb.corpus_id,
+       |        CAST(list_dot_product(qb.qv2, cb.cv) AS DOUBLE) /
+       |        (sqrt(CAST(list_dot_product(qb.qv2, qb.qv2) AS DOUBLE)) *
+       |         sqrt(CAST(list_dot_product(cb.cv, cb.cv) AS DOUBLE))) AS cosine
+       |      FROM cb JOIN qb USING ($key) WHERE cb.corpus_id <> qb.query_id),
+       |""".stripMargin + topKTailSql("cosine", "cosine DESC", "s", k)
+
+  /** Recall evaluator: composes two component oracles as CTEs —
+    * per-query |approx ∩ exact| / |exact|. */
+  private def recallOracleSql(exact: String, approx: String): String =
+    s"""WITH exact AS (
+       |$exact
+       |), approx AS (
+       |$approx
+       |),
+       |sizes AS (SELECT query_id, count(*) AS n_exact
+       |          FROM exact GROUP BY 1),
+       |hits AS (SELECT e.query_id, count(*) AS n_hit
+       |         FROM exact e JOIN approx a
+       |           ON e.query_id = a.query_id
+       |          AND e.corpus_id = a.corpus_id
+       |         GROUP BY 1)
+       |SELECT s.query_id,
+       |       CAST(s.n_exact AS BIGINT) AS n_exact,
+       |       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+       |       CAST(coalesce(h.n_hit, 0) AS DOUBLE)
+       |         / CAST(s.n_exact AS DOUBLE) AS recall
+       |FROM sizes s LEFT JOIN hits h USING (query_id)
+       |ORDER BY s.query_id""".stripMargin
 
   /** Generated oracle for the recall-bearing multi-probe LSH path
     * (e_lsh_topk). The hyperplanes are md5-derived, data-independent
@@ -2240,24 +2291,7 @@ object SparkEntry {
     * embeddable mid-WITH (the caller supplies the `WITH RECURSIVE`
     * prefix), used by the quality-gate pipeline oracle. */
   private def ddClustersChainSql(src: String): String =
-    s"""t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM $src),
-      |sh AS (SELECT DISTINCT doc_id,
-      |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-      |       FROM t, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-      |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
-      |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
-      |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
-      |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
-      |                  array_to_string(list_sort(list(
-      |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
-      |           FROM sig GROUP BY 1, 2),
-      |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
-      |         FROM banded x JOIN banded y
-      |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-      |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-      |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
-      |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2),
+    s"""${minhashPairsSql("t", src)},
       |p AS (SELECT c.a_id, c.b_id
       |      FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
       |      JOIN sizes sa ON c.a_id = sa.doc_id JOIN sizes sb ON c.b_id = sb.doc_id
@@ -2270,6 +2304,129 @@ object SparkEntry {
       |  SELECT e.u, r.lbl FROM e JOIN reach r ON e.v = r.u),
       |clu AS (SELECT u AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
       |        FROM reach GROUP BY u)""".stripMargin
+
+  /** Stopword-hit counts `s_en`, `s_es`, `s_de` and `s_fr` over the
+    * token list `w`: the select list of every language-id CTE. */
+  private lazy val langScoresSql: String =
+    """        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is'))) AS BIGINT) s_en,
+      |        CAST(len(list_filter(w, x -> x IN ('el','la','de','los','es'))) AS BIGINT) s_es,
+      |        CAST(len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS BIGINT) s_de,
+      |        CAST(len(list_filter(w, x -> x IN ('le','la','les','des','est'))) AS BIGINT) s_fr""".stripMargin
+
+  /** The language pick over [[langScoresSql]]'s counts and their max
+    * `best`: the first language holding the top count, else 'und'. */
+  private lazy val langPredSql: String =
+    """        CASE WHEN s_en > 0 AND s_en = best THEN 'en'
+      |             WHEN s_es > 0 AND s_es = best THEN 'es'
+      |             WHEN s_de > 0 AND s_de = best THEN 'de'
+      |             WHEN s_fr > 0 AND s_fr = best THEN 'fr'
+      |             ELSE 'und' END AS lang_pred""".stripMargin
+
+  /** The curate stage (language id, quality score and threshold, exact
+    * dedup) as the pipeline oracles replay it over `src(doc_id, text)`,
+    * ending at `cur`; `withDom` carries a `dom` column through. */
+  private def curateCtesSql(src: String, withDom: Boolean,
+                            minQuality: String): String = {
+    val d = if (withDom) ", dom" else ""
+    val cfd = if (withDom) ", cf.dom" else ""
+    s"""cw AS (SELECT doc_id, text$d,
+       |         regexp_extract_all(lower(text), '[a-z0-9]+') w
+       |       FROM $src),
+       |cs AS (SELECT doc_id, text$d, w,
+       |$langScoresSql
+       |      FROM cw),
+       |cl AS (SELECT doc_id, text$d, w,
+       |$langPredSql
+       |      FROM (SELECT *, greatest(s_en, s_es, s_de, s_fr) best FROM cs)),
+       |cm AS (SELECT doc_id, text$d, lang_pred,
+       |        CAST(len(w) AS BIGINT) n_tokens,
+       |        CASE WHEN len(text) > 0
+       |             THEN CAST(len(regexp_replace(text, '[a-zA-Z0-9\\s]+', '', 'g')) AS DOUBLE)
+       |                    / CAST(len(text) AS DOUBLE)
+       |             ELSE 0.0 END punct_raw,
+       |        CASE WHEN len(w) > 0
+       |             THEN CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
+       |                    'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
+       |                    / CAST(len(w) AS DOUBLE)
+       |             ELSE 0.0 END stop_raw,
+       |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
+       |      FROM cl),
+       |cp AS (SELECT doc_id, text$d, lang_pred, n_tokens,
+       |        round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6)
+       |          AS quality_score
+       |      FROM cm),
+       |cf AS (SELECT * FROM cp
+       |       WHERE lang_pred IN ('en', 'es') AND quality_score >= $minQuality),
+       |ck AS (SELECT min(doc_id) AS keep_id
+       |       FROM (SELECT doc_id, CAST(('0x'||substr(md5(text),1,15)) AS BIGINT) h FROM cf)
+       |       GROUP BY h),
+       |cur AS (SELECT cf.doc_id, cf.text$cfd, cf.lang_pred,
+       |               cf.quality_score, cf.n_tokens
+       |        FROM cf JOIN ck ON cf.doc_id = ck.keep_id)""".stripMargin
+  }
+
+  /** The per-doc text-quality table (token counts, mean token length,
+    * punctuation and stopword ratios, heuristic score) over
+    * `src(doc_id, text)`: t_quality over the corpus, and
+    * pipe_incr_quality's from-scratch recompute over snapshot b. */
+  private def textQualitySql(src: String): String =
+    s"""w AS (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM $src),
+       |m AS (SELECT doc_id,
+       |        CAST(len(text) AS BIGINT) n_chars,
+       |        CAST(len(w) AS BIGINT) n_tokens,
+       |        CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) n_tokens_ws,
+       |        CAST(COALESCE(list_sum(list_transform(w, x -> CAST(ceil(len(x) / 4.0) AS BIGINT))), 0)
+       |          + len(regexp_replace(text, '[a-zA-Z0-9\\s]+', '', 'g')) AS BIGINT) n_tokens_bpe,
+       |        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS DOUBLE)
+       |          / CAST(len(w) AS DOUBLE) mean_raw,
+       |        CAST(len(regexp_replace(text, '[a-zA-Z0-9\\s]+', '', 'g')) AS DOUBLE)
+       |          / CAST(len(text) AS DOUBLE) punct_raw,
+       |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
+       |          'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
+       |          / CAST(len(w) AS DOUBLE) stop_raw,
+       |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
+       |      FROM w)
+       |SELECT doc_id, n_chars, n_tokens, n_tokens_ws, n_tokens_bpe,
+       |       round(mean_raw, 6) AS mean_token_len,
+       |       round(punct_raw, 6) AS punct_ratio,
+       |       round(stop_raw, 6) AS stopword_ratio,
+       |       round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6) AS quality_score
+       |FROM m ORDER BY doc_id""".stripMargin
+
+  /** Minhash-LSH candidate pairs over the 3-token shingles of
+    * `src(doc_id, text)`: token lists `tok`, shingle hashes `sh`, 16
+    * minhashes banded 4 × 4, the band-collision candidates `cand`, and
+    * the exact `sizes` and pairwise `inter` counts that the Jaccard
+    * verify needs. */
+  private def minhashPairsSql(tok: String, src: String): String =
+    s"""$tok AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM $src),
+       |sh AS (SELECT DISTINCT doc_id,
+       |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
+       |       FROM $tok, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
+       |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
+       |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
+       |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
+       |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
+       |                  array_to_string(list_sort(list(
+       |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
+       |           FROM sig GROUP BY 1, 2),
+       |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
+       |         FROM banded x JOIN banded y
+       |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
+       |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
+       |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
+       |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
+       |          GROUP BY 1, 2)""".stripMargin
+
+  /** [[minhashPairsSql]] plus `removed(doc_id)`: the later doc of every
+    * candidate pair whose shingle Jaccard is at least 0.8. */
+  private def nearDupRemovedSql(tok: String, src: String): String =
+    s"""${minhashPairsSql(tok, src)},
+       |removed AS (
+       |  SELECT DISTINCT c.b_id AS doc_id
+       |  FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
+       |  JOIN sizes sa ON c.a_id = sa.doc_id JOIN sizes sb ON c.b_id = sb.doc_id
+       |  WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8)""".stripMargin
 
   /** doc_id-keyed seeding for the Gopher rule filter — the piiSeeded
     * pattern: symbols/ellipses (%4), bullet lines (%6), ellipsis-ended
@@ -2328,31 +2485,19 @@ object SparkEntry {
     val masks = (0 until (1 << nPlanes))
       .filter(m => Integer.bitCount(m) <= probeHamming)
       .map(m => s"($m::BIGINT)").mkString(", ")
-    s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-       |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-       |           FROM embeddings),
-       |pl(w, p) AS (VALUES
-       |  $planeRows),
-       |b AS (SELECT vec_id,
-       |        CAST(SUM(CASE WHEN list_dot_product(qv, p) >= 0
-       |                      THEN w ELSE 0 END) AS BIGINT) AS bucket
-       |      FROM v, pl GROUP BY vec_id),
-       |cb AS (SELECT v.vec_id corpus_id, v.qv cv, b.bucket
-       |       FROM v JOIN b USING (vec_id)),
-       |qm(m) AS (VALUES $masks),
-       |qb AS (SELECT v.vec_id query_id, v.qv qv2, xor(b.bucket, qm.m) AS bucket
-       |       FROM v JOIN b USING (vec_id), qm WHERE v.vec_id < 10),
-       |s AS (SELECT qb.query_id, cb.corpus_id,
-       |        CAST(list_dot_product(qb.qv2, cb.cv) AS DOUBLE) /
-       |        (sqrt(CAST(list_dot_product(qb.qv2, qb.qv2) AS DOUBLE)) *
-       |         sqrt(CAST(list_dot_product(cb.cv, cb.cv) AS DOUBLE))) AS cosine
-       |      FROM cb JOIN qb USING (bucket) WHERE cb.corpus_id <> qb.query_id),
-       |r AS (SELECT query_id, corpus_id, cosine,
-       |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
-       |      FROM s)
-       |SELECT query_id, corpus_id, cosine, rnk
-       |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+    quantizedVecsSql +
+      s"""pl(w, p) AS (VALUES
+         |  $planeRows),
+         |b AS (SELECT vec_id,
+         |        CAST(SUM(CASE WHEN list_dot_product(qv, p) >= 0
+         |                      THEN w ELSE 0 END) AS BIGINT) AS bucket
+         |      FROM v, pl GROUP BY vec_id),
+         |cb AS (SELECT v.vec_id corpus_id, v.qv cv, b.bucket
+         |       FROM v JOIN b USING (vec_id)),
+         |qm(m) AS (VALUES $masks),
+         |qb AS (SELECT v.vec_id query_id, v.qv qv2, xor(b.bucket, qm.m) AS bucket
+         |       FROM v JOIN b USING (vec_id), qm WHERE v.vec_id < 10),
+         |""".stripMargin + probedTopKSql("bucket", k)
   }
 
   /** Generated oracle for the recall-bearing IVF path (e_ivf_topk).
@@ -2409,18 +2554,19 @@ object SparkEntry {
     * clusterBalancedOracleSql). */
   private def ivfFitCtesSql(nLists: Int, iters: Int, dim: Int,
                             sampleCap: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-              |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-              |           FROM embeddings),
-              |samp AS (SELECT ROW_NUMBER() OVER
-              |           (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS sid, qv
-              |         FROM v QUALIFY sid < $sampleCap),
-              |dims AS (SELECT unnest(generate_series(1, $dim)) AS i),
-              |""".stripMargin
-    sb ++= lloydCtesSql("", "samp", "dims", nLists, iters)
-    sb.toString
+    sampleSql(sampleCap) +
+      s"""dims AS (SELECT unnest(generate_series(1, $dim)) AS i),
+         |""".stripMargin + lloydCtesSql("", "samp", "dims", nLists, iters)
   }
+
+  /** The quantized vectors plus `samp(sid, qv)`, the deterministic
+    * md5-ordered fit sample of at most `sampleCap` rows. */
+  private def sampleSql(sampleCap: Int): String =
+    quantizedVecsSql +
+      s"""samp AS (SELECT ROW_NUMBER() OVER
+         |           (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS sid, qv
+         |         FROM v QUALIFY sid < $sampleCap),
+         |""".stripMargin
 
   /** WITH-prefix replaying ops/Spectral's exact-integer PCA over the
     * embeddings table: the shared floor(x·10⁴) quantizer, the full
@@ -2543,39 +2689,22 @@ object SparkEntry {
               |           ${distOrder("v.qv", "c")}) AS rn
               |       FROM v, c$iters c WHERE v.vec_id < 10),
               |qb AS (SELECT query_id, qv2, cell FROM qasg WHERE rn <= $nProbe),
-              |s AS (SELECT qb.query_id, cb.corpus_id,
-              |        CAST(list_dot_product(qb.qv2, cb.cv) AS DOUBLE) /
-              |        (sqrt(CAST(list_dot_product(qb.qv2, qb.qv2) AS DOUBLE)) *
-              |         sqrt(CAST(list_dot_product(cb.cv, cb.cv) AS DOUBLE))) AS cosine
-              |      FROM cb JOIN qb USING (cell) WHERE cb.corpus_id <> qb.query_id),
-              |r AS (SELECT query_id, corpus_id, cosine,
-              |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
-              |      FROM s)
-              |SELECT query_id, corpus_id, cosine, rnk
-              |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+              |""".stripMargin
+    sb ++= probedTopKSql("cell", k)
     sb.toString
   }
 
   /** Exact squared-L2 brute-force top-5 for the vec_id<10 probe set —
     * the L2-metric twin of annTop5Sql; the recall baseline of the PQ
     * path (ADC ranks by L2, not cosine). */
-  private val l2Top5Sql =
-    """WITH v AS (SELECT vec_id, list_transform(embedding,
-      |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-      |           FROM embeddings),
-      |q AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 10),
+  private val l2Top5Sql = quantizedVecsSql +
+    """q AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 10),
       |s AS (SELECT q.query_id, c.vec_id corpus_id,
       |        CAST(list_dot_product(q.qv, q.qv) AS BIGINT)
       |        - 2 * CAST(list_dot_product(q.qv, c.qv) AS BIGINT)
       |        + CAST(list_dot_product(c.qv, c.qv) AS BIGINT) AS dist
       |      FROM q JOIN v c ON c.vec_id <> q.query_id),
-      |r AS (SELECT query_id, corpus_id, dist,
-      |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-      |          ORDER BY dist, corpus_id) AS INT) rnk
-      |      FROM s)
-      |SELECT query_id, corpus_id, dist, rnk
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+      |""".stripMargin + topKTailSql("dist", "dist", "s", 5)
 
   /** Generated oracle for the PQ ADC path (e_pq_topk): `m` independent
     * replays of the integer-exact per-subspace Lloyd's fit (the shared
@@ -2588,45 +2717,51 @@ object SparkEntry {
                               dim: Int, sampleCap: Int): String = {
     val subDim = dim / m
     val sb = new StringBuilder
-    sb ++= s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-              |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-              |           FROM embeddings),
-              |samp AS (SELECT ROW_NUMBER() OVER
-              |           (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS sid, qv
-              |         FROM v QUALIFY sid < $sampleCap),
-              |dims AS (SELECT unnest(generate_series(1, $subDim)) AS i),
+    sb ++= sampleSql(sampleCap)
+    sb ++= s"""dims AS (SELECT unnest(generate_series(1, $subDim)) AS i),
               |""".stripMargin
     for (j <- 0 until m) {
-      val lo = j * subDim + 1
-      val hi = (j + 1) * subDim
-      sb ++= s"""s$j AS (SELECT sid, qv[$lo:$hi] AS qv FROM samp),
-                |""".stripMargin
-      sb ++= lloydCtesSql(s"p${j}_", s"s$j", "dims", kCode, iters)
-      sb ++= s"""cb$j AS (SELECT corpus_id, cv FROM (
-                |  SELECT v.vec_id AS corpus_id, c.cv,
-                |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                |      ${ivfDistOrder(s"v.qv[$lo:$hi]", "c")}) AS rn
-                |  FROM v, p${j}_c$iters c) WHERE rn = 1),
-                |pd$j AS (SELECT q.vec_id AS query_id, cb.corpus_id,
-                |    CAST(list_dot_product(q.qv[$lo:$hi], q.qv[$lo:$hi]) AS BIGINT)
-                |    - 2 * CAST(list_dot_product(q.qv[$lo:$hi], cb.cv) AS BIGINT)
-                |    + CAST(list_dot_product(cb.cv, cb.cv) AS BIGINT) AS d
-                |  FROM v q, cb$j cb
+      sb ++= pqSubspaceSql(j, subDim, "dims", kCode, iters,
+        "q.vec_id AS query_id, cb.corpus_id")
+      sb ++= s"""  FROM v q, cb$j cb
                 |  WHERE q.vec_id < 10 AND cb.corpus_id <> q.vec_id),
                 |""".stripMargin
     }
-    sb ++= s"""ds AS (${(0 until m).map(j => s"SELECT * FROM pd$j")
-               .mkString(" UNION ALL ")}),
-              |tot AS (SELECT query_id, corpus_id, CAST(SUM(d) AS BIGINT) AS adc_dist
-              |        FROM ds GROUP BY 1, 2),
-              |r AS (SELECT query_id, corpus_id, adc_dist,
-              |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              |          ORDER BY adc_dist, corpus_id) AS INT) rnk
-              |      FROM tot)
-              |SELECT query_id, corpus_id, adc_dist, rnk
-              |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+    sb ++= adcTopKSql(m, k)
     sb.toString
   }
+
+  /** Subspace `j` of a PQ oracle: the sliced sample `s$j`, its Lloyd's
+    * replay over `dims`, every corpus row's code `cb$j`, and the head
+    * of the partial ADC distance CTE `pd$j` (select list `pdCols`, then
+    * the caller's FROM). */
+  private def pqSubspaceSql(j: Int, subDim: Int, dims: String, kCode: Int,
+                            iters: Int, pdCols: String): String = {
+    val lo = j * subDim + 1
+    val hi = (j + 1) * subDim
+    s"""s$j AS (SELECT sid, qv[$lo:$hi] AS qv FROM samp),
+       |""".stripMargin +
+      lloydCtesSql(s"p${j}_", s"s$j", dims, kCode, iters) +
+      s"""cb$j AS (SELECT corpus_id, cv FROM (
+         |  SELECT v.vec_id AS corpus_id, c.cv,
+         |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+         |      ${ivfDistOrder(s"v.qv[$lo:$hi]", "c")}) AS rn
+         |  FROM v, p${j}_c$iters c) WHERE rn = 1),
+         |pd$j AS (SELECT $pdCols,
+         |    CAST(list_dot_product(q.qv[$lo:$hi], q.qv[$lo:$hi]) AS BIGINT)
+         |    - 2 * CAST(list_dot_product(q.qv[$lo:$hi], cb.cv) AS BIGINT)
+         |    + CAST(list_dot_product(cb.cv, cb.cv) AS BIGINT) AS d
+         |""".stripMargin
+  }
+
+  /** The ADC tail of a PQ oracle: sum the m partial distances per pair,
+    * then the per-query top-k by ascending distance. */
+  private def adcTopKSql(m: Int, k: Int): String =
+    s"""ds AS (${(0 until m).map(j => s"SELECT * FROM pd$j")
+         .mkString(" UNION ALL ")}),
+       |tot AS (SELECT query_id, corpus_id, CAST(SUM(d) AS BIGINT) AS adc_dist
+       |        FROM ds GROUP BY 1, 2),
+       |""".stripMargin + topKTailSql("adc_dist", "adc_dist", "tot", k)
 
   /** Generated oracle for the composed IVF+PQ path (e_ivfpq_topk):
     * the coarse-quantizer Lloyd's replay over the FULL dim routes
@@ -2640,13 +2775,8 @@ object SparkEntry {
                                  dim: Int, sampleCap: Int): String = {
     val subDim = dim / m
     val sb = new StringBuilder
-    sb ++= s"""WITH v AS (SELECT vec_id, list_transform(embedding,
-              |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-              |           FROM embeddings),
-              |samp AS (SELECT ROW_NUMBER() OVER
-              |           (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS sid, qv
-              |         FROM v QUALIFY sid < $sampleCap),
-              |dimsf AS (SELECT unnest(generate_series(1, $dim)) AS i),
+    sb ++= sampleSql(sampleCap)
+    sb ++= s"""dimsf AS (SELECT unnest(generate_series(1, $dim)) AS i),
               |dimss AS (SELECT unnest(generate_series(1, $subDim)) AS i),
               |""".stripMargin
     sb ++= lloydCtesSql("f_", "samp", "dimsf", nLists, iters)
@@ -2665,35 +2795,14 @@ object SparkEntry {
               |          WHERE c.corpus_id <> q.query_id),
               |""".stripMargin
     for (j <- 0 until m) {
-      val lo = j * subDim + 1
-      val hi = (j + 1) * subDim
-      sb ++= s"""s$j AS (SELECT sid, qv[$lo:$hi] AS qv FROM samp),
-                |""".stripMargin
-      sb ++= lloydCtesSql(s"p${j}_", s"s$j", "dimss", kCode, iters)
-      sb ++= s"""cb$j AS (SELECT corpus_id, cv FROM (
-                |  SELECT v.vec_id AS corpus_id, c.cv,
-                |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                |      ${ivfDistOrder(s"v.qv[$lo:$hi]", "c")}) AS rn
-                |  FROM v, p${j}_c$iters c) WHERE rn = 1),
-                |pd$j AS (SELECT p.query_id, p.corpus_id,
-                |    CAST(list_dot_product(q.qv[$lo:$hi], q.qv[$lo:$hi]) AS BIGINT)
-                |    - 2 * CAST(list_dot_product(q.qv[$lo:$hi], cb.cv) AS BIGINT)
-                |    + CAST(list_dot_product(cb.cv, cb.cv) AS BIGINT) AS d
-                |  FROM pairs p
+      sb ++= pqSubspaceSql(j, subDim, "dimss", kCode, iters,
+        "p.query_id, p.corpus_id")
+      sb ++= s"""  FROM pairs p
                 |  JOIN v q ON q.vec_id = p.query_id
                 |  JOIN cb$j cb ON cb.corpus_id = p.corpus_id),
                 |""".stripMargin
     }
-    sb ++= s"""ds AS (${(0 until m).map(j => s"SELECT * FROM pd$j")
-               .mkString(" UNION ALL ")}),
-              |tot AS (SELECT query_id, corpus_id, CAST(SUM(d) AS BIGINT) AS adc_dist
-              |        FROM ds GROUP BY 1, 2),
-              |r AS (SELECT query_id, corpus_id, adc_dist,
-              |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              |          ORDER BY adc_dist, corpus_id) AS INT) rnk
-              |      FROM tot)
-              |SELECT query_id, corpus_id, adc_dist, rnk
-              |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
+    sb ++= adcTopKSql(m, k)
     sb.toString
   }
 
@@ -2844,13 +2953,35 @@ object SparkEntry {
        |  SELECT $keyCol, CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
        |         SUM(CAST(round(value*100) AS BIGINT)) AS u
        |  FROM events GROUP BY 1, 2),
-       |bounds AS (SELECT $keyCol, MIN(bucket_ts) lo, MAX(bucket_ts) hi
+       |${decompTrendSql(keyCol)},
+       |idx AS (SELECT $keyCol, pos,
+       |          CAST(round(CAST(SUM(du6) AS DOUBLE)/COUNT(*)) AS BIGINT) AS s_u6
+       |        FROM t3 WHERE du6 IS NOT NULL GROUP BY 1, 2)""".stripMargin
+
+  /** The hourly series CTE `b(key, bucket_ts, u)` of the ts_* oracles:
+    * per-key sums of `src`'s values in integer cents. */
+  private def hourlyUnitsSql(key: String, src: String): String =
+    s"""b AS (SELECT $key,
+       |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
+       |        SUM(CAST(round(value*100) AS BIGINT)) AS u
+       |      FROM $src GROUP BY 1, 2)""".stripMargin
+
+  /** [[hourlyUnitsSql]] zero-filled between each key's first and last
+    * bucket, as CTE `name(key, bucket_ts, u)`. */
+  private def denseHourlySql(key: String, name: String): String =
+    s"""bounds AS (SELECT $key, MIN(bucket_ts) lo, MAX(bucket_ts) hi
        |           FROM b GROUP BY 1),
-       |spine AS (SELECT $keyCol,
+       |spine AS (SELECT $key,
        |            unnest(generate_series(lo, hi, 3600)) AS bucket_ts
        |          FROM bounds),
-       |d AS (SELECT s.$keyCol, s.bucket_ts, COALESCE(b.u, 0) AS u
-       |      FROM spine s LEFT JOIN b USING ($keyCol, bucket_ts)),
+       |$name AS (SELECT s.$key, s.bucket_ts, COALESCE(b.u, 0) AS u
+       |      FROM spine s LEFT JOIN b USING ($key, bucket_ts))""".stripMargin
+
+  /** The centred 25-bucket trend and the detrended micro-units `du6`
+    * with their hour-of-day `pos`, through CTE `t3` — the trend half
+    * of [[decompCtes]], over a `b` CTE the caller supplies. */
+  private def decompTrendSql(keyCol: String): String =
+    s"""${denseHourlySql(keyCol, "d")},
        |t AS (SELECT *, SUM(u) OVER w AS tw, COUNT(*) OVER w AS tn FROM d
        |      WINDOW w AS (PARTITION BY $keyCol ORDER BY bucket_ts
        |                   ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
@@ -2859,10 +2990,183 @@ object SparkEntry {
        |       FROM t),
        |t3 AS (SELECT *, CASE WHEN trend IS NOT NULL
        |         THEN u*10000 - CAST(round(trend*1e6) AS BIGINT) END AS du6,
-       |         (bucket_ts // 3600) % 24 AS pos FROM t2),
-       |idx AS (SELECT $keyCol, pos,
-       |          CAST(round(CAST(SUM(du6) AS DOUBLE)/COUNT(*)) AS BIGINT) AS s_u6
-       |        FROM t3 WHERE du6 IS NOT NULL GROUP BY 1, 2)""".stripMargin
+       |         (bucket_ts // 3600) % 24 AS pos FROM t2)""".stripMargin
+
+  /** Lag-1..48 moment sums `p(key, lag, n, sx, sy, sxy, sxx, syy)` of
+    * each key's dense hourly series against itself. */
+  private def lagMomentsSql(key: String): String =
+    s"""WITH ${hourlyUnitsSql(key, "events")},
+       |${denseHourlySql(key, "g")},
+       |l AS (SELECT unnest(generate_series(1, 48)) AS lag),
+       |p AS (SELECT y.$key, l.lag,
+       |        COUNT(*) AS n, SUM(x.u) AS sx, SUM(y.u) AS sy,
+       |        SUM(CAST(x.u AS DECIMAL(19,0)) * y.u) AS sxy,
+       |        SUM(CAST(x.u AS DECIMAL(19,0)) * x.u) AS sxx,
+       |        SUM(CAST(y.u AS DECIMAL(19,0)) * y.u) AS syy
+       |      FROM g y CROSS JOIN l
+       |        JOIN g x ON x.$key = y.$key
+       |          AND x.bucket_ts = y.bucket_ts - l.lag*3600
+       |      GROUP BY 1, 2)""".stripMargin
+
+  /** The Pearson correlation of the moment sums in scope (n, sx, sy,
+    * sxy, sxx, syy), rounded to 6 dp and NULL when either variance is
+    * zero; the caller closes it with `END AS <name>`. */
+  private lazy val pearsonSql: String =
+    """       CASE WHEN n*CAST(sxx AS DOUBLE)
+      |               - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) > 0
+      |             AND n*CAST(syy AS DOUBLE)
+      |               - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) > 0
+      |            THEN round(
+      |              (n*CAST(sxy AS DOUBLE)
+      |                - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
+      |              / (sqrt(n*CAST(sxx AS DOUBLE)
+      |                   - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
+      |                 * sqrt(n*CAST(syy AS DOUBLE)
+      |                   - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6)""".stripMargin
+
+  /** The hourly cents of the cusum oracles: every user's values from
+    * 2024-01-22 on shifted up by 25, as CTEs `e2` and `b`. */
+  private lazy val shiftedUnitsSql: String =
+    s"""WITH e2 AS (SELECT user_id, ts,
+       |        value + CASE WHEN floor(epoch(ts)) >= 1705881600
+       |                     THEN 25.0 ELSE 0.0 END AS value
+       |      FROM events),
+       |${hourlyUnitsSql("user_id", "e2")}""".stripMargin
+
+  /** Two-sided CUSUM over the z-scored hourly `src(user_id, bucket_ts,
+    * u)` rows (slack 0.5 σ), alarming where either side exceeds
+    * `threshold` micro-σ. */
+  private def cusumSql(src: String, threshold: Long): String =
+    s"""st AS (SELECT user_id, COUNT(*) AS n, SUM(u) AS su,
+       |         SUM(CAST(u AS DECIMAL(19,0)) * u) AS su2
+       |       FROM $src GROUP BY 1),
+       |m AS (SELECT $src.user_id, $src.bucket_ts, $src.u,
+       |        CAST(st.su AS DOUBLE)/(st.n*100.0) AS mean,
+       |        CAST(st.su2 AS DOUBLE)/(st.n*10000.0) AS ex2
+       |      FROM $src JOIN st USING (user_id)),
+       |z AS (SELECT user_id, bucket_ts,
+       |        CAST(round((CAST(u AS DOUBLE)/100.0 - mean)
+       |          /sqrt(ex2 - mean*mean)*1e6) AS BIGINT) AS z_u6
+       |      FROM m WHERE ex2 - mean*mean > 0),
+       |c AS (SELECT *, SUM(z_u6 - 500000) OVER cum AS cp,
+       |        SUM(-z_u6 - 500000) OVER cum AS cn
+       |      FROM z WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
+       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+       |s AS (SELECT *, cp - LEAST(0, MIN(cp) OVER cum) AS sp,
+       |        cn - LEAST(0, MIN(cn) OVER cum) AS sn
+       |      FROM c WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
+       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+       |SELECT user_id, bucket_ts,
+       |       CAST(z_u6 AS DOUBLE)/1e6 AS z,
+       |       CAST(sp AS DOUBLE)/1e6 AS cusum_up,
+       |       CAST(sn AS DOUBLE)/1e6 AS cusum_down,
+       |       CASE WHEN sp > $threshold AND sn > $threshold THEN 'both'
+       |            WHEN sp > $threshold THEN 'up' ELSE 'down' END AS direction
+       |FROM s WHERE sp > $threshold OR sn > $threshold
+       |ORDER BY user_id, bucket_ts""".stripMargin
+
+  /** Each doc's synthetic host (`u`, selecting doc_id, lang and
+    * `cols`) and its registrable domain (`d`): the last two host labels,
+    * or three under a known second-level label. Its lines open with
+    * `||`, so callers append with `+` rather than interpolating into a
+    * second `stripMargin`. */
+  private def domainsSql(cols: String): String =
+    s"""WITH u AS (SELECT doc_id, lang$cols,
+       |    'w' || CAST(doc_id % 3 AS VARCHAR) || '.src'
+       |        || CAST(doc_id % 40 AS VARCHAR) || '.'
+       |        || (CASE doc_id % 5 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
+       |            WHEN 2 THEN 'net' WHEN 3 THEN 'co.uk'
+       |            ELSE 'ac.jp' END) AS host
+       |  FROM documents),
+       |d AS (SELECT *,
+       |    CASE WHEN len(string_split(host, '.')) >= 3
+       |              AND string_split(host, '.')[-2] IN
+       |                ('co','com','net','org','ac','gov','edu')
+       |         THEN array_to_string(string_split(host, '.')[-3:], '.')
+       |         WHEN len(string_split(host, '.')) >= 2
+       |         THEN array_to_string(string_split(host, '.')[-2:], '.')
+       |         ELSE host END AS domain""".stripMargin
+
+  /** The interval sides of the x_interval_* oracles: every event as
+    * [ts, ts + value·60 s] in `e`, the view/click probes `a` and the
+    * error builds `b`. */
+  private lazy val intervalSidesSql: String =
+    """WITH e AS (SELECT user_id, event_id, event_type,
+      |        CAST(floor(epoch(ts)) AS BIGINT) AS ivs,
+      |        CAST(floor(epoch(ts)) AS BIGINT)
+      |          + CAST(floor(value*60) AS BIGINT) AS ive
+      |      FROM events),
+      |a AS (SELECT * FROM e WHERE event_type IN ('view', 'click')),
+      |b AS (SELECT * FROM e WHERE event_type = 'error')""".stripMargin
+
+  /** The fuzzy-join name table `dom(id, s)`: every doc's md5 plus, for
+    * every third doc, a transposed-character variant. */
+  private lazy val fuzzyNamesSql: String =
+    """dom AS (
+      |  SELECT CAST(doc_id AS BIGINT) AS id,
+      |         md5(CAST(doc_id AS VARCHAR)) AS s FROM documents
+      |  UNION ALL
+      |  SELECT CAST(doc_id + 10000000 AS BIGINT),
+      |         substr(md5(CAST(doc_id AS VARCHAR)),1,1) ||
+      |         substr(md5(CAST(doc_id AS VARCHAR)),3,1) ||
+      |         substr(md5(CAST(doc_id AS VARCHAR)),2,1) ||
+      |         substr(md5(CAST(doc_id AS VARCHAR)),4)
+      |  FROM documents WHERE doc_id % 3 = 0)""".stripMargin
+
+  /** The hourly-checkpoint as-of join oracle: each event joined to its
+    * user's latest (`>=`) or next (`<=`) hourly checkpoint total. */
+  private def asofOracleSql(cmp: String): String =
+    s"""WITH cp AS (
+       |  SELECT user_id, date_trunc('hour', ts) cts,
+       |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) checkpoint_total
+       |  FROM events GROUP BY 1, 2)
+       |SELECT e.event_id, e.user_id,
+       |       CAST(floor(epoch(e.ts)) AS BIGINT) ts_epoch, e.value,
+       |       cp.checkpoint_total AS asof_checkpoint_total
+       |FROM events e ASOF LEFT JOIN cp
+       |  ON e.user_id = cp.user_id AND e.ts $cmp cp.cts
+       |ORDER BY event_id""".stripMargin
+
+  /** The Gopher rule counts over `doc_id`, token list `w`, `lines`,
+    * whitespace words `ws` and symbol count `nsym`: the select list of
+    * the per-doc counts CTE after its `nw`. */
+  private lazy val gopherCountsSql: String =
+    """        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS BIGINT) chars,
+      |        nsym,
+      |        CAST(len(lines) AS BIGINT) nlines,
+      |        CAST(len(list_filter(lines, l -> starts_with(ltrim(l), '- ')
+      |          OR starts_with(ltrim(l), '* '))) AS BIGINT) nbullet,
+      |        CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS BIGINT) nell,
+      |        CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) nalpha,
+      |        CAST(len(ws) AS BIGINT) nws,
+      |        CAST(len(list_intersect(list_distinct(w),
+      |          ['the','be','to','of','and','that','have','with'])) AS BIGINT) stop_hits""".stripMargin
+
+  /** Per-doc bigram counts `perdoc(doc_id, n_bigrams, sum_cnt)` against
+    * the corpus-wide bigram counts `cnt` and their total `tot`. */
+  private lazy val bigramCountsSql: String =
+    """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
+      |g AS (SELECT doc_id, array_to_string(w[i:i+1], ' ') AS bg
+      |      FROM t, UNNEST(generate_series(1, greatest(len(w)-1, 0))) AS gs(i)),
+      |tf AS (SELECT doc_id, bg, COUNT(*) tf FROM g GROUP BY 1, 2),
+      |cnt AS (SELECT bg, CAST(SUM(tf) AS BIGINT) cnt FROM tf GROUP BY 1),
+      |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) total_bigrams FROM cnt),
+      |perdoc AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) n_bigrams,
+      |             CAST(SUM(tf * cnt) AS BIGINT) sum_cnt
+      |           FROM tf JOIN cnt USING (bg) GROUP BY 1)""".stripMargin
+
+  /** The embeddings plus a +0.005-shifted near-duplicate copy of each
+    * (vec_id + 100000), quantized as `v(vec_id, qv)`. */
+  private lazy val perturbedVecsSql: String =
+    """WITH u AS (SELECT vec_id,
+      |             list_transform(embedding, x -> CAST(x AS DOUBLE)) emb
+      |           FROM embeddings
+      |           UNION ALL
+      |           SELECT vec_id + 100000,
+      |             list_transform(embedding, x -> CAST(x AS DOUBLE) + 0.005)
+      |           FROM embeddings),
+      |v AS (SELECT vec_id, list_transform(emb,
+      |        x -> CAST(floor(x * 10000) AS BIGINT)) qv FROM u)""".stripMargin
 
   /** The gap-session oracle (lag/flag/cumsum replay of Spark's
     * session_window max(ts)+gap convention) — shared by
@@ -2898,58 +3202,325 @@ object SparkEntry {
     * t_prf_expand (in-memory recompute) and t_prf_indexed (the at-rest
     * index probe), which are row-identical by construction. */
   private lazy val prfExpandOracleSql: String =
-    """WITH toks AS (SELECT doc_id,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-      |       FROM documents),
-      |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-      |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-      |tf1 AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-      |        FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-      |        WHERE term IN ('table', 'hash') GROUP BY 1, 2, 3),
-      |dfq1 AS (SELECT term, COUNT(*) AS df_t FROM tf1 GROUP BY 1),
-      |s1 AS (SELECT doc_id,
-      |    CAST(round(
-      |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-      |        / (CAST(df_t AS DOUBLE) + 0.5)
-      |      * (CAST(tf AS DOUBLE) * 2.2)
-      |      / (CAST(tf AS DOUBLE)
-      |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-      |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-      |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-      |  FROM tf1 JOIN dfq1 USING (term) CROSS JOIN stats),
-      |fb AS (SELECT doc_id FROM (SELECT doc_id, SUM(ts_ppm) AS sc
-      |         FROM s1 GROUP BY 1)
-      |       ORDER BY sc DESC, doc_id LIMIT 3),
-      |fbtf AS (SELECT term, COUNT(*) AS fb_tf
-      |         FROM (SELECT unnest(ts) AS term FROM b2 JOIN fb USING (doc_id))
-      |         WHERE term NOT IN ('table', 'hash') GROUP BY 1),
-      |cdf AS (SELECT term, COUNT(*) AS df_t
-      |        FROM (SELECT doc_id, unnest(list_distinct(ts)) AS term FROM b2)
-      |        WHERE term IN (SELECT term FROM fbtf) GROUP BY 1),
-      |exp1 AS (SELECT fbtf.term FROM fbtf JOIN cdf USING (term)
-      |         CROSS JOIN stats
-      |         WHERE df_t * 100 <= n_docs * 50
-      |         ORDER BY fb_tf DESC, term LIMIT 4),
-      |t2 AS (SELECT term FROM exp1
-      |       UNION SELECT unnest(['table', 'hash'])),
-      |tf2 AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-      |        FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-      |        WHERE term IN (SELECT term FROM t2) GROUP BY 1, 2, 3),
-      |dfq2 AS (SELECT term, COUNT(*) AS df_t FROM tf2 GROUP BY 1),
-      |s2 AS (SELECT doc_id,
-      |    CAST(round(
-      |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-      |        / (CAST(df_t AS DOUBLE) + 0.5)
-      |      * (CAST(tf AS DOUBLE) * 2.2)
-      |      / (CAST(tf AS DOUBLE)
-      |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-      |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-      |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-      |  FROM tf2 JOIN dfq2 USING (term) CROSS JOIN stats)
-      |SELECT doc_id, CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm,
-      |       CAST(COUNT(*) AS BIGINT) AS n_terms
-      |FROM s2 GROUP BY 1
-      |ORDER BY score_ppm DESC, doc_id LIMIT 10""".stripMargin
+    s"""WITH ${tokenListsSql("toks")},
+       |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
+       |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
+       |tf1 AS (SELECT doc_id, dl, term, COUNT(*) AS tf
+       |        FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
+       |        WHERE term IN ('table', 'hash') GROUP BY 1, 2, 3),
+       |dfq1 AS (SELECT term, COUNT(*) AS df_t FROM tf1 GROUP BY 1),
+       |${bm25ScoredSql("s1", "doc_id", "tf1", "dfq1")},
+       |fb AS (SELECT doc_id FROM (SELECT doc_id, SUM(ts_ppm) AS sc
+       |         FROM s1 GROUP BY 1)
+       |       ORDER BY sc DESC, doc_id LIMIT 3),
+       |fbtf AS (SELECT term, COUNT(*) AS fb_tf
+       |         FROM (SELECT unnest(ts) AS term FROM b2 JOIN fb USING (doc_id))
+       |         WHERE term NOT IN ('table', 'hash') GROUP BY 1),
+       |cdf AS (SELECT term, COUNT(*) AS df_t
+       |        FROM (SELECT doc_id, unnest(list_distinct(ts)) AS term FROM b2)
+       |        WHERE term IN (SELECT term FROM fbtf) GROUP BY 1),
+       |exp1 AS (SELECT fbtf.term FROM fbtf JOIN cdf USING (term)
+       |         CROSS JOIN stats
+       |         WHERE df_t * 100 <= n_docs * 50
+       |         ORDER BY fb_tf DESC, term LIMIT 4),
+       |t2 AS (SELECT term FROM exp1
+       |       UNION SELECT unnest(['table', 'hash'])),
+       |tf2 AS (SELECT doc_id, dl, term, COUNT(*) AS tf
+       |        FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
+       |        WHERE term IN (SELECT term FROM t2) GROUP BY 1, 2, 3),
+       |dfq2 AS (SELECT term, COUNT(*) AS df_t FROM tf2 GROUP BY 1),
+       |${bm25ScoredSql("s2", "doc_id", "tf2", "dfq2")}
+       |SELECT doc_id, CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm,
+       |       CAST(COUNT(*) AS BIGINT) AS n_terms
+       |FROM s2 GROUP BY 1
+       |ORDER BY score_ppm DESC, doc_id LIMIT 10""".stripMargin
+
+  /** The hour-of-week pattern oracle — shared by a4_predict_pattern and
+    * mv_pattern, whose streaming MV serves the batch op's answer. */
+  private lazy val predictPatternOracleSql: String =
+    """WITH daily AS (
+      |  SELECT user_id, CAST(dayofweek(ts) AS BIGINT) AS dow,
+      |         CAST(hour(ts) AS BIGINT) AS hr, CAST(ts AS DATE) AS d,
+      |         SUM(CAST(value AS DECIMAL(28,2))) AS hourly_total
+      |  FROM events GROUP BY 1, 2, 3, 4)
+      |SELECT user_id, dow, hr,
+      |       CAST(SUM(hourly_total) AS DOUBLE) / COUNT(*) AS predicted_volume
+      |FROM daily GROUP BY 1, 2, 3 ORDER BY user_id, dow, hr""".stripMargin
+
+  /** The hourly-volume threshold oracle — shared by a6_thresholds and
+    * mv_thresholds, whose streaming MV serves the batch op's answer. */
+  private lazy val thresholdsOracleSql: String =
+    """WITH hourly AS (
+      |  SELECT user_id, date_trunc('hour', ts) AS h,
+      |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS hourly_volume
+      |  FROM events GROUP BY 1, 2)
+      |SELECT user_id,
+      |       round(quantile_cont(hourly_volume, 0.5), 6) AS p50,
+      |       round(quantile_cont(hourly_volume, 0.75), 6) AS p75,
+      |       round(quantile_cont(hourly_volume, 0.9), 6) AS p90,
+      |       max(hourly_volume) AS max_volume
+      |FROM hourly GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** The histogram-interpolated quantile oracle — shared by
+    * prof_quantiles and mv_quantiles, whose streaming MV serves the
+    * batch op's answer. */
+  private lazy val quantilesOracleSql: String =
+    """WITH h AS (SELECT CAST(round(value*100) AS BIGINT) unit,
+      |             COUNT(*) n
+      |           FROM events WHERE value IS NOT NULL GROUP BY 1),
+      |c AS (SELECT unit, n,
+      |        SUM(n) OVER (ORDER BY unit
+      |          ROWS UNBOUNDED PRECEDING) hi_cum
+      |      FROM h),
+      |c2 AS (SELECT *, hi_cum - n AS lo_cum FROM c),
+      |t AS (SELECT COALESCE(SUM(n), 0) AS N FROM h),
+      |pr AS (SELECT unnest(CAST([0.5, 0.75, 0.9, 0.99]
+      |         AS DOUBLE[])) AS p),
+      |pp AS (SELECT p, (N-1)*p AS pos,
+      |         CAST(floor((N-1)*p) AS BIGINT) AS lo,
+      |         CAST(ceil((N-1)*p) AS BIGINT) AS hi, N
+      |       FROM pr, t),
+      |vlo AS (SELECT pp.p, c2.unit ulo FROM pp JOIN c2
+      |        ON pp.lo >= c2.lo_cum AND pp.lo < c2.hi_cum),
+      |vhi AS (SELECT pp.p, c2.unit uhi FROM pp JOIN c2
+      |        ON pp.hi >= c2.lo_cum AND pp.hi < c2.hi_cum)
+      |SELECT pp.p,
+      |       CASE WHEN pp.N = 0 THEN NULL
+      |            WHEN pp.hi = pp.lo THEN CAST(ulo AS DOUBLE)/100.0
+      |            ELSE (CAST(ulo AS DOUBLE)/100.0) * (pp.hi - pp.pos)
+      |               + (CAST(uhi AS DOUBLE)/100.0) * (pp.pos - pp.lo)
+      |       END AS q
+      |FROM pp LEFT JOIN vlo ON vlo.p = pp.p
+      |  LEFT JOIN vhi ON vhi.p = pp.p
+      |ORDER BY pp.p""".stripMargin
+
+  /** The weekly retention-cohort oracle — shared by a_retention_cohorts
+    * and mv_retention, whose streaming MV serves the batch op's answer. */
+  private lazy val retentionOracleSql: String =
+    """WITH act AS (SELECT DISTINCT user_id,
+      |         CAST(floor(epoch(ts) / 604800) AS BIGINT) AS period
+      |       FROM events),
+      |co AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1)
+      |SELECT cohort, period - cohort AS "offset",
+      |       CAST(COUNT(*) AS BIGINT) AS n_users
+      |FROM act JOIN co USING (user_id)
+      |GROUP BY 1, 2 ORDER BY cohort, "offset" """.stripMargin
+
+  /** The CDC-apply oracle (latest op per doc over the change log) —
+    * shared by t_cdc_apply and mv_cdc_snapshot, whose streaming MV
+    * serves the batch op's answer. */
+  private lazy val cdcApplyOracleSql: String =
+    """WITH log AS (
+      |  SELECT doc_id, 1 AS seq, 'upsert' AS op,
+      |         'rev1: ' || text AS text, lang, source, n_chars
+      |  FROM documents WHERE doc_id % 5 = 0
+      |  UNION ALL
+      |  SELECT doc_id, 2, 'delete', NULL, NULL, NULL, NULL
+      |  FROM documents WHERE doc_id % 10 = 0
+      |  UNION ALL
+      |  SELECT doc_id, 2, 'upsert', 'rev2: ' || text, lang, source,
+      |         n_chars
+      |  FROM documents WHERE doc_id % 10 = 5
+      |  UNION ALL
+      |  SELECT doc_id, 3, 'delete', NULL, NULL, NULL, NULL
+      |  FROM documents WHERE doc_id % 7 = 3
+      |  UNION ALL
+      |  SELECT doc_id + 1000000000, 1, 'upsert',
+      |         'cdc insert ' || CAST(doc_id AS VARCHAR), 'und', 'cdc',
+      |         CAST(length('cdc insert ' || CAST(doc_id AS VARCHAR))
+      |           AS BIGINT)
+      |  FROM documents WHERE doc_id % 11 = 0),
+      |latest AS (SELECT * FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY doc_id
+      |      ORDER BY seq DESC) AS rn FROM log) WHERE rn = 1)
+      |SELECT doc_id, md5(text) AS h, lang, source, n_chars
+      |FROM (
+      |  SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
+      |  FROM documents d ANTI JOIN latest l ON d.doc_id = l.doc_id
+      |  UNION ALL
+      |  SELECT doc_id, text, lang, source, n_chars
+      |  FROM latest WHERE op = 'upsert')
+      |ORDER BY doc_id""".stripMargin
+
+  /** The brute-force interval-overlap oracle — shared by x_interval_join
+    * and x_interval_join_auto, whose auto-level blocking must be
+    * answer-invisible. */
+  private lazy val intervalJoinOracleSql: String =
+    s"""$intervalSidesSql
+       |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
+       |       a.ivs AS a_s, a.ive AS a_e, b.ivs AS b_s, b.ive AS b_e,
+       |       greatest(a.ivs, b.ivs) AS ov_s,
+       |       least(a.ive, b.ive) AS ov_e,
+       |       least(a.ive, b.ive) - greatest(a.ivs, b.ivs) AS ov_len
+       |FROM a JOIN b ON a.user_id = b.user_id
+       |  AND a.ivs <= b.ive AND b.ivs <= a.ive
+       |ORDER BY a.user_id, a_id, b_id""".stripMargin
+
+  /** The exact shingle-contamination oracle — shared by dd_contamination
+    * and dd_contamination_bloom, which is row-identical to it. */
+  private lazy val contaminationOracleSql: String =
+    """WITH tr AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
+      |            FROM documents WHERE source <> 'src0'),
+      |ev AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
+      |       FROM documents WHERE source = 'src0'),
+      |tsh AS (SELECT DISTINCT
+      |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
+      |        FROM tr, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
+      |esh AS (SELECT DISTINCT doc_id,
+      |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
+      |        FROM ev, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
+      |sizes AS (SELECT doc_id, COUNT(*) n_shingles FROM esh GROUP BY 1),
+      |hits AS (SELECT doc_id, COUNT(*) n_contaminated
+      |         FROM esh WHERE sh_h IN (SELECT sh_h FROM tsh) GROUP BY 1)
+      |SELECT s.doc_id AS doc_id, s.n_shingles,
+      |       COALESCE(h.n_contaminated, 0) AS n_contaminated,
+      |       CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) /
+      |         CAST(s.n_shingles AS DOUBLE) AS contamination_ratio
+      |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
+      |ORDER BY doc_id""".stripMargin
+
+  /** Token lists `name(doc_id, ts)` of the documents corpus, the input
+    * of every BM25 oracle. */
+  private def tokenListsSql(name: String): String =
+    s"""$name AS (SELECT doc_id,
+       |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
+       |       FROM documents)""".stripMargin
+
+  /** Okapi BM25 (k1 = 1.2, b = 0.75) in integer ppm per (doc, term),
+    * the DuckDB replay of [[Retrieval]]'s scorer: CTE `name` selecting
+    * `cols` and `ts_ppm` from the `tf(doc_id, dl, term, tf)` rows, their
+    * `dfq(term, df_t)` document frequencies and the corpus `stats`. */
+  private def bm25ScoredSql(name: String, cols: String, tf: String,
+                            dfq: String): String =
+    s"""$name AS (SELECT $cols,
+       |    CAST(round(
+       |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
+       |        / (CAST(df_t AS DOUBLE) + 0.5)
+       |      * (CAST(tf AS DOUBLE) * 2.2)
+       |      / (CAST(tf AS DOUBLE)
+       |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
+       |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
+       |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
+       |  FROM $tf JOIN $dfq USING (term) CROSS JOIN stats)""".stripMargin
+
+  /** The BM25 chain over token lists `src(doc_id, ts)`: doc lengths
+    * `b2`, corpus `stats`, the frequencies `tf` of the terms matched by
+    * `terms`, their `dfq`, and the per-term scores `scored`. */
+  private def bm25ChainSql(src: String, terms: String,
+                           cols: String): String =
+    s"""b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM $src),
+       |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
+       |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
+       |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
+       |       WHERE term IN $terms
+       |       GROUP BY 1, 2, 3),
+       |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
+       |${bm25ScoredSql("scored", cols, "tf", "dfq")}""".stripMargin
+
+  /** The BM25 first-stage run shared by the retrieval oracles: each of
+    * docs 0..4 queries with its first six distinct tokens, and
+    * `perq(query_id, doc_id, score_ppm)` holds the summed scores. */
+  private lazy val bm25RunSql: String =
+    s"""WITH ${tokenListsSql("toks")},
+       |q AS (SELECT doc_id AS query_id,
+       |        unnest(list_distinct(ts[1:6])) AS term
+       |      FROM toks WHERE doc_id < 5),
+       |${bm25ChainSql("toks", "(SELECT term FROM q)", "doc_id, tf.term")},
+       |perq AS (SELECT q.query_id, doc_id,
+       |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
+       |         FROM scored JOIN q ON scored.term = q.term
+       |         GROUP BY 1, 2)""".stripMargin
+
+  /** [[bm25RunSql]] cut to its top-20 `run(query_id, doc_id, rnk)` and
+    * judged by `qrels`: a doc is relevant to a query doc when it shares
+    * the query doc's lang and source. */
+  private lazy val judgedRunSql: String =
+    s"""$bm25RunSql,
+       |run AS (SELECT query_id, doc_id, rnk FROM (
+       |          SELECT query_id, doc_id,
+       |            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |              ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
+       |          FROM perq) WHERE rnk <= 20),
+       |qrels AS (SELECT qd.doc_id AS query_id, d.doc_id
+       |          FROM documents qd JOIN documents d
+       |            ON d.lang = qd.lang AND d.source = qd.source
+       |               AND d.doc_id <> qd.doc_id
+       |          WHERE qd.doc_id < 5)""".stripMargin
+
+  /** The hybrid arms after [[bm25RunSql]]: the sparse top-20 and the
+    * dense (quantized cosine) top-20 of queries 0..4, fused by
+    * reciprocal rank (k = 60) into `franked`; `fusedCols` appends
+    * columns to the fused rows. */
+  private def rrfFusedSql(fusedCols: String): String =
+    s"""sranked AS (SELECT query_id, doc_id,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
+       |  FROM perq),
+       |sparse AS (SELECT query_id, doc_id, rnk FROM sranked WHERE rnk <= 20),
+       |v AS (SELECT vec_id, list_transform(embedding,
+       |        x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
+       |      FROM embeddings),
+       |qv AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 5),
+       |ds AS (SELECT qv.query_id, c.vec_id corpus_id,
+       |        CAST(list_dot_product(qv.qv, c.qv) AS DOUBLE) /
+       |        (sqrt(CAST(list_dot_product(qv.qv, qv.qv) AS DOUBLE)) *
+       |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
+       |      FROM qv JOIN v c ON c.vec_id <> qv.query_id),
+       |dr AS (SELECT query_id, corpus_id,
+       |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
+       |      FROM ds),
+       |dense AS (SELECT query_id, corpus_id AS doc_id, rnk
+       |          FROM dr WHERE rnk <= 20),
+       |arms AS (SELECT * FROM sparse UNION ALL SELECT * FROM dense),
+       |fused AS (SELECT query_id, doc_id,
+       |            CAST(SUM(1000000000 // (60 + rnk)) AS BIGINT) AS rrf_u$fusedCols
+       |          FROM arms GROUP BY 1, 2),
+       |franked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |              ORDER BY rrf_u DESC, doc_id) AS INT) AS rnk
+       |            FROM fused)""".stripMargin
+
+  /** Three greedy MMR picks (relevance weight 0.7, integer micro-units)
+    * over the `cand(query_id, doc_id, rel_u)` rows and the quantized
+    * vectors `v`, as CTEs p1, p2 and p3. */
+  private lazy val mmrPicksSql: String =
+    """cv AS (SELECT c.query_id, c.doc_id, c.rel_u, v.qv
+      |       FROM cand c JOIN v ON v.vec_id = c.doc_id),
+      |sim AS (SELECT a.query_id, a.doc_id d1, b.doc_id d2,
+      |          CAST(floor(CAST(list_dot_product(a.qv, b.qv) AS DOUBLE) /
+      |            (sqrt(CAST(list_dot_product(a.qv, a.qv) AS DOUBLE)) *
+      |             sqrt(CAST(list_dot_product(b.qv, b.qv) AS DOUBLE)))
+      |            * 1000000 + 0.5) AS BIGINT) cos_u
+      |        FROM cv a JOIN cv b
+      |          ON a.query_id = b.query_id AND a.doc_id <> b.doc_id),
+      |p1 AS (SELECT query_id, doc_id, rel_u, mmr_u, 1 AS pick FROM (
+      |         SELECT query_id, doc_id, rel_u,
+      |           (70 * rel_u) // 100 AS mmr_u,
+      |           ROW_NUMBER() OVER (PARTITION BY query_id
+      |             ORDER BY (70 * rel_u) // 100 DESC, doc_id) rn
+      |         FROM cv) WHERE rn = 1),
+      |m2 AS (SELECT c.query_id, c.doc_id, c.rel_u,
+      |         (70 * c.rel_u - 30 * s.cos_u) // 100 AS mmr_u
+      |       FROM cv c
+      |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
+      |       JOIN sim s ON s.query_id = c.query_id
+      |         AND s.d1 = c.doc_id AND s.d2 = p1.doc_id),
+      |p2 AS (SELECT query_id, doc_id, rel_u, mmr_u, 2 AS pick FROM (
+      |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |           ORDER BY mmr_u DESC, doc_id) rn FROM m2) WHERE rn = 1),
+      |m3 AS (SELECT c.query_id, c.doc_id, c.rel_u,
+      |         (70 * c.rel_u - 30 * greatest(s1.cos_u, s2.cos_u)) // 100
+      |           AS mmr_u
+      |       FROM cv c
+      |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
+      |       JOIN p2 ON p2.query_id = c.query_id AND c.doc_id <> p2.doc_id
+      |       JOIN sim s1 ON s1.query_id = c.query_id
+      |         AND s1.d1 = c.doc_id AND s1.d2 = p1.doc_id
+      |       JOIN sim s2 ON s2.query_id = c.query_id
+      |         AND s2.d1 = c.doc_id AND s2.d2 = p2.doc_id),
+      |p3 AS (SELECT query_id, doc_id, rel_u, mmr_u, 3 AS pick FROM (
+      |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |           ORDER BY mmr_u DESC, doc_id) rn FROM m3) WHERE rn = 1)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "ts_seasonal_decomp" ->
@@ -2980,10 +3551,7 @@ object SparkEntry {
           |ORDER BY f.user_id, f.bucket_ts""".stripMargin),
     "ts_ewma" -> ewmaOracleSql("user_id", 3600L, 0.5, 8),
     "ts_cross_corr" ->
-      """WITH b AS (SELECT event_type,
-        |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
-        |        SUM(CAST(round(value*100) AS BIGINT)) AS u
-        |      FROM events GROUP BY 1, 2),
+      s"""WITH ${hourlyUnitsSql("event_type", "events")},
         |bounds AS (SELECT MIN(bucket_ts) lo, MAX(bucket_ts) hi FROM b),
         |grid AS (SELECT k.event_type,
         |           unnest(generate_series(lo, hi, 3600)) AS bucket_ts
@@ -2999,90 +3567,20 @@ object SparkEntry {
         |        AND a.event_type < b2.event_type
         |      GROUP BY 1, 2)
         |SELECT key_a, key_b, CAST(n AS BIGINT) AS n,
-        |       CASE WHEN n*CAST(sxx AS DOUBLE)
-        |               - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) > 0
-        |             AND n*CAST(syy AS DOUBLE)
-        |               - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) > 0
-        |            THEN round(
-        |              (n*CAST(sxy AS DOUBLE)
-        |                - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
-        |              / (sqrt(n*CAST(sxx AS DOUBLE)
-        |                   - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-        |                 * sqrt(n*CAST(syy AS DOUBLE)
-        |                   - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6)
+        |$pearsonSql
         |       END AS corr
         |FROM p ORDER BY key_a, key_b""".stripMargin,
     "ts_acf" ->
-      """WITH b AS (SELECT event_type,
-        |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
-        |        SUM(CAST(round(value*100) AS BIGINT)) AS u
-        |      FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT event_type, MIN(bucket_ts) lo, MAX(bucket_ts) hi
-        |           FROM b GROUP BY 1),
-        |spine AS (SELECT event_type,
-        |            unnest(generate_series(lo, hi, 3600)) AS bucket_ts
-        |          FROM bounds),
-        |g AS (SELECT s.event_type, s.bucket_ts, COALESCE(b.u, 0) AS u
-        |      FROM spine s LEFT JOIN b USING (event_type, bucket_ts)),
-        |l AS (SELECT unnest(generate_series(1, 48)) AS lag),
-        |p AS (SELECT y.event_type, l.lag,
-        |        COUNT(*) AS n, SUM(x.u) AS sx, SUM(y.u) AS sy,
-        |        SUM(CAST(x.u AS DECIMAL(19,0)) * y.u) AS sxy,
-        |        SUM(CAST(x.u AS DECIMAL(19,0)) * x.u) AS sxx,
-        |        SUM(CAST(y.u AS DECIMAL(19,0)) * y.u) AS syy
-        |      FROM g y CROSS JOIN l
-        |        JOIN g x ON x.event_type = y.event_type
-        |          AND x.bucket_ts = y.bucket_ts - l.lag*3600
-        |      GROUP BY 1, 2)
+      s"""${lagMomentsSql("event_type")}
         |SELECT event_type, CAST(lag AS INTEGER) AS lag,
         |       CAST(n AS BIGINT) AS n,
-        |       CASE WHEN n*CAST(sxx AS DOUBLE)
-        |               - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) > 0
-        |             AND n*CAST(syy AS DOUBLE)
-        |               - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) > 0
-        |            THEN round(
-        |              (n*CAST(sxy AS DOUBLE)
-        |                - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
-        |              / (sqrt(n*CAST(sxx AS DOUBLE)
-        |                   - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-        |                 * sqrt(n*CAST(syy AS DOUBLE)
-        |                   - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6)
+        |$pearsonSql
         |       END AS acf
         |FROM p ORDER BY event_type, lag""".stripMargin,
     "ts_dominant_period" ->
-      """WITH b AS (SELECT user_id,
-        |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
-        |        SUM(CAST(round(value*100) AS BIGINT)) AS u
-        |      FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, MIN(bucket_ts) lo, MAX(bucket_ts) hi
-        |           FROM b GROUP BY 1),
-        |spine AS (SELECT user_id,
-        |            unnest(generate_series(lo, hi, 3600)) AS bucket_ts
-        |          FROM bounds),
-        |g AS (SELECT s.user_id, s.bucket_ts, COALESCE(b.u, 0) AS u
-        |      FROM spine s LEFT JOIN b USING (user_id, bucket_ts)),
-        |l AS (SELECT unnest(generate_series(1, 48)) AS lag),
-        |p AS (SELECT y.user_id, l.lag,
-        |        COUNT(*) AS n, SUM(x.u) AS sx, SUM(y.u) AS sy,
-        |        SUM(CAST(x.u AS DECIMAL(19,0)) * y.u) AS sxy,
-        |        SUM(CAST(x.u AS DECIMAL(19,0)) * x.u) AS sxx,
-        |        SUM(CAST(y.u AS DECIMAL(19,0)) * y.u) AS syy
-        |      FROM g y CROSS JOIN l
-        |        JOIN g x ON x.user_id = y.user_id
-        |          AND x.bucket_ts = y.bucket_ts - l.lag*3600
-        |      GROUP BY 1, 2),
+      s"""${lagMomentsSql("user_id")},
         |a AS (SELECT user_id, lag,
-        |        CASE WHEN n*CAST(sxx AS DOUBLE)
-        |                - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE) > 0
-        |              AND n*CAST(syy AS DOUBLE)
-        |                - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE) > 0
-        |             THEN round(
-        |               (n*CAST(sxy AS DOUBLE)
-        |                 - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))
-        |               / (sqrt(n*CAST(sxx AS DOUBLE)
-        |                    - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))
-        |                  * sqrt(n*CAST(syy AS DOUBLE)
-        |                    - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6)
+        |${pearsonSql.linesIterator.map(" " + _).mkString("\n")}
         |        END AS acf
         |      FROM p),
         |q AS (SELECT user_id, lag,
@@ -3123,48 +3621,12 @@ object SparkEntry {
         |WHERE CAST(dev2 AS DECIMAL(38,0)) * 2000000
         |        > CAST(mad4 AS DECIMAL(38,0)) * 3500000
         |ORDER BY user_id, bucket_ts""".stripMargin,
-    "x_interval_join" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |        CAST(floor(epoch(ts)) AS BIGINT) AS ivs,
-        |        CAST(floor(epoch(ts)) AS BIGINT)
-        |          + CAST(floor(value*60) AS BIGINT) AS ive
-        |      FROM events),
-        |a AS (SELECT * FROM e WHERE event_type IN ('view', 'click')),
-        |b AS (SELECT * FROM e WHERE event_type = 'error')
-        |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-        |       a.ivs AS a_s, a.ive AS a_e, b.ivs AS b_s, b.ive AS b_e,
-        |       greatest(a.ivs, b.ivs) AS ov_s,
-        |       least(a.ive, b.ive) AS ov_e,
-        |       least(a.ive, b.ive) - greatest(a.ivs, b.ivs) AS ov_len
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a.ivs <= b.ive AND b.ivs <= a.ive
-        |ORDER BY a.user_id, a_id, b_id""".stripMargin,
+    "x_interval_join" -> intervalJoinOracleSql,
     // same brute-force oracle: the auto-level blocking must be
     // answer-invisible
-    "x_interval_join_auto" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |        CAST(floor(epoch(ts)) AS BIGINT) AS ivs,
-        |        CAST(floor(epoch(ts)) AS BIGINT)
-        |          + CAST(floor(value*60) AS BIGINT) AS ive
-        |      FROM events),
-        |a AS (SELECT * FROM e WHERE event_type IN ('view', 'click')),
-        |b AS (SELECT * FROM e WHERE event_type = 'error')
-        |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-        |       a.ivs AS a_s, a.ive AS a_e, b.ivs AS b_s, b.ive AS b_e,
-        |       greatest(a.ivs, b.ivs) AS ov_s,
-        |       least(a.ive, b.ive) AS ov_e,
-        |       least(a.ive, b.ive) - greatest(a.ivs, b.ivs) AS ov_len
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a.ivs <= b.ive AND b.ivs <= a.ive
-        |ORDER BY a.user_id, a_id, b_id""".stripMargin,
+    "x_interval_join_auto" -> intervalJoinOracleSql,
     "x_interval_stats" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |        CAST(floor(epoch(ts)) AS BIGINT) AS ivs,
-        |        CAST(floor(epoch(ts)) AS BIGINT)
-        |          + CAST(floor(value*60) AS BIGINT) AS ive
-        |      FROM events),
-        |a AS (SELECT * FROM e WHERE event_type IN ('view', 'click')),
-        |b AS (SELECT * FROM e WHERE event_type = 'error'),
+      s"""$intervalSidesSql,
         |hits AS (SELECT a.user_id, a.event_id AS a_id,
         |           COUNT(*) AS n_overlaps,
         |           SUM(least(a.ive, b.ive) - greatest(a.ivs, b.ivs))
@@ -3179,16 +3641,7 @@ object SparkEntry {
         |  ON h.user_id = a.user_id AND h.a_id = a.event_id
         |ORDER BY a.user_id, a_id""".stripMargin,
     "x_fuzzy_pairs" ->
-      """WITH dom AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id,
-        |         md5(CAST(doc_id AS VARCHAR)) AS s FROM documents
-        |  UNION ALL
-        |  SELECT CAST(doc_id + 10000000 AS BIGINT),
-        |         substr(md5(CAST(doc_id AS VARCHAR)),1,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),3,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),2,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),4)
-        |  FROM documents WHERE doc_id % 3 = 0)
+      s"""WITH $fuzzyNamesSql
         |SELECT a.id AS a_id, b.id AS b_id,
         |       CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
         |FROM dom a JOIN dom b
@@ -3196,16 +3649,7 @@ object SparkEntry {
         |WHERE levenshtein(a.s, b.s) <= 2
         |ORDER BY a_id, b_id""".stripMargin,
     "x_entity_resolution" ->
-      """WITH RECURSIVE dom AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id,
-        |         md5(CAST(doc_id AS VARCHAR)) AS s FROM documents
-        |  UNION ALL
-        |  SELECT CAST(doc_id + 10000000 AS BIGINT),
-        |         substr(md5(CAST(doc_id AS VARCHAR)),1,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),3,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),2,1) ||
-        |         substr(md5(CAST(doc_id AS VARCHAR)),4)
-        |  FROM documents WHERE doc_id % 3 = 0),
+      s"""WITH RECURSIVE $fuzzyNamesSql,
         |p AS (SELECT a.id a_id, b.id b_id
         |      FROM dom a JOIN dom b
         |        ON a.id < b.id AND abs(length(a.s) - length(b.s)) <= 2
@@ -3232,30 +3676,8 @@ object SparkEntry {
         |       shingle, cnt
         |FROM c ORDER BY cnt DESC, shingle LIMIT 40""".stripMargin,
     "ts_residual_cusum" ->
-      """WITH e2 AS (SELECT user_id, ts,
-        |        value + CASE WHEN floor(epoch(ts)) >= 1705881600
-        |                     THEN 25.0 ELSE 0.0 END AS value
-        |      FROM events),
-        |b AS (SELECT user_id,
-        |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
-        |        SUM(CAST(round(value*100) AS BIGINT)) AS u
-        |      FROM e2 GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, MIN(bucket_ts) lo, MAX(bucket_ts) hi
-        |           FROM b GROUP BY 1),
-        |spine AS (SELECT user_id,
-        |            unnest(generate_series(lo, hi, 3600)) AS bucket_ts
-        |          FROM bounds),
-        |d AS (SELECT s.user_id, s.bucket_ts, COALESCE(b.u, 0) AS u
-        |      FROM spine s LEFT JOIN b USING (user_id, bucket_ts)),
-        |t AS (SELECT *, SUM(u) OVER w AS tw, COUNT(*) OVER w AS tn FROM d
-        |      WINDOW w AS (PARTITION BY user_id ORDER BY bucket_ts
-        |                   ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |t2 AS (SELECT *, CASE WHEN tn = 25
-        |         THEN round(CAST(tw AS DOUBLE)/(100.0*25), 6) END AS trend
-        |       FROM t),
-        |t3 AS (SELECT *, CASE WHEN trend IS NOT NULL
-        |         THEN u*10000 - CAST(round(trend*1e6) AS BIGINT) END AS du6,
-        |         (bucket_ts // 3600) % 24 AS pos FROM t2),
+      s"""$shiftedUnitsSql,
+        |${decompTrendSql("user_id")},
         |idx AS (SELECT user_id, pos,
         |          CAST(round(CAST(SUM(du6) AS DOUBLE)/COUNT(*)) AS BIGINT)
         |            AS s_u6
@@ -3265,69 +3687,8 @@ object SparkEntry {
         |           AS BIGINT) AS u
         |       FROM t3 JOIN idx USING (user_id, pos)
         |       WHERE t3.du6 IS NOT NULL AND idx.s_u6 IS NOT NULL),
-        |st AS (SELECT user_id, COUNT(*) AS n, SUM(u) AS su,
-        |         SUM(CAST(u AS DECIMAL(19,0)) * u) AS su2
-        |       FROM rb GROUP BY 1),
-        |m AS (SELECT rb.user_id, rb.bucket_ts, rb.u,
-        |        CAST(st.su AS DOUBLE)/(st.n*100.0) AS mean,
-        |        CAST(st.su2 AS DOUBLE)/(st.n*10000.0) AS ex2
-        |      FROM rb JOIN st USING (user_id)),
-        |z AS (SELECT user_id, bucket_ts,
-        |        CAST(round((CAST(u AS DOUBLE)/100.0 - mean)
-        |          /sqrt(ex2 - mean*mean)*1e6) AS BIGINT) AS z_u6
-        |      FROM m WHERE ex2 - mean*mean > 0),
-        |c AS (SELECT *, SUM(z_u6 - 500000) OVER cum AS cp,
-        |        SUM(-z_u6 - 500000) OVER cum AS cn
-        |      FROM z WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |s AS (SELECT *, cp - LEAST(0, MIN(cp) OVER cum) AS sp,
-        |        cn - LEAST(0, MIN(cn) OVER cum) AS sn
-        |      FROM c WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, bucket_ts,
-        |       CAST(z_u6 AS DOUBLE)/1e6 AS z,
-        |       CAST(sp AS DOUBLE)/1e6 AS cusum_up,
-        |       CAST(sn AS DOUBLE)/1e6 AS cusum_down,
-        |       CASE WHEN sp > 10000000 AND sn > 10000000 THEN 'both'
-        |            WHEN sp > 10000000 THEN 'up' ELSE 'down' END AS direction
-        |FROM s WHERE sp > 10000000 OR sn > 10000000
-        |ORDER BY user_id, bucket_ts""".stripMargin,
-    "ts_cusum" ->
-      """WITH e2 AS (SELECT user_id, ts,
-        |        value + CASE WHEN floor(epoch(ts)) >= 1705881600
-        |                     THEN 25.0 ELSE 0.0 END AS value
-        |      FROM events),
-        |b AS (SELECT user_id,
-        |        CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_ts,
-        |        SUM(CAST(round(value*100) AS BIGINT)) AS u
-        |      FROM e2 GROUP BY 1, 2),
-        |st AS (SELECT user_id, COUNT(*) AS n, SUM(u) AS su,
-        |         SUM(CAST(u AS DECIMAL(19,0)) * u) AS su2
-        |       FROM b GROUP BY 1),
-        |m AS (SELECT b.user_id, b.bucket_ts, b.u,
-        |        CAST(st.su AS DOUBLE)/(st.n*100.0) AS mean,
-        |        CAST(st.su2 AS DOUBLE)/(st.n*10000.0) AS ex2
-        |      FROM b JOIN st USING (user_id)),
-        |z AS (SELECT user_id, bucket_ts,
-        |        CAST(round((CAST(u AS DOUBLE)/100.0 - mean)
-        |          /sqrt(ex2 - mean*mean)*1e6) AS BIGINT) AS z_u6
-        |      FROM m WHERE ex2 - mean*mean > 0),
-        |c AS (SELECT *, SUM(z_u6 - 500000) OVER cum AS cp,
-        |        SUM(-z_u6 - 500000) OVER cum AS cn
-        |      FROM z WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |s AS (SELECT *, cp - LEAST(0, MIN(cp) OVER cum) AS sp,
-        |        cn - LEAST(0, MIN(cn) OVER cum) AS sn
-        |      FROM c WINDOW cum AS (PARTITION BY user_id ORDER BY bucket_ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, bucket_ts,
-        |       CAST(z_u6 AS DOUBLE)/1e6 AS z,
-        |       CAST(sp AS DOUBLE)/1e6 AS cusum_up,
-        |       CAST(sn AS DOUBLE)/1e6 AS cusum_down,
-        |       CASE WHEN sp > 3000000 AND sn > 3000000 THEN 'both'
-        |            WHEN sp > 3000000 THEN 'up' ELSE 'down' END AS direction
-        |FROM s WHERE sp > 3000000 OR sn > 3000000
-        |ORDER BY user_id, bucket_ts""".stripMargin,
+        |${cusumSql("rb", 10000000)}""".stripMargin,
+    "ts_cusum" -> (shiftedUnitsSql + ",\n" + cusumSql("b", 3000000)),
     "s1_range_scan" ->
       """SELECT event_id, user_id,
         |       CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
@@ -3398,15 +3759,7 @@ object SparkEntry {
         |SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n_transitions
         |FROM t WHERE from_type IS NOT NULL
         |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin,
-    "a_retention_cohorts" ->
-      """WITH act AS (SELECT DISTINCT user_id,
-        |         CAST(floor(epoch(ts) / 604800) AS BIGINT) AS period
-        |       FROM events),
-        |co AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1)
-        |SELECT cohort, period - cohort AS "offset",
-        |       CAST(COUNT(*) AS BIGINT) AS n_users
-        |FROM act JOIN co USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort, "offset" """.stripMargin,
+    "a_retention_cohorts" -> retentionOracleSql,
     "a_funnel" ->
       """WITH ev AS (SELECT user_id AS u,
         |         CAST(floor(epoch(ts)) AS BIGINT) AS t, event_type AS y
@@ -3634,26 +3987,8 @@ object SparkEntry {
         |       CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_ts,
         |       CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS hourly_volume
         |FROM events GROUP BY 1, 2 ORDER BY user_id, hour_ts""".stripMargin,
-    "a6_thresholds" ->
-      """WITH hourly AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS h,
-        |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS hourly_volume
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id,
-        |       round(quantile_cont(hourly_volume, 0.5), 6) AS p50,
-        |       round(quantile_cont(hourly_volume, 0.75), 6) AS p75,
-        |       round(quantile_cont(hourly_volume, 0.9), 6) AS p90,
-        |       max(hourly_volume) AS max_volume
-        |FROM hourly GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "a4_predict_pattern" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(dayofweek(ts) AS BIGINT) AS dow,
-        |         CAST(hour(ts) AS BIGINT) AS hr, CAST(ts AS DATE) AS d,
-        |         SUM(CAST(value AS DECIMAL(28,2))) AS hourly_total
-        |  FROM events GROUP BY 1, 2, 3, 4)
-        |SELECT user_id, dow, hr,
-        |       CAST(SUM(hourly_total) AS DOUBLE) / COUNT(*) AS predicted_volume
-        |FROM daily GROUP BY 1, 2, 3 ORDER BY user_id, dow, hr""".stripMargin,
+    "a6_thresholds" -> thresholdsOracleSql,
+    "a4_predict_pattern" -> predictPatternOracleSql,
     "j4_predict_slot_rules" ->
       """WITH keys AS (SELECT DISTINCT user_id FROM events),
         |daily AS (
@@ -4080,57 +4415,9 @@ object SparkEntry {
     // the bloom-guarded path is row-identical to the exact operator
     // (bloom pre-filter has no false negatives; exact semi-join removes
     // its false positives), so it shares the exact oracle SQL
-    "dd_contamination_bloom" ->
-      """WITH tr AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |            FROM documents WHERE source <> 'src0'),
-        |ev AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |       FROM documents WHERE source = 'src0'),
-        |tsh AS (SELECT DISTINCT
-        |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |        FROM tr, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |esh AS (SELECT DISTINCT doc_id,
-        |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |        FROM ev, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) n_shingles FROM esh GROUP BY 1),
-        |hits AS (SELECT doc_id, COUNT(*) n_contaminated
-        |         FROM esh WHERE sh_h IN (SELECT sh_h FROM tsh) GROUP BY 1)
-        |SELECT s.doc_id AS doc_id, s.n_shingles,
-        |       COALESCE(h.n_contaminated, 0) AS n_contaminated,
-        |       CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) /
-        |         CAST(s.n_shingles AS DOUBLE) AS contamination_ratio
-        |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "dd_contamination" ->
-      """WITH tr AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |            FROM documents WHERE source <> 'src0'),
-        |ev AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |       FROM documents WHERE source = 'src0'),
-        |tsh AS (SELECT DISTINCT
-        |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |        FROM tr, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |esh AS (SELECT DISTINCT doc_id,
-        |          CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |        FROM ev, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |sizes AS (SELECT doc_id, COUNT(*) n_shingles FROM esh GROUP BY 1),
-        |hits AS (SELECT doc_id, COUNT(*) n_contaminated
-        |         FROM esh WHERE sh_h IN (SELECT sh_h FROM tsh) GROUP BY 1)
-        |SELECT s.doc_id AS doc_id, s.n_shingles,
-        |       COALESCE(h.n_contaminated, 0) AS n_contaminated,
-        |       CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) /
-        |         CAST(s.n_shingles AS DOUBLE) AS contamination_ratio
-        |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "x_asof_join" ->
-      """WITH cp AS (
-        |  SELECT user_id, date_trunc('hour', ts) cts,
-        |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) checkpoint_total
-        |  FROM events GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id,
-        |       CAST(floor(epoch(e.ts)) AS BIGINT) ts_epoch, e.value,
-        |       cp.checkpoint_total AS asof_checkpoint_total
-        |FROM events e ASOF LEFT JOIN cp
-        |  ON e.user_id = cp.user_id AND e.ts >= cp.cts
-        |ORDER BY event_id""".stripMargin,
+    "dd_contamination_bloom" -> contaminationOracleSql,
+    "dd_contamination" -> contaminationOracleSql,
+    "x_asof_join" -> asofOracleSql(">="),
     "x_pit_features" ->
       """WITH hr AS (
         |  SELECT user_id, date_trunc('hour', ts) cts,
@@ -4164,35 +4451,7 @@ object SparkEntry {
         |            ELSE th.qs[bin + 1] END AS bin_hi,
         |       COUNT(*) AS n_rows
         |FROM b, th GROUP BY 1, 2, 3 ORDER BY bin""".stripMargin,
-    "prof_quantiles" ->
-      """WITH h AS (SELECT CAST(round(value*100) AS BIGINT) unit,
-        |             COUNT(*) n
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |c AS (SELECT unit, n,
-        |        SUM(n) OVER (ORDER BY unit
-        |          ROWS UNBOUNDED PRECEDING) hi_cum
-        |      FROM h),
-        |c2 AS (SELECT *, hi_cum - n AS lo_cum FROM c),
-        |t AS (SELECT COALESCE(SUM(n), 0) AS N FROM h),
-        |pr AS (SELECT unnest(CAST([0.5, 0.75, 0.9, 0.99]
-        |         AS DOUBLE[])) AS p),
-        |pp AS (SELECT p, (N-1)*p AS pos,
-        |         CAST(floor((N-1)*p) AS BIGINT) AS lo,
-        |         CAST(ceil((N-1)*p) AS BIGINT) AS hi, N
-        |       FROM pr, t),
-        |vlo AS (SELECT pp.p, c2.unit ulo FROM pp JOIN c2
-        |        ON pp.lo >= c2.lo_cum AND pp.lo < c2.hi_cum),
-        |vhi AS (SELECT pp.p, c2.unit uhi FROM pp JOIN c2
-        |        ON pp.hi >= c2.lo_cum AND pp.hi < c2.hi_cum)
-        |SELECT pp.p,
-        |       CASE WHEN pp.N = 0 THEN NULL
-        |            WHEN pp.hi = pp.lo THEN CAST(ulo AS DOUBLE)/100.0
-        |            ELSE (CAST(ulo AS DOUBLE)/100.0) * (pp.hi - pp.pos)
-        |               + (CAST(uhi AS DOUBLE)/100.0) * (pp.pos - pp.lo)
-        |       END AS q
-        |FROM pp LEFT JOIN vlo ON vlo.p = pp.p
-        |  LEFT JOIN vhi ON vhi.p = pp.p
-        |ORDER BY pp.p""".stripMargin,
+    "prof_quantiles" -> quantilesOracleSql,
     "t_table_digest" ->
       """SELECT COUNT(*) AS n_rows,
         |       CAST(CAST(SUM(CAST(('0x' || substr(md5(concat_ws(chr(1),
@@ -4203,17 +4462,7 @@ object SparkEntry {
         |           coalesce(CAST(n_chars AS VARCHAR), chr(2)))), 1, 15))
         |         AS BIGINT)) AS DECIMAL(38,0)) AS VARCHAR) AS digest
         |FROM documents""".stripMargin,
-    "x_asof_fwd" ->
-      """WITH cp AS (
-        |  SELECT user_id, date_trunc('hour', ts) cts,
-        |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) checkpoint_total
-        |  FROM events GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id,
-        |       CAST(floor(epoch(e.ts)) AS BIGINT) ts_epoch, e.value,
-        |       cp.checkpoint_total AS asof_checkpoint_total
-        |FROM events e ASOF LEFT JOIN cp
-        |  ON e.user_id = cp.user_id AND e.ts <= cp.cts
-        |ORDER BY event_id""".stripMargin,
+    "x_asof_fwd" -> asofOracleSql("<="),
     "x_asof_nearest" ->
       """WITH cp AS (
         |  SELECT user_id, date_trunc('hour', ts) cts,
@@ -4362,7 +4611,7 @@ object SparkEntry {
     // divisions are guarded (CASE len > 0) because line dedup emits
     // empty docs — matching the Spark guards.
     "pipe_pretrain_recipe" ->
-      """WITH d0 AS (
+      s"""WITH d0 AS (
         |  SELECT doc_id, replace(text, ' the ', chr(10)) AS text
         |  FROM documents),
         |u AS (SELECT doc_id, text FROM d0
@@ -4386,47 +4635,7 @@ object SparkEntry {
         |       FROM lk WHERE rn = 1 GROUP BY doc_id),
         |cln AS (SELECT ud.doc_id, COALESCE(lr.text, '') AS text, ud.dom
         |        FROM ud LEFT JOIN lr USING (doc_id)),
-        |cw AS (SELECT doc_id, text, dom,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |       FROM cln),
-        |cs AS (SELECT doc_id, text, dom, w,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is'))) AS BIGINT) s_en,
-        |        CAST(len(list_filter(w, x -> x IN ('el','la','de','los','es'))) AS BIGINT) s_es,
-        |        CAST(len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS BIGINT) s_de,
-        |        CAST(len(list_filter(w, x -> x IN ('le','la','les','des','est'))) AS BIGINT) s_fr
-        |      FROM cw),
-        |cl AS (SELECT doc_id, text, dom, w,
-        |        CASE WHEN s_en > 0 AND s_en = best THEN 'en'
-        |             WHEN s_es > 0 AND s_es = best THEN 'es'
-        |             WHEN s_de > 0 AND s_de = best THEN 'de'
-        |             WHEN s_fr > 0 AND s_fr = best THEN 'fr'
-        |             ELSE 'und' END AS lang_pred
-        |      FROM (SELECT *, greatest(s_en, s_es, s_de, s_fr) best FROM cs)),
-        |cm AS (SELECT doc_id, text, dom, lang_pred,
-        |        CAST(len(w) AS BIGINT) n_tokens,
-        |        CASE WHEN len(text) > 0
-        |             THEN CAST(len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS DOUBLE)
-        |                    / CAST(len(text) AS DOUBLE)
-        |             ELSE 0.0 END punct_raw,
-        |        CASE WHEN len(w) > 0
-        |             THEN CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
-        |                    'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
-        |                    / CAST(len(w) AS DOUBLE)
-        |             ELSE 0.0 END stop_raw,
-        |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
-        |      FROM cl),
-        |cp AS (SELECT doc_id, text, dom, lang_pred, n_tokens,
-        |        round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6)
-        |          AS quality_score
-        |      FROM cm),
-        |cf AS (SELECT * FROM cp
-        |       WHERE lang_pred IN ('en', 'es') AND quality_score >= 0.5),
-        |ck AS (SELECT min(doc_id) AS keep_id
-        |       FROM (SELECT doc_id, CAST(('0x'||substr(md5(text),1,15)) AS BIGINT) h FROM cf)
-        |       GROUP BY h),
-        |cur AS (SELECT cf.doc_id, cf.text, cf.dom, cf.lang_pred,
-        |               cf.quality_score, cf.n_tokens
-        |        FROM cf JOIN ck ON cf.doc_id = ck.keep_id),
+        |${curateCtesSql("cln", withDom = true, minQuality = "0.5")},
         |wt AS (SELECT term,
         |         (CAST(('0x'||substr(md5(term),1,15)) AS BIGINT) % 2000001)
         |           - 1000000 AS w_micro
@@ -4444,29 +4653,7 @@ object SparkEntry {
         |       WHERE sc.score_micro >= -5000000),
         |reps AS (SELECT min(doc_id) AS doc_id, any_value(text) AS text
         |         FROM mk GROUP BY text),
-        |t2 AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM reps),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |       FROM t2, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
-        |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
-        |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
-        |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
-        |                  array_to_string(list_sort(list(
-        |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
-        |           FROM sig GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
-        |         FROM banded x JOIN banded y
-        |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
-        |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |removed AS (
-        |  SELECT DISTINCT c.b_id AS doc_id
-        |  FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
-        |  JOIN sizes sa ON c.a_id = sa.doc_id JOIN sizes sb ON c.b_id = sb.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8),
+        |${nearDupRemovedSql("t2", "reps")},
         |surv AS (SELECT doc_id FROM reps
         |         WHERE doc_id NOT IN (SELECT doc_id FROM removed)),
         |rin AS (SELECT mk.doc_id, mk.dom FROM mk JOIN surv USING (doc_id)),
@@ -4517,73 +4704,11 @@ object SparkEntry {
     // End-to-end replay of Pipelines.curateToShards (the minimal
     // recipe): curate -> LSH near-dup -> shards on the raw text.
     "pipe_curate_shards" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 100000, text FROM documents),
-        |cw AS (SELECT doc_id, text,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') w
-        |       FROM u),
-        |cs AS (SELECT doc_id, text, w,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is'))) AS BIGINT) s_en,
-        |        CAST(len(list_filter(w, x -> x IN ('el','la','de','los','es'))) AS BIGINT) s_es,
-        |        CAST(len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS BIGINT) s_de,
-        |        CAST(len(list_filter(w, x -> x IN ('le','la','les','des','est'))) AS BIGINT) s_fr
-        |      FROM cw),
-        |cl AS (SELECT doc_id, text, w,
-        |        CASE WHEN s_en > 0 AND s_en = best THEN 'en'
-        |             WHEN s_es > 0 AND s_es = best THEN 'es'
-        |             WHEN s_de > 0 AND s_de = best THEN 'de'
-        |             WHEN s_fr > 0 AND s_fr = best THEN 'fr'
-        |             ELSE 'und' END AS lang_pred
-        |      FROM (SELECT *, greatest(s_en, s_es, s_de, s_fr) best FROM cs)),
-        |cm AS (SELECT doc_id, text, lang_pred,
-        |        CAST(len(w) AS BIGINT) n_tokens,
-        |        CASE WHEN len(text) > 0
-        |             THEN CAST(len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS DOUBLE)
-        |                    / CAST(len(text) AS DOUBLE)
-        |             ELSE 0.0 END punct_raw,
-        |        CASE WHEN len(w) > 0
-        |             THEN CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
-        |                    'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
-        |                    / CAST(len(w) AS DOUBLE)
-        |             ELSE 0.0 END stop_raw,
-        |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
-        |      FROM cl),
-        |cp AS (SELECT doc_id, text, lang_pred, n_tokens,
-        |        round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6)
-        |          AS quality_score
-        |      FROM cm),
-        |cf AS (SELECT * FROM cp
-        |       WHERE lang_pred IN ('en', 'es') AND quality_score >= 0.7),
-        |ck AS (SELECT min(doc_id) AS keep_id
-        |       FROM (SELECT doc_id, CAST(('0x'||substr(md5(text),1,15)) AS BIGINT) h FROM cf)
-        |       GROUP BY h),
-        |cur AS (SELECT cf.doc_id, cf.text, cf.lang_pred,
-        |               cf.quality_score, cf.n_tokens
-        |        FROM cf JOIN ck ON cf.doc_id = ck.keep_id),
-        |t2 AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM cur),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |       FROM t2, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
-        |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
-        |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
-        |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
-        |                  array_to_string(list_sort(list(
-        |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
-        |           FROM sig GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
-        |         FROM banded x JOIN banded y
-        |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
-        |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |removed AS (
-        |  SELECT DISTINCT c.b_id AS doc_id
-        |  FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
-        |  JOIN sizes sa ON c.a_id = sa.doc_id JOIN sizes sb ON c.b_id = sb.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8),
+        |${curateCtesSql("u", withDom = false, minQuality = "0.7")},
+        |${nearDupRemovedSql("t2", "cur")},
         |surv AS (SELECT doc_id FROM cur
         |         WHERE doc_id NOT IN (SELECT doc_id FROM removed)),
         |en AS (SELECT c.doc_id, c.lang_pred, c.quality_score, c.n_tokens
@@ -4815,27 +4940,10 @@ object SparkEntry {
         |WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz AS DOUBLE) >= 0.9
         |ORDER BY a_id, b_id""".stripMargin,
     "dd_minhash_lsh" ->
-      """WITH reps AS (SELECT doc_id, text FROM documents
+      s"""WITH reps AS (SELECT doc_id, text FROM documents
         |              WHERE doc_id IN (SELECT min(doc_id) FROM documents
         |                               GROUP BY CAST(('0x'||substr(md5(text),1,15)) AS BIGINT))),
-        |t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM reps),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |       FROM t, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
-        |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
-        |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
-        |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
-        |                  array_to_string(list_sort(list(
-        |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
-        |           FROM sig GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
-        |         FROM banded x JOIN banded y
-        |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
-        |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2)
+        |${minhashPairsSql("t", "reps")}
         |SELECT c.a_id AS a_id, c.b_id AS b_id,
         |       CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS jaccard
         |FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
@@ -4843,35 +4951,13 @@ object SparkEntry {
         |WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8
         |ORDER BY a_id, b_id""".stripMargin,
     "dd_corpus_dedup" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL SELECT doc_id + 100000, text FROM documents),
         |reps AS (
         |  SELECT min(doc_id) AS doc_id, any_value(text) AS text
         |  FROM u GROUP BY text),
-        |t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM reps),
-        |sh AS (SELECT DISTINCT doc_id,
-        |         CAST(('0x'||substr(md5(array_to_string(w[i:i+2], ' ')),1,15)) AS BIGINT) AS sh_h
-        |       FROM t, UNNEST(generate_series(1, greatest(len(w)-2, 0))) AS g(i)),
-        |hh AS (SELECT doc_id, sh_h % 1000000007 AS hh FROM sh),
-        |sig AS (SELECT doc_id, i, min(((i*2+1) * hh + (i*17+91)) % 1000000007) AS minhash
-        |        FROM hh, UNNEST(generate_series(0, 15)) AS g(i) GROUP BY 1, 2),
-        |banded AS (SELECT doc_id, CAST(i // 4 AS INT) AS band,
-        |                  array_to_string(list_sort(list(
-        |                    lpad(CAST(i AS VARCHAR),2,'0') || '=' || CAST(minhash AS VARCHAR))), ':') AS band_key
-        |           FROM sig GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id a_id, y.doc_id b_id
-        |         FROM banded x JOIN banded y
-        |           ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id a_id, b.doc_id b_id, count(*) n_common
-        |          FROM sh a JOIN sh b ON a.sh_h = b.sh_h AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |removed AS (
-        |  SELECT DISTINCT c.b_id AS doc_id
-        |  FROM cand c JOIN inter i ON c.a_id = i.a_id AND c.b_id = i.b_id
-        |  JOIN sizes sa ON c.a_id = sa.doc_id JOIN sizes sb ON c.b_id = sb.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.8)
+        |${nearDupRemovedSql("t", "reps")}
         |SELECT doc_id FROM reps
         |WHERE doc_id NOT IN (SELECT doc_id FROM removed)
         |ORDER BY doc_id""".stripMargin,
@@ -4913,16 +4999,7 @@ object SparkEntry {
          |          + CAST((len(text) - len(replace(text, '...', ''))) // 3 AS BIGINT) AS nsym
          |      FROM documents),
          |c0g AS (SELECT doc_id, CAST(len(w) AS BIGINT) nw,
-         |        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS BIGINT) chars,
-         |        nsym,
-         |        CAST(len(lines) AS BIGINT) nlines,
-         |        CAST(len(list_filter(lines, l -> starts_with(ltrim(l), '- ')
-         |          OR starts_with(ltrim(l), '* '))) AS BIGINT) nbullet,
-         |        CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS BIGINT) nell,
-         |        CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) nalpha,
-         |        CAST(len(ws) AS BIGINT) nws,
-         |        CAST(len(list_intersect(list_distinct(w),
-         |          ['the','be','to','of','and','that','have','with'])) AS BIGINT) stop_hits
+         |$gopherCountsSql
          |      FROM w0),
          |gr AS (SELECT doc_id FROM c0g
          |       WHERE nw >= 30 AND nw <= 100000
@@ -4981,12 +5058,9 @@ object SparkEntry {
         |FROM cand WHERE bit_count(xor(a_sig, b_sig)) <= 10
         |ORDER BY a_id, b_id""".stripMargin,
     "t_langid" ->
-      """WITH w AS (SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
+      s"""WITH w AS (SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
         |s AS (SELECT doc_id, lang,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is'))) AS BIGINT) s_en,
-        |        CAST(len(list_filter(w, x -> x IN ('el','la','de','los','es'))) AS BIGINT) s_es,
-        |        CAST(len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS BIGINT) s_de,
-        |        CAST(len(list_filter(w, x -> x IN ('le','la','les','des','est'))) AS BIGINT) s_fr
+        |$langScoresSql
         |      FROM w),
         |b AS (SELECT *, greatest(s_en, s_es, s_de, s_fr) best FROM s)
         |SELECT doc_id, lang,
@@ -4996,29 +5070,7 @@ object SparkEntry {
         |            WHEN s_fr > 0 AND s_fr = best THEN 'fr'
         |            ELSE 'und' END AS lang_pred
         |FROM b ORDER BY doc_id""".stripMargin,
-    "t_quality" ->
-      """WITH w AS (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
-        |m AS (SELECT doc_id,
-        |        CAST(len(text) AS BIGINT) n_chars,
-        |        CAST(len(w) AS BIGINT) n_tokens,
-        |        CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) n_tokens_ws,
-        |        CAST(COALESCE(list_sum(list_transform(w, x -> CAST(ceil(len(x) / 4.0) AS BIGINT))), 0)
-        |          + len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS BIGINT) n_tokens_bpe,
-        |        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS DOUBLE)
-        |          / CAST(len(w) AS DOUBLE) mean_raw,
-        |        CAST(len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS DOUBLE)
-        |          / CAST(len(text) AS DOUBLE) punct_raw,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
-        |          'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
-        |          / CAST(len(w) AS DOUBLE) stop_raw,
-        |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
-        |      FROM w)
-        |SELECT doc_id, n_chars, n_tokens, n_tokens_ws, n_tokens_bpe,
-        |       round(mean_raw, 6) AS mean_token_len,
-        |       round(punct_raw, 6) AS punct_ratio,
-        |       round(stop_raw, 6) AS stopword_ratio,
-        |       round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6) AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
+    "t_quality" -> ("WITH " + textQualitySql("documents")),
     "t_normalize" ->
       """WITH n AS (
         |  SELECT doc_id,
@@ -5044,7 +5096,7 @@ object SparkEntry {
         |FROM tok t LEFT JOIN bgm ON t.doc_id = bgm.doc_id
         |ORDER BY doc_id""".stripMargin,
     "t_gopher_rules" ->
-      """WITH seeded AS (
+      s"""WITH seeded AS (
         |  SELECT doc_id, text ||
         |    CASE WHEN doc_id % 4 = 0 THEN ' ## # see more...' ELSE '' END ||
         |    CASE WHEN doc_id % 6 = 0 THEN chr(10) || '- first item' || chr(10) || '- second item' ELSE '' END ||
@@ -5056,22 +5108,13 @@ object SparkEntry {
         |m AS (SELECT doc_id,
         |        regexp_extract_all(lower(text), '[a-z0-9]+') w,
         |        string_split(text, chr(10)) lines,
-        |        string_split_regex(trim(lower(text)), '\s+') ws,
+        |        string_split_regex(trim(lower(text)), '\\s+') ws,
         |        CAST(len(text) - len(replace(text, '#', '')) AS BIGINT)
         |          + CAST((len(text) - len(replace(text, '...', ''))) // 3 AS BIGINT) AS nsym
         |      FROM seeded),
         |c AS (SELECT doc_id,
         |        CAST(len(w) AS BIGINT) nw,
-        |        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS BIGINT) chars,
-        |        nsym,
-        |        CAST(len(lines) AS BIGINT) nlines,
-        |        CAST(len(list_filter(lines, l -> starts_with(ltrim(l), '- ')
-        |          OR starts_with(ltrim(l), '* '))) AS BIGINT) nbullet,
-        |        CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS BIGINT) nell,
-        |        CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) nalpha,
-        |        CAST(len(ws) AS BIGINT) nws,
-        |        CAST(len(list_intersect(list_distinct(w),
-        |          ['the','be','to','of','and','that','have','with'])) AS BIGINT) stop_hits
+        |$gopherCountsSql
         |      FROM m),
         |r AS (SELECT doc_id, nw,
         |        CASE WHEN nw > 0 THEN CAST(chars AS DOUBLE) / CAST(nw AS DOUBLE) ELSE 0.0 END mean_raw,
@@ -5216,23 +5259,16 @@ object SparkEntry {
         |FROM n, UNNEST(generate_series(0, ((nt-1)//24)*24, 24)) AS g(i)
         |ORDER BY doc_id, chunk_idx""".stripMargin,
     "t_curate" ->
-      """WITH w AS (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
+      s"""WITH w AS (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
         |s AS (SELECT doc_id, text, w,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is'))) AS BIGINT) s_en,
-        |        CAST(len(list_filter(w, x -> x IN ('el','la','de','los','es'))) AS BIGINT) s_es,
-        |        CAST(len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS BIGINT) s_de,
-        |        CAST(len(list_filter(w, x -> x IN ('le','la','les','des','est'))) AS BIGINT) s_fr
+        |$langScoresSql
         |      FROM w),
         |l AS (SELECT doc_id, text, w,
-        |        CASE WHEN s_en > 0 AND s_en = best THEN 'en'
-        |             WHEN s_es > 0 AND s_es = best THEN 'es'
-        |             WHEN s_de > 0 AND s_de = best THEN 'de'
-        |             WHEN s_fr > 0 AND s_fr = best THEN 'fr'
-        |             ELSE 'und' END AS lang_pred
+        |$langPredSql
         |      FROM (SELECT *, greatest(s_en, s_es, s_de, s_fr) best FROM s)),
         |m AS (SELECT doc_id, text, lang_pred,
         |        CAST(len(w) AS BIGINT) n_tokens,
-        |        CAST(len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS DOUBLE)
+        |        CAST(len(regexp_replace(text, '[a-zA-Z0-9\\s]+', '', 'g')) AS DOUBLE)
         |          / CAST(len(text) AS DOUBLE) punct_raw,
         |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
         |          'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
@@ -5332,26 +5368,8 @@ object SparkEntry {
         |FROM ps JOIN df USING (term) WHERE n_docs >= 3
         |ORDER BY term, segment""".stripMargin,
     "t_bm25_topk" ->
-      """WITH base AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM base),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN ('dup', 'vector', 'merge')
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats)
+      s"""WITH ${tokenListsSql("base")},
+        |${bm25ChainSql("base", "('dup', 'vector', 'merge')", "doc_id")}
         |SELECT doc_id, CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm,
         |       COUNT(*) AS n_terms
         |FROM scored GROUP BY doc_id
@@ -5365,28 +5383,10 @@ object SparkEntry {
         |SELECT doc_id, CAST(n_occ AS BIGINT) AS n_occ
         |FROM hits ORDER BY n_occ DESC, doc_id LIMIT 30""".stripMargin,
     "t_bm25_batch" ->
-      """WITH q(query_id, term) AS (VALUES (1, 'dup'), (1, 'vector'),
+      s"""WITH q(query_id, term) AS (VALUES (1, 'dup'), (1, 'vector'),
         |    (2, 'merge'), (2, 'join'), (3, 'table'), (3, 'hash')),
-        |base AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM base),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
+        |${tokenListsSql("base")},
+        |${bm25ChainSql("base", "(SELECT term FROM q)", "doc_id, tf.term")},
         |perq AS (SELECT q.query_id, doc_id,
         |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm,
         |           COUNT(*) AS n_terms
@@ -5399,61 +5399,8 @@ object SparkEntry {
         |       n_terms, rnk
         |FROM ranked WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
     "t_hybrid_search" ->
-      """WITH toks AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |q AS (SELECT doc_id AS query_id,
-        |        unnest(list_distinct(ts[1:6])) AS term
-        |      FROM toks WHERE doc_id < 5),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
-        |perq AS (SELECT q.query_id, doc_id,
-        |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
-        |         FROM scored JOIN q ON scored.term = q.term
-        |         GROUP BY 1, 2),
-        |sranked AS (SELECT query_id, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
-        |  FROM perq),
-        |sparse AS (SELECT query_id, doc_id, rnk FROM sranked WHERE rnk <= 20),
-        |v AS (SELECT vec_id, list_transform(embedding,
-        |        x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-        |      FROM embeddings),
-        |qv AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 5),
-        |ds AS (SELECT qv.query_id, c.vec_id corpus_id,
-        |        CAST(list_dot_product(qv.qv, c.qv) AS DOUBLE) /
-        |        (sqrt(CAST(list_dot_product(qv.qv, qv.qv) AS DOUBLE)) *
-        |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
-        |      FROM qv JOIN v c ON c.vec_id <> qv.query_id),
-        |dr AS (SELECT query_id, corpus_id,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
-        |      FROM ds),
-        |dense AS (SELECT query_id, corpus_id AS doc_id, rnk
-        |          FROM dr WHERE rnk <= 20),
-        |arms AS (SELECT * FROM sparse UNION ALL SELECT * FROM dense),
-        |fused AS (SELECT query_id, doc_id,
-        |            CAST(SUM(1000000000 // (60 + rnk)) AS BIGINT) AS rrf_u,
-        |            CAST(COUNT(*) AS BIGINT) AS n_arms
-        |          FROM arms GROUP BY 1, 2),
-        |franked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |              ORDER BY rrf_u DESC, doc_id) AS INT) AS rnk
-        |            FROM fused)
+      s"""$bm25RunSql,
+        |${rrfFusedSql(",\n            CAST(COUNT(*) AS BIGINT) AS n_arms")}
         |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, rrf_u,
         |       n_arms, rnk
         |FROM franked WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
@@ -5463,43 +5410,7 @@ object SparkEntry {
     // formula covers both paths
     "t_prf_indexed" -> prfExpandOracleSql,
     "t_eval_retrieval" -> (
-      """WITH toks AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |q AS (SELECT doc_id AS query_id,
-        |        unnest(list_distinct(ts[1:6])) AS term
-        |      FROM toks WHERE doc_id < 5),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
-        |perq AS (SELECT q.query_id, doc_id,
-        |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
-        |         FROM scored JOIN q ON scored.term = q.term
-        |         GROUP BY 1, 2),
-        |run AS (SELECT query_id, doc_id, rnk FROM (
-        |          SELECT query_id, doc_id,
-        |            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |              ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
-        |          FROM perq) WHERE rnk <= 20),
-        |qrels AS (SELECT qd.doc_id AS query_id, d.doc_id
-        |          FROM documents qd JOIN documents d
-        |            ON d.lang = qd.lang AND d.source = qd.source
-        |               AND d.doc_id <> qd.doc_id
-        |          WHERE qd.doc_id < 5),
+      s"""$judgedRunSql,
         |nrel AS (SELECT query_id, COUNT(*) AS n_rel FROM qrels GROUP BY 1),
         |h AS (SELECT query_id, COUNT(*) AS hits, MIN(rnk) AS first1,
         |        SUM((""".stripMargin +
@@ -5518,43 +5429,7 @@ object SparkEntry {
         |FROM nrel LEFT JOIN h USING (query_id)
         |ORDER BY query_id""".stripMargin),
     "t_hard_negatives" ->
-      """WITH toks AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |q AS (SELECT doc_id AS query_id,
-        |        unnest(list_distinct(ts[1:6])) AS term
-        |      FROM toks WHERE doc_id < 5),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
-        |perq AS (SELECT q.query_id, doc_id,
-        |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
-        |         FROM scored JOIN q ON scored.term = q.term
-        |         GROUP BY 1, 2),
-        |run AS (SELECT query_id, doc_id, rnk FROM (
-        |          SELECT query_id, doc_id,
-        |            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |              ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
-        |          FROM perq) WHERE rnk <= 20),
-        |qrels AS (SELECT qd.doc_id AS query_id, d.doc_id
-        |          FROM documents qd JOIN documents d
-        |            ON d.lang = qd.lang AND d.source = qd.source
-        |               AND d.doc_id <> qd.doc_id
-        |          WHERE qd.doc_id < 5),
+      s"""$judgedRunSql,
         |negs AS (SELECT query_id, doc_id, rnk,
         |           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
         |             ORDER BY rnk, doc_id) AS INT) AS neg_rank
@@ -5648,33 +5523,7 @@ object SparkEntry {
         |    FROM fk2)
         |ORDER BY "check", target""".stripMargin,
     "t_fair_interleave" ->
-      """WITH toks AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |q AS (SELECT doc_id AS query_id,
-        |        unnest(list_distinct(ts[1:6])) AS term
-        |      FROM toks WHERE doc_id < 5),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
-        |perq AS (SELECT q.query_id, doc_id,
-        |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
-        |         FROM scored JOIN q ON scored.term = q.term
-        |         GROUP BY 1, 2),
+      s"""$bm25RunSql,
         |run AS (SELECT query_id, r.doc_id, rnk, d.source FROM (
         |          SELECT query_id, doc_id,
         |            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
@@ -5690,166 +5539,33 @@ object SparkEntry {
         |         ORDER BY slot, rnk, doc_id) AS INT) AS fair_rank
         |FROM slotted ORDER BY query_id, fair_rank""".stripMargin,
     "pipe_search_tier" ->
-      """WITH toks AS (SELECT doc_id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |       FROM documents),
-        |q AS (SELECT doc_id AS query_id,
-        |        unnest(list_distinct(ts[1:6])) AS term
-        |      FROM toks WHERE doc_id < 5),
-        |b2 AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS dl, ts FROM toks),
-        |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS tot_tokens FROM b2),
-        |tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf
-        |       FROM (SELECT doc_id, dl, unnest(ts) AS term FROM b2)
-        |       WHERE term IN (SELECT term FROM q)
-        |       GROUP BY 1, 2, 3),
-        |dfq AS (SELECT term, COUNT(*) AS df_t FROM tf GROUP BY 1),
-        |scored AS (SELECT doc_id, tf.term,
-        |    CAST(round(
-        |      (CAST(n_docs AS DOUBLE) - CAST(df_t AS DOUBLE) + 0.5)
-        |        / (CAST(df_t AS DOUBLE) + 0.5)
-        |      * (CAST(tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE)
-        |             / (CAST(tot_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))))
-        |      * 1000000.0, 0) AS BIGINT) AS ts_ppm
-        |  FROM tf JOIN dfq USING (term) CROSS JOIN stats),
-        |perq AS (SELECT q.query_id, doc_id,
-        |           CAST(SUM(ts_ppm) AS BIGINT) AS score_ppm
-        |         FROM scored JOIN q ON scored.term = q.term
-        |         GROUP BY 1, 2),
-        |sranked AS (SELECT query_id, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY score_ppm DESC, doc_id) AS INT) AS rnk
-        |  FROM perq),
-        |sparse AS (SELECT query_id, doc_id, rnk FROM sranked WHERE rnk <= 20),
-        |v AS (SELECT vec_id, list_transform(embedding,
-        |        x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-        |      FROM embeddings),
-        |qv AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 5),
-        |ds AS (SELECT qv.query_id, c.vec_id corpus_id,
-        |        CAST(list_dot_product(qv.qv, c.qv) AS DOUBLE) /
-        |        (sqrt(CAST(list_dot_product(qv.qv, qv.qv) AS DOUBLE)) *
-        |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
-        |      FROM qv JOIN v c ON c.vec_id <> qv.query_id),
-        |dr AS (SELECT query_id, corpus_id,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
-        |      FROM ds),
-        |dense AS (SELECT query_id, corpus_id AS doc_id, rnk
-        |          FROM dr WHERE rnk <= 20),
-        |arms AS (SELECT * FROM sparse UNION ALL SELECT * FROM dense),
-        |fused AS (SELECT query_id, doc_id,
-        |            CAST(SUM(1000000000 // (60 + rnk)) AS BIGINT) AS rrf_u
-        |          FROM arms GROUP BY 1, 2),
-        |franked AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |              ORDER BY rrf_u DESC, doc_id) AS INT) AS rnk
-        |            FROM fused),
+      s"""$bm25RunSql,
+        |${rrfFusedSql("")},
         |cand AS (SELECT query_id, doc_id,
         |           CAST((11 - rnk) * 100000 AS BIGINT) AS rel_u
         |         FROM franked WHERE rnk <= 10),
-        |cv AS (SELECT c.query_id, c.doc_id, c.rel_u, v.qv
-        |       FROM cand c JOIN v ON v.vec_id = c.doc_id),
-        |sim AS (SELECT a.query_id, a.doc_id d1, b.doc_id d2,
-        |          CAST(floor(CAST(list_dot_product(a.qv, b.qv) AS DOUBLE) /
-        |            (sqrt(CAST(list_dot_product(a.qv, a.qv) AS DOUBLE)) *
-        |             sqrt(CAST(list_dot_product(b.qv, b.qv) AS DOUBLE)))
-        |            * 1000000 + 0.5) AS BIGINT) cos_u
-        |        FROM cv a JOIN cv b
-        |          ON a.query_id = b.query_id AND a.doc_id <> b.doc_id),
-        |p1 AS (SELECT query_id, doc_id, rel_u, mmr_u, 1 AS pick FROM (
-        |         SELECT query_id, doc_id, rel_u,
-        |           (70 * rel_u) // 100 AS mmr_u,
-        |           ROW_NUMBER() OVER (PARTITION BY query_id
-        |             ORDER BY (70 * rel_u) // 100 DESC, doc_id) rn
-        |         FROM cv) WHERE rn = 1),
-        |m2 AS (SELECT c.query_id, c.doc_id, c.rel_u,
-        |         (70 * c.rel_u - 30 * s.cos_u) // 100 AS mmr_u
-        |       FROM cv c
-        |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
-        |       JOIN sim s ON s.query_id = c.query_id
-        |         AND s.d1 = c.doc_id AND s.d2 = p1.doc_id),
-        |p2 AS (SELECT query_id, doc_id, rel_u, mmr_u, 2 AS pick FROM (
-        |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |           ORDER BY mmr_u DESC, doc_id) rn FROM m2) WHERE rn = 1),
-        |m3 AS (SELECT c.query_id, c.doc_id, c.rel_u,
-        |         (70 * c.rel_u - 30 * greatest(s1.cos_u, s2.cos_u)) // 100
-        |           AS mmr_u
-        |       FROM cv c
-        |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
-        |       JOIN p2 ON p2.query_id = c.query_id AND c.doc_id <> p2.doc_id
-        |       JOIN sim s1 ON s1.query_id = c.query_id
-        |         AND s1.d1 = c.doc_id AND s1.d2 = p1.doc_id
-        |       JOIN sim s2 ON s2.query_id = c.query_id
-        |         AND s2.d1 = c.doc_id AND s2.d2 = p2.doc_id),
-        |p3 AS (SELECT query_id, doc_id, rel_u, mmr_u, 3 AS pick FROM (
-        |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |           ORDER BY mmr_u DESC, doc_id) rn FROM m3) WHERE rn = 1),
+        |$mmrPicksSql,
         |pp AS (SELECT * FROM p1 UNION ALL SELECT * FROM p2
         |       UNION ALL SELECT * FROM p3)
         |SELECT CAST(pp.query_id AS BIGINT) AS query_id, pp.doc_id, pick,
         |       CAST(mmr_u AS BIGINT) AS mmr_u, lang, source, n_chars
         |FROM pp JOIN documents d ON d.doc_id = pp.doc_id
         |ORDER BY query_id, pick""".stripMargin,
-    "t_mmr_rerank" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding,
-        |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-        |           FROM embeddings),
-        |q AS (SELECT vec_id query_id, qv FROM v WHERE vec_id < 3),
-        |s AS (SELECT q.query_id, c.vec_id corpus_id,
-        |        CAST(list_dot_product(q.qv, c.qv) AS DOUBLE) /
-        |        (sqrt(CAST(list_dot_product(q.qv, q.qv) AS DOUBLE)) *
-        |         sqrt(CAST(list_dot_product(c.qv, c.qv) AS DOUBLE))) AS cosine
-        |      FROM q JOIN v c ON c.vec_id <> q.query_id),
-        |r AS (SELECT query_id, corpus_id,
+    "t_mmr_rerank" -> (quantizedVecsSql + bruteCosineSql(3) +
+      s"""r AS (SELECT query_id, corpus_id,
         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
         |          ORDER BY cosine DESC, corpus_id) AS INT) rnk
         |      FROM s),
         |cand AS (SELECT query_id, corpus_id AS doc_id,
         |           CAST((11 - rnk) * 100000 AS BIGINT) AS rel_u
         |         FROM r WHERE rnk <= 10),
-        |cv AS (SELECT c.query_id, c.doc_id, c.rel_u, v.qv
-        |       FROM cand c JOIN v ON v.vec_id = c.doc_id),
-        |sim AS (SELECT a.query_id, a.doc_id d1, b.doc_id d2,
-        |          CAST(floor(CAST(list_dot_product(a.qv, b.qv) AS DOUBLE) /
-        |            (sqrt(CAST(list_dot_product(a.qv, a.qv) AS DOUBLE)) *
-        |             sqrt(CAST(list_dot_product(b.qv, b.qv) AS DOUBLE)))
-        |            * 1000000 + 0.5) AS BIGINT) cos_u
-        |        FROM cv a JOIN cv b
-        |          ON a.query_id = b.query_id AND a.doc_id <> b.doc_id),
-        |p1 AS (SELECT query_id, doc_id, rel_u, mmr_u, 1 AS pick FROM (
-        |         SELECT query_id, doc_id, rel_u,
-        |           (70 * rel_u) // 100 AS mmr_u,
-        |           ROW_NUMBER() OVER (PARTITION BY query_id
-        |             ORDER BY (70 * rel_u) // 100 DESC, doc_id) rn
-        |         FROM cv) WHERE rn = 1),
-        |m2 AS (SELECT c.query_id, c.doc_id, c.rel_u,
-        |         (70 * c.rel_u - 30 * s.cos_u) // 100 AS mmr_u
-        |       FROM cv c
-        |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
-        |       JOIN sim s ON s.query_id = c.query_id
-        |         AND s.d1 = c.doc_id AND s.d2 = p1.doc_id),
-        |p2 AS (SELECT query_id, doc_id, rel_u, mmr_u, 2 AS pick FROM (
-        |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |           ORDER BY mmr_u DESC, doc_id) rn FROM m2) WHERE rn = 1),
-        |m3 AS (SELECT c.query_id, c.doc_id, c.rel_u,
-        |         (70 * c.rel_u - 30 * greatest(s1.cos_u, s2.cos_u)) // 100
-        |           AS mmr_u
-        |       FROM cv c
-        |       JOIN p1 ON p1.query_id = c.query_id AND c.doc_id <> p1.doc_id
-        |       JOIN p2 ON p2.query_id = c.query_id AND c.doc_id <> p2.doc_id
-        |       JOIN sim s1 ON s1.query_id = c.query_id
-        |         AND s1.d1 = c.doc_id AND s1.d2 = p1.doc_id
-        |       JOIN sim s2 ON s2.query_id = c.query_id
-        |         AND s2.d1 = c.doc_id AND s2.d2 = p2.doc_id),
-        |p3 AS (SELECT query_id, doc_id, rel_u, mmr_u, 3 AS pick FROM (
-        |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |           ORDER BY mmr_u DESC, doc_id) rn FROM m3) WHERE rn = 1)
+        |$mmrPicksSql
         |SELECT CAST(query_id AS BIGINT) query_id, doc_id,
         |       CAST(rel_u AS BIGINT) rel_u, CAST(mmr_u AS BIGINT) mmr_u,
         |       pick
         |FROM (SELECT * FROM p1 UNION ALL SELECT * FROM p2
         |      UNION ALL SELECT * FROM p3)
-        |ORDER BY query_id, pick""".stripMargin,
+        |ORDER BY query_id, pick""".stripMargin),
     "t_kwic" ->
       """WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
         |s AS (SELECT doc_id, i
@@ -5913,38 +5629,7 @@ object SparkEntry {
     "t_scd2_asof" ->
       """SELECT doc_id, md5(text) AS h FROM documents
         |WHERE doc_id % 11 <> 3 ORDER BY doc_id""".stripMargin,
-    "t_cdc_apply" ->
-      """WITH log AS (
-        |  SELECT doc_id, 1 AS seq, 'upsert' AS op,
-        |         'rev1: ' || text AS text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 2, 'delete', NULL, NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 2, 'upsert', 'rev2: ' || text, lang, source,
-        |         n_chars
-        |  FROM documents WHERE doc_id % 10 = 5
-        |  UNION ALL
-        |  SELECT doc_id, 3, 'delete', NULL, NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 7 = 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000000, 1, 'upsert',
-        |         'cdc insert ' || CAST(doc_id AS VARCHAR), 'und', 'cdc',
-        |         CAST(length('cdc insert ' || CAST(doc_id AS VARCHAR))
-        |           AS BIGINT)
-        |  FROM documents WHERE doc_id % 11 = 0),
-        |latest AS (SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY seq DESC) AS rn FROM log) WHERE rn = 1)
-        |SELECT doc_id, md5(text) AS h, lang, source, n_chars
-        |FROM (
-        |  SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-        |  FROM documents d ANTI JOIN latest l ON d.doc_id = l.doc_id
-        |  UNION ALL
-        |  SELECT doc_id, text, lang, source, n_chars
-        |  FROM latest WHERE op = 'upsert')
-        |ORDER BY doc_id""".stripMargin,
+    "t_cdc_apply" -> cdcApplyOracleSql,
     "t_corpus_diff_sum" ->
       """WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 3),
         |b AS (SELECT doc_id,
@@ -5965,31 +5650,10 @@ object SparkEntry {
     // metrics over snapshot b from scratch; the Spark side must reach
     // the identical table via carry-over + delta recompute
     "pipe_incr_quality" ->
-      """WITH b AS (SELECT doc_id,
+      ("""WITH b AS (SELECT doc_id,
         |        CASE WHEN doc_id % 17 = 2 THEN text || ' rev2' ELSE text END AS text
         |      FROM documents WHERE doc_id % 13 <> 5),
-        |w AS (SELECT doc_id, text, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM b),
-        |m AS (SELECT doc_id,
-        |        CAST(len(text) AS BIGINT) n_chars,
-        |        CAST(len(w) AS BIGINT) n_tokens,
-        |        CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) n_tokens_ws,
-        |        CAST(COALESCE(list_sum(list_transform(w, x -> CAST(ceil(len(x) / 4.0) AS BIGINT))), 0)
-        |          + len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS BIGINT) n_tokens_bpe,
-        |        CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS DOUBLE)
-        |          / CAST(len(w) AS DOUBLE) mean_raw,
-        |        CAST(len(regexp_replace(text, '[a-zA-Z0-9\s]+', '', 'g')) AS DOUBLE)
-        |          / CAST(len(text) AS DOUBLE) punct_raw,
-        |        CAST(len(list_filter(w, x -> x IN ('the','a','of','and','is','el','la','de','los','es',
-        |          'der','die','das','und','ist','le','les','des','est'))) AS DOUBLE)
-        |          / CAST(len(w) AS DOUBLE) stop_raw,
-        |        least(CAST(len(w) AS DOUBLE) / 20.0, 1.0) len_score
-        |      FROM w)
-        |SELECT doc_id, n_chars, n_tokens, n_tokens_ws, n_tokens_bpe,
-        |       round(mean_raw, 6) AS mean_token_len,
-        |       round(punct_raw, 6) AS punct_ratio,
-        |       round(stop_raw, 6) AS stopword_ratio,
-        |       round(len_score * (1.0 - punct_raw) * (0.5 + least(stop_raw * 5.0, 0.5)), 6) AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |""".stripMargin + textQualitySql("b")),
     "t_vocab_topk" ->
       """WITH tok AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) token FROM documents),
         |c AS (SELECT token, COUNT(*) n FROM tok GROUP BY 1),
@@ -6081,29 +5745,13 @@ object SparkEntry {
         |         CAST(n_tokens * total_tokens AS DOUBLE) AS avg_token_prob
         |FROM perdoc, tot ORDER BY doc_id""".stripMargin,
     "t_bigram_score" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
-        |g AS (SELECT doc_id, array_to_string(w[i:i+1], ' ') AS bg
-        |      FROM t, UNNEST(generate_series(1, greatest(len(w)-1, 0))) AS gs(i)),
-        |tf AS (SELECT doc_id, bg, COUNT(*) tf FROM g GROUP BY 1, 2),
-        |cnt AS (SELECT bg, CAST(SUM(tf) AS BIGINT) cnt FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) total_bigrams FROM cnt),
-        |perdoc AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) n_bigrams,
-        |             CAST(SUM(tf * cnt) AS BIGINT) sum_cnt
-        |           FROM tf JOIN cnt USING (bg) GROUP BY 1)
+      s"""$bigramCountsSql
         |SELECT doc_id, n_bigrams,
         |       CAST(sum_cnt AS DOUBLE) /
         |         CAST(n_bigrams * total_bigrams AS DOUBLE) AS avg_bigram_prob
         |FROM perdoc, tot ORDER BY doc_id""".stripMargin,
     "t_ccnet_buckets" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
-        |g AS (SELECT doc_id, array_to_string(w[i:i+1], ' ') AS bg
-        |      FROM t, UNNEST(generate_series(1, greatest(len(w)-1, 0))) AS gs(i)),
-        |tf AS (SELECT doc_id, bg, COUNT(*) tf FROM g GROUP BY 1, 2),
-        |cnt AS (SELECT bg, CAST(SUM(tf) AS BIGINT) cnt FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) total_bigrams FROM cnt),
-        |perdoc AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) n_bigrams,
-        |             CAST(SUM(tf * cnt) AS BIGINT) sum_cnt
-        |           FROM tf JOIN cnt USING (bg) GROUP BY 1),
+      s"""$bigramCountsSql,
         |scored AS (SELECT doc_id, n_bigrams,
         |             CAST(sum_cnt AS DOUBLE) /
         |               CAST(n_bigrams * total_bigrams AS DOUBLE) AS avg_bigram_prob
@@ -6164,11 +5812,8 @@ object SparkEntry {
         |       CAST(least(octet_length(encode(text)), 64) AS BIGINT) AS width
         |FROM documents ORDER BY media_id""".stripMargin,
     "e_ann_bruteforce" -> annTop5Sql,
-    "e_int8_topk" ->
-      """WITH v AS (SELECT vec_id, list_transform(embedding,
-        |             x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) qv
-        |           FROM embeddings),
-        |w AS (SELECT vec_id, qv,
+    "e_int8_topk" -> (quantizedVecsSql +
+      """w AS (SELECT vec_id, qv,
         |        list_aggregate(list_transform(qv, x -> abs(x)), 'max') s
         |      FROM v),
         |z AS (SELECT vec_id,
@@ -6185,12 +5830,7 @@ object SparkEntry {
         |         (sqrt(CAST(list_dot_product(q.q8, q.q8) AS DOUBLE)) *
         |          sqrt(CAST(list_dot_product(c.q8, c.q8) AS DOUBLE))) AS cosine_q
         |       FROM q JOIN z c ON c.vec_id <> q.query_id),
-        |r AS (SELECT query_id, corpus_id, cosine_q,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |          ORDER BY cosine_q DESC, corpus_id) AS INT) rnk
-        |      FROM sc)
-        |SELECT query_id, corpus_id, cosine_q, rnk
-        |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
+        |""".stripMargin + topKTailSql("cosine_q", "cosine_q DESC", "sc", 5)),
     // exact-mode ANN variants produce IDENTICAL results to brute force
     // by construction (full probe coverage) — same oracle
     "e_ivf_exact" -> annTop5Sql,
@@ -6201,79 +5841,24 @@ object SparkEntry {
       probeHamming = 1),
     // recall evaluator: composes the two component oracles as CTEs —
     // per-query |approx ∩ exact| / |exact| of the 1-probe LSH path
-    "e_recall_lsh" ->
-      s"""WITH exact AS (
-         |${annTop5Sql}
-         |), approx AS (
-         |${lshTopKOracleSql(nPlanes = 4, dim = 64, k = 5,
-             probeHamming = 1)}
-         |),
-         |sizes AS (SELECT query_id, count(*) AS n_exact
-         |          FROM exact GROUP BY 1),
-         |hits AS (SELECT e.query_id, count(*) AS n_hit
-         |         FROM exact e JOIN approx a
-         |           ON e.query_id = a.query_id
-         |          AND e.corpus_id = a.corpus_id
-         |         GROUP BY 1)
-         |SELECT s.query_id,
-         |       CAST(s.n_exact AS BIGINT) AS n_exact,
-         |       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-         |         / CAST(s.n_exact AS DOUBLE) AS recall
-         |FROM sizes s LEFT JOIN hits h USING (query_id)
-         |ORDER BY s.query_id""".stripMargin,
+    "e_recall_lsh" -> recallOracleSql(annTop5Sql,
+      lshTopKOracleSql(nPlanes = 4, dim = 64, k = 5, probeHamming = 1)),
     "e_ivf_topk" -> ivfTopKOracleSql(nLists = 16, iters = 10, nProbe = 4,
       k = 5, dim = 64, sampleCap = 4096),
     "samp_cluster_balanced" -> clusterBalancedOracleSql(nLists = 16,
       iters = 10, dim = 64, sampleCap = 4096, perCell = 20L, seed = "cbal"),
     // IVF recall evaluator: the same CTE composition as e_recall_lsh,
     // with the approx side the replayed-k-means IVF oracle
-    "e_recall_ivf" ->
-      s"""WITH exact AS (
-         |${annTop5Sql}
-         |), approx AS (
-         |${ivfTopKOracleSql(nLists = 16, iters = 10, nProbe = 4,
-             k = 5, dim = 64, sampleCap = 4096)}
-         |),
-         |sizes AS (SELECT query_id, count(*) AS n_exact
-         |          FROM exact GROUP BY 1),
-         |hits AS (SELECT e.query_id, count(*) AS n_hit
-         |         FROM exact e JOIN approx a
-         |           ON e.query_id = a.query_id
-         |          AND e.corpus_id = a.corpus_id
-         |         GROUP BY 1)
-         |SELECT s.query_id,
-         |       CAST(s.n_exact AS BIGINT) AS n_exact,
-         |       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-         |         / CAST(s.n_exact AS DOUBLE) AS recall
-         |FROM sizes s LEFT JOIN hits h USING (query_id)
-         |ORDER BY s.query_id""".stripMargin,
+    "e_recall_ivf" -> recallOracleSql(annTop5Sql,
+      ivfTopKOracleSql(nLists = 16, iters = 10, nProbe = 4,
+        k = 5, dim = 64, sampleCap = 4096)),
     "e_pq_topk" -> pqTopKOracleSql(m = 4, kCode = 16, iters = 10, k = 5,
       dim = 64, sampleCap = 4096),
     "e_ivfpq_topk" -> ivfPqTopKOracleSql(nLists = 16, nProbe = 4, m = 4,
       kCode = 16, iters = 10, k = 5, dim = 64, sampleCap = 4096),
-    "e_recall_ivfpq" ->
-      s"""WITH exact AS (
-         |${l2Top5Sql}
-         |), approx AS (
-         |${ivfPqTopKOracleSql(nLists = 16, nProbe = 4, m = 4, kCode = 16,
-             iters = 10, k = 5, dim = 64, sampleCap = 4096)}
-         |),
-         |sizes AS (SELECT query_id, count(*) AS n_exact
-         |          FROM exact GROUP BY 1),
-         |hits AS (SELECT e.query_id, count(*) AS n_hit
-         |         FROM exact e JOIN approx a
-         |           ON e.query_id = a.query_id
-         |          AND e.corpus_id = a.corpus_id
-         |         GROUP BY 1)
-         |SELECT s.query_id,
-         |       CAST(s.n_exact AS BIGINT) AS n_exact,
-         |       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-         |         / CAST(s.n_exact AS DOUBLE) AS recall
-         |FROM sizes s LEFT JOIN hits h USING (query_id)
-         |ORDER BY s.query_id""".stripMargin,
+    "e_recall_ivfpq" -> recallOracleSql(l2Top5Sql,
+      ivfPqTopKOracleSql(nLists = 16, nProbe = 4, m = 4, kCode = 16,
+        iters = 10, k = 5, dim = 64, sampleCap = 4096)),
     "e_pq_rerank" ->
       s"""WITH short AS (
          |${pqTopKOracleSql(m = 4, kCode = 16, iters = 10, k = 50,
@@ -6295,37 +5880,11 @@ object SparkEntry {
          |       FROM s2)
          |SELECT query_id, corpus_id, dist, rnk
          |FROM r2 WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-    "e_recall_pq" ->
-      s"""WITH exact AS (
-         |${l2Top5Sql}
-         |), approx AS (
-         |${pqTopKOracleSql(m = 4, kCode = 16, iters = 10, k = 5,
-             dim = 64, sampleCap = 4096)}
-         |),
-         |sizes AS (SELECT query_id, count(*) AS n_exact
-         |          FROM exact GROUP BY 1),
-         |hits AS (SELECT e.query_id, count(*) AS n_hit
-         |         FROM exact e JOIN approx a
-         |           ON e.query_id = a.query_id
-         |          AND e.corpus_id = a.corpus_id
-         |         GROUP BY 1)
-         |SELECT s.query_id,
-         |       CAST(s.n_exact AS BIGINT) AS n_exact,
-         |       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |       CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-         |         / CAST(s.n_exact AS DOUBLE) AS recall
-         |FROM sizes s LEFT JOIN hits h USING (query_id)
-         |ORDER BY s.query_id""".stripMargin,
+    "e_recall_pq" -> recallOracleSql(l2Top5Sql,
+      pqTopKOracleSql(m = 4, kCode = 16, iters = 10, k = 5,
+        dim = 64, sampleCap = 4096)),
     "e_cosine_neardup" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) emb
-        |           FROM embeddings
-        |           UNION ALL
-        |           SELECT vec_id + 100000,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE) + 0.005)
-        |           FROM embeddings),
-        |v AS (SELECT vec_id, list_transform(emb,
-        |        x -> CAST(floor(x * 10000) AS BIGINT)) qv FROM u)
+      s"""$perturbedVecsSql
         |SELECT a.vec_id a_id, b.vec_id b_id,
         |       CAST(list_dot_product(a.qv, b.qv) AS DOUBLE) /
         |       (sqrt(CAST(list_dot_product(a.qv, a.qv) AS DOUBLE)) *
@@ -6336,15 +5895,7 @@ object SparkEntry {
         |       sqrt(CAST(list_dot_product(b.qv, b.qv) AS DOUBLE))) >= 0.99
         |ORDER BY a_id, b_id""".stripMargin,
     "e_semantic_dedup" ->
-      """WITH u AS (SELECT vec_id,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) emb
-        |           FROM embeddings
-        |           UNION ALL
-        |           SELECT vec_id + 100000,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE) + 0.005)
-        |           FROM embeddings),
-        |v AS (SELECT vec_id, list_transform(emb,
-        |        x -> CAST(floor(x * 10000) AS BIGINT)) qv FROM u)
+      s"""$perturbedVecsSql
         |SELECT vec_id FROM v
         |WHERE vec_id NOT IN (
         |  SELECT b.vec_id FROM v a JOIN v b ON a.vec_id < b.vec_id
@@ -6402,22 +5953,8 @@ object SparkEntry {
         |       COUNT(*) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1 ORDER BY status""".stripMargin,
-    "t_domain_curation" ->
-      """WITH u AS (SELECT doc_id, lang, text,
-        |    'w' || CAST(doc_id % 3 AS VARCHAR) || '.src'
-        |        || CAST(doc_id % 40 AS VARCHAR) || '.'
-        |        || (CASE doc_id % 5 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
-        |            WHEN 2 THEN 'net' WHEN 3 THEN 'co.uk'
-        |            ELSE 'ac.jp' END) AS host
-        |  FROM documents),
-        |d AS (SELECT *,
-        |    CASE WHEN len(string_split(host, '.')) >= 3
-        |              AND string_split(host, '.')[-2] IN
-        |                ('co','com','net','org','ac','gov','edu')
-        |         THEN array_to_string(string_split(host, '.')[-3:], '.')
-        |         WHEN len(string_split(host, '.')) >= 2
-        |         THEN array_to_string(string_split(host, '.')[-2:], '.')
-        |         ELSE host END AS domain,
+    "t_domain_curation" -> (domainsSql(", text") +
+      """,
         |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ntok
         |  FROM u)
         |SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -6428,30 +5965,16 @@ object SparkEntry {
         |       (COUNT(*) >= 8 AND
         |        round(CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
         |          AS DOUBLE) / COUNT(*), 6) >= 0.2) AS keep
-        |FROM d GROUP BY domain ORDER BY domain""".stripMargin,
-    "t_domain_filter" ->
-      """WITH u AS (SELECT doc_id, lang,
-        |    'w' || CAST(doc_id % 3 AS VARCHAR) || '.src'
-        |        || CAST(doc_id % 40 AS VARCHAR) || '.'
-        |        || (CASE doc_id % 5 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
-        |            WHEN 2 THEN 'net' WHEN 3 THEN 'co.uk'
-        |            ELSE 'ac.jp' END) AS host
-        |  FROM documents),
-        |d AS (SELECT *,
-        |    CASE WHEN len(string_split(host, '.')) >= 3
-        |              AND string_split(host, '.')[-2] IN
-        |                ('co','com','net','org','ac','gov','edu')
-        |         THEN array_to_string(string_split(host, '.')[-3:], '.')
-        |         WHEN len(string_split(host, '.')) >= 2
-        |         THEN array_to_string(string_split(host, '.')[-2:], '.')
-        |         ELSE host END AS domain
+        |FROM d GROUP BY domain ORDER BY domain""".stripMargin),
+    "t_domain_filter" -> (domainsSql("") +
+      """
         |  FROM u),
         |card AS (SELECT domain FROM d GROUP BY domain
         |         HAVING COUNT(*) >= 8 AND
         |           round(CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
         |             AS DOUBLE) / COUNT(*), 6) >= 0.2)
         |SELECT doc_id FROM d SEMI JOIN card USING (domain)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     "g_pagerank" -> pageRankOracleSql(8, seeded = false),
     "g_pagerank_seeded" -> pageRankOracleSql(8, seeded = true),
     "mv_pagerank" -> pageRankOracleSql(8, seeded = false),
@@ -6488,55 +6011,9 @@ object SparkEntry {
     // the batch op over the concatenated stream", so each oracle IS
     // the batch computation over the full table — the replayed-ingest
     // detour on the Spark side must be invisible in the answer ----
-    "mv_pattern" -> // = a4_predict_pattern's batch semantics
-      """WITH daily AS (
-        |  SELECT user_id, CAST(dayofweek(ts) AS BIGINT) AS dow,
-        |         CAST(hour(ts) AS BIGINT) AS hr, CAST(ts AS DATE) AS d,
-        |         SUM(CAST(value AS DECIMAL(28,2))) AS hourly_total
-        |  FROM events GROUP BY 1, 2, 3, 4)
-        |SELECT user_id, dow, hr,
-        |       CAST(SUM(hourly_total) AS DOUBLE) / COUNT(*) AS predicted_volume
-        |FROM daily GROUP BY 1, 2, 3 ORDER BY user_id, dow, hr""".stripMargin,
-    "mv_thresholds" -> // = a6_thresholds' batch semantics
-      """WITH hourly AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS h,
-        |         CAST(SUM(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS hourly_volume
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id,
-        |       round(quantile_cont(hourly_volume, 0.5), 6) AS p50,
-        |       round(quantile_cont(hourly_volume, 0.75), 6) AS p75,
-        |       round(quantile_cont(hourly_volume, 0.9), 6) AS p90,
-        |       max(hourly_volume) AS max_volume
-        |FROM hourly GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "mv_quantiles" -> // = prof_quantiles' histogram interpolation
-      """WITH h AS (SELECT CAST(round(value*100) AS BIGINT) unit,
-        |             COUNT(*) n
-        |           FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |c AS (SELECT unit, n,
-        |        SUM(n) OVER (ORDER BY unit
-        |          ROWS UNBOUNDED PRECEDING) hi_cum
-        |      FROM h),
-        |c2 AS (SELECT *, hi_cum - n AS lo_cum FROM c),
-        |t AS (SELECT COALESCE(SUM(n), 0) AS N FROM h),
-        |pr AS (SELECT unnest(CAST([0.5, 0.75, 0.9, 0.99]
-        |         AS DOUBLE[])) AS p),
-        |pp AS (SELECT p, (N-1)*p AS pos,
-        |         CAST(floor((N-1)*p) AS BIGINT) AS lo,
-        |         CAST(ceil((N-1)*p) AS BIGINT) AS hi, N
-        |       FROM pr, t),
-        |vlo AS (SELECT pp.p, c2.unit ulo FROM pp JOIN c2
-        |        ON pp.lo >= c2.lo_cum AND pp.lo < c2.hi_cum),
-        |vhi AS (SELECT pp.p, c2.unit uhi FROM pp JOIN c2
-        |        ON pp.hi >= c2.lo_cum AND pp.hi < c2.hi_cum)
-        |SELECT pp.p,
-        |       CASE WHEN pp.N = 0 THEN NULL
-        |            WHEN pp.hi = pp.lo THEN CAST(ulo AS DOUBLE)/100.0
-        |            ELSE (CAST(ulo AS DOUBLE)/100.0) * (pp.hi - pp.pos)
-        |               + (CAST(uhi AS DOUBLE)/100.0) * (pp.pos - pp.lo)
-        |       END AS q
-        |FROM pp LEFT JOIN vlo ON vlo.p = pp.p
-        |  LEFT JOIN vhi ON vhi.p = pp.p
-        |ORDER BY pp.p""".stripMargin,
+    "mv_pattern" -> predictPatternOracleSql, // = a4_predict_pattern's batch semantics
+    "mv_thresholds" -> thresholdsOracleSql, // = a6_thresholds' batch semantics
+    "mv_quantiles" -> quantilesOracleSql, // = prof_quantiles' histogram interpolation
     "mv_unigram" ->
       """WITH tok AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
         |            FROM documents)
@@ -6548,15 +6025,7 @@ object SparkEntry {
         |       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
         |         AS value
         |FROM events GROUP BY 1, 2 ORDER BY user_id, bucket_ts""".stripMargin,
-    "mv_retention" -> // = a_retention_cohorts' batch semantics
-      """WITH act AS (SELECT DISTINCT user_id,
-        |         CAST(floor(epoch(ts) / 604800) AS BIGINT) AS period
-        |       FROM events),
-        |co AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1)
-        |SELECT cohort, period - cohort AS "offset",
-        |       CAST(COUNT(*) AS BIGINT) AS n_users
-        |FROM act JOIN co USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort, "offset" """.stripMargin,
+    "mv_retention" -> retentionOracleSql, // = a_retention_cohorts' batch semantics
     "mv_shingle_freq" ->
       """WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') w FROM documents),
         |sh AS (SELECT DISTINCT doc_id,
@@ -6592,37 +6061,6 @@ object SparkEntry {
         |  SELECT 'accepted_values', 'event_type', CAST(n AS BIGINT),
         |         CAST(v2 AS BIGINT), v2 = 0 FROM s)
         |ORDER BY "check", target""".stripMargin,
-    "mv_cdc_snapshot" -> // = t_cdc_apply's batch semantics
-      """WITH log AS (
-        |  SELECT doc_id, 1 AS seq, 'upsert' AS op,
-        |         'rev1: ' || text AS text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 2, 'delete', NULL, NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 2, 'upsert', 'rev2: ' || text, lang, source,
-        |         n_chars
-        |  FROM documents WHERE doc_id % 10 = 5
-        |  UNION ALL
-        |  SELECT doc_id, 3, 'delete', NULL, NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 7 = 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000000, 1, 'upsert',
-        |         'cdc insert ' || CAST(doc_id AS VARCHAR), 'und', 'cdc',
-        |         CAST(length('cdc insert ' || CAST(doc_id AS VARCHAR))
-        |           AS BIGINT)
-        |  FROM documents WHERE doc_id % 11 = 0),
-        |latest AS (SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY seq DESC) AS rn FROM log) WHERE rn = 1)
-        |SELECT doc_id, md5(text) AS h, lang, source, n_chars
-        |FROM (
-        |  SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-        |  FROM documents d ANTI JOIN latest l ON d.doc_id = l.doc_id
-        |  UNION ALL
-        |  SELECT doc_id, text, lang, source, n_chars
-        |  FROM latest WHERE op = 'upsert')
-        |ORDER BY doc_id""".stripMargin,
+    "mv_cdc_snapshot" -> cdcApplyOracleSql, // = t_cdc_apply's batch semantics
   )
 }

@@ -6,6 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // Verify <sfDir> <outDir> [queryName...] — names filter the dump to a
     // subset for fast iteration; the driver passes none (all queries)
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [queryName...]")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     // fail fast on typos: a misspelled name would otherwise produce an

@@ -17,8 +17,7 @@ import org.apache.spark.util.sketch.BloomFilter
 object BloomState {
 
   private def versions(s: SparkSession, root: String): Seq[Long] =
-    Fs.listFileNames(s, root).filter(_.startsWith("v="))
-      .flatMap(_.drop(2).toLongOption)
+    VersionedState.versionsOf(Fs.listFileNames(s, root))
 
   /** Latest committed version strictly below `below` — the only read a
     * sink consuming its own state may use (a replay must not see its
@@ -37,7 +36,7 @@ object BloomState {
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
 
   def read(s: SparkSession, root: String, version: Long): BloomFilter =
-    fromBytes(Fs.readBytes(s, s"$root/v=$version"))
+    fromBytes(Fs.readBytes(s, VersionedState.versionPath(root, version)))
 
   /** Append one batch of admitted hashes (`colName`, LongType) into a
     * COPY of `prev` (or a fresh filter sized `expectedItems`/`fpp`) —
@@ -87,21 +86,14 @@ object BloomState {
     nb
   }
 
-  /** Commit `bf` as `v=<batchId>` (staged write + atomic rename; a
-    * replay leftover at the same version is replaced), then prune
-    * versions older than the base this commit merged from — the base
-    * itself survives until the NEXT commit, exactly the
-    * [[VersionedState]] retention rule. */
+  /** Commit `bf` as `v=<batchId>` through [[VersionedState]]'s
+    * staged write + atomic rename (a replay leftover at the same
+    * version is replaced), then prune versions older than the base this
+    * commit merged from — the base itself survives until the NEXT
+    * commit, exactly the [[VersionedState]] retention rule. */
   def commit(s: SparkSession, root: String, batchId: Long,
-             bf: BloomFilter): Unit = {
-    val staging = s"$root/_staging_$batchId"
-    Fs.delete(s, staging)
-    Fs.writeBytes(s, staging, toBytes(bf))
-    Fs.delete(s, s"$root/v=$batchId")
-    Fs.rename(s, staging, s"$root/v=$batchId")
-    versions(s, root).filter(_ < batchId).maxOption.foreach { base =>
-      versions(s, root).filter(_ < base)
-        .foreach(v => Fs.delete(s, s"$root/v=$v"))
-    }
-  }
+             bf: BloomFilter): Unit =
+    VersionedState.publish(s, root, batchId,
+      latestVersionBefore(s, root, batchId), versions(s, root))(
+      Fs.writeBytes(s, _, toBytes(bf)))
 }

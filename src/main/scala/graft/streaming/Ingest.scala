@@ -354,7 +354,7 @@ object Ingest {
           spark, stateRoot, batchId,
           graft.io.Snapshot.perCamera(batch),
           graft.io.Snapshot.mergePerCamera)
-        val state = spark.read.parquet(s"$stateRoot/v=$batchId")
+        val state = graft.io.VersionedState.read(spark, stateRoot, batchId)
         // 2. horizon-bounded recent store, idempotent on replay.
         // Partitioned by EPOCH day — floor(epoch/86400), the same
         // clock the retention cutoff below uses. A calendar key

@@ -80,6 +80,16 @@ class HazardsSpec extends SparkSpec {
     // every query is fully oracled since round 6 (e_lsh_topk/e_ivf_topk
     // were the last rows-only exceptions; both now have generated SQL)
     assert((qs -- os).isEmpty, s"unexpected rows-only: ${qs -- os}")
+    // the oracle SQL is composed from shared fragments: a fragment whose
+    // margin was never stripped, or a `||` line that a second
+    // stripMargin cut to one bar, leaves a line opening with a lone `|`;
+    // a literal `${` is a fragment that was never interpolated
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      val bare = sql.linesIterator.map(_.trim)
+        .filter(l => l.startsWith("|") && !l.startsWith("||")).toSeq
+      assert(bare.isEmpty, s"$name: unstripped margin line(s): $bare")
+      assert(!sql.contains("${"), s"$name: uninterpolated fragment")
+    }
   }
 
   test("session-TZ sweep: wall-clock outputs follow the session time zone, instant-derived outputs don't") {
