@@ -2199,8 +2199,6 @@ object SparkEntry {
     "ARTERIAL" -> Seq("scan", "filter"),
     "RESIDENTIAL" -> Seq("window", "batch"))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
   /** Brute-force cosine top-5 for the vec_id<10 probe set — the shared
     * oracle for e_ann_bruteforce and the exact-mode ANN variants. */
   private val annTop5Sql =
@@ -2271,14 +2269,6 @@ object SparkEntry {
        |FROM sizes s LEFT JOIN hits h USING (query_id)
        |ORDER BY s.query_id""".stripMargin
 
-  /** Generated oracle for the recall-bearing multi-probe LSH path
-    * (e_lsh_topk). The hyperplanes are md5-derived, data-independent
-    * constants (Embeddings.planeComponent), so their QUANTIZED
-    * components are baked in as BIGINT list literals; bucket assignment
-    * (sign of exact-integer plane dots), the Hamming<=h probe fan-out
-    * (XOR mask literals) and in-bucket cosine ranking are then exact
-    * arithmetic DuckDB reproduces bit-for-bit. */
-  /** The oracle-side twin of [[piiSeeded]] — byte-identical seeded text. */
   /** Shared oracle CTE chain replaying the near-dup clustering of
     * dd_clusters (minhash-LSH candidate pairs, exact Jaccard verify at
     * >= 0.8, exact recursive closure) — ends at `clu(doc_id,
@@ -2464,6 +2454,7 @@ object SparkEntry {
     ).as("text"))
   }
 
+  /** The oracle-side twin of [[piiSeeded]] — byte-identical seeded text. */
   private val piiSeededSql: String =
     """WITH seeded AS (
       |  SELECT doc_id, text ||
@@ -2475,6 +2466,13 @@ object SparkEntry {
       |  FROM documents)
       |""".stripMargin
 
+  /** Generated oracle for the recall-bearing multi-probe LSH path
+    * (e_lsh_topk). The hyperplanes are md5-derived, data-independent
+    * constants (Embeddings.planeComponent), so their QUANTIZED
+    * components are baked in as BIGINT list literals; bucket assignment
+    * (sign of exact-integer plane dots), the Hamming<=h probe fan-out
+    * (XOR mask literals) and in-bucket cosine ranking are then exact
+    * arithmetic DuckDB reproduces bit-for-bit. */
   private def lshTopKOracleSql(nPlanes: Int, dim: Int, k: Int,
                                probeHamming: Int): String = {
     val planeRows = (0 until nPlanes).map { j =>
@@ -2500,16 +2498,6 @@ object SparkEntry {
          |""".stripMargin + probedTopKSql("bucket", k)
   }
 
-  /** Generated oracle for the recall-bearing IVF path (e_ivf_topk).
-    * Replays Embeddings.ivfFit's integer-exact Lloyd's loop as `iters`
-    * unrolled CTE pairs (assign = argmin of -2*dot+|c|^2 with
-    * lowest-cell tie-break; update = truncating integer division, DuckDB
-    * `//` == Java long division), then the nProbe cell fan-out and
-    * in-cell cosine ranking. Every step is exact integer arithmetic on
-    * quantized vectors (products < 2^53, so DOUBLE-carried dots are
-    * still exact), so the oracle matches the Spark result bit-for-bit
-    * WITHOUT the centroids being passed out-of-band — the fit itself is
-    * re-derived from the parquet input by the SQL. */
   /** Lexicographic centroid-distance ordering key shared by every CTE
     * that replays an ivf assignment: squared L2 minus the per-row
     * constant ‖q‖² (same argmin), ties to the lowest cell. */
@@ -2674,19 +2662,28 @@ object SparkEntry {
       |         AS share_bp
       |FROM nn, tr, vv, ray""".stripMargin
 
+  /** Generated oracle for the recall-bearing IVF path (e_ivf_topk).
+    * Replays Embeddings.ivfFit's integer-exact Lloyd's loop as `iters`
+    * unrolled CTE pairs (assign = argmin of -2*dot+|c|^2 with
+    * lowest-cell tie-break; update = truncating integer division, DuckDB
+    * `//` == Java long division), then the nProbe cell fan-out and
+    * in-cell cosine ranking. Every step is exact integer arithmetic on
+    * quantized vectors (products < 2^53, so DOUBLE-carried dots are
+    * still exact), so the oracle matches the Spark result bit-for-bit
+    * WITHOUT the centroids being passed out-of-band — the fit itself is
+    * re-derived from the parquet input by the SQL. */
   private def ivfTopKOracleSql(nLists: Int, iters: Int, nProbe: Int, k: Int,
                                dim: Int, sampleCap: Int): String = {
-    val distOrder = (q: String, c: String) => ivfDistOrder(q, c)
     val sb = new StringBuilder
     sb ++= ivfFitCtesSql(nLists, iters, dim, sampleCap)
     sb ++= s"""asg AS (SELECT v.vec_id AS corpus_id, v.qv AS cv, c.cell,
               |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-              |           ${distOrder("v.qv", "c")}) AS rn
+              |           ${ivfDistOrder("v.qv", "c")}) AS rn
               |       FROM v, c$iters c),
               |cb AS (SELECT corpus_id, cv, cell FROM asg WHERE rn = 1),
               |qasg AS (SELECT v.vec_id AS query_id, v.qv AS qv2, c.cell,
               |         ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-              |           ${distOrder("v.qv", "c")}) AS rn
+              |           ${ivfDistOrder("v.qv", "c")}) AS rn
               |       FROM v, c$iters c WHERE v.vec_id < 10),
               |qb AS (SELECT query_id, qv2, cell FROM qasg WHERE rn <= $nProbe),
               |""".stripMargin
@@ -2831,16 +2828,6 @@ object SparkEntry {
     sb.toString
   }
 
-  /** Generated oracle for the iterative BPE trainer (t_bpe_merges):
-    * each round is the already-oracled pair count (t_bpe_top_pairs'
-    * CTE) plus a POSITIONAL replay of the left-to-right non-overlapping
-    * merge. Greedy non-overlap is a sequential fold in Spark
-    * ([[graft.ops.TextStats]].mergeAdjacent), but over positions it is
-    * run-alternation: merge position i iff (syms[i], syms[i+1]) is the
-    * best pair AND i sits at an ODD offset inside its maximal run of
-    * consecutive matches (two adjacent matches force l = r, and the
-    * greedy pass takes every other one) — a gaps-and-islands window,
-    * exact in any engine. */
   /** The shared CTE chain: wf1 (char symbols) then, per round r,
     * pair counts → argmax → positional greedy-merge application into
     * wf{r+1} (so wf{nMerges+1} is the fully-encoded vocabulary).
@@ -2886,6 +2873,16 @@ object SparkEntry {
     sb.toString
   }
 
+  /** Generated oracle for the iterative BPE trainer (t_bpe_merges):
+    * each round is the already-oracled pair count (t_bpe_top_pairs'
+    * CTE) plus a POSITIONAL replay of the left-to-right non-overlapping
+    * merge. Greedy non-overlap is a sequential fold in Spark
+    * ([[graft.ops.TextStats]].mergeAdjacent), but over positions it is
+    * run-alternation: merge position i iff (syms[i], syms[i+1]) is the
+    * best pair AND i sits at an ODD offset inside its maximal run of
+    * consecutive matches (two adjacent matches force l = r, and the
+    * greedy pass takes every other one) — a gaps-and-islands window,
+    * exact in any engine. */
   private def bpeMergesOracleSql(nMerges: Int): String =
     bpeChainSql(nMerges) + (1 to nMerges).map(r =>
         s"""SELECT CAST($r AS INTEGER) rnk, l AS "left", r AS "right", n FROM best$r""")
@@ -3522,6 +3519,8 @@ object SparkEntry {
       |         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       |           ORDER BY mmr_u DESC, doc_id) rn FROM m3) WHERE rn = 1)""".stripMargin
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Map(
     "ts_seasonal_decomp" ->
       (decompCtes("event_type") +
